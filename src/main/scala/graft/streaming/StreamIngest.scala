@@ -4,8 +4,7 @@ import graft.pipeline.{Route, TfPipeline}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 /** Streaming ingestion into the committed route store: the north rule's
   * "checkpoints per snapshot, resumes from the last committed partition"
@@ -15,71 +14,29 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    (window-based recovery logic is legal inside foreachBatch; the
   *    file-per-document source delivers whole documents per batch, which the
   *    per-doc recovery lookahead requires -- documented assumption);
-  *  - batch output lands under `batches/batch=<id>/route=<type>/` (overwrite
-  *    per batch => a retried/replayed batch id is idempotent);
-  *  - the store manifest lists COMMITTED batch ids + per-route counts and is
-  *    replaced atomically AFTER the data write: exactly-once commit points.
-  *    Readers use [[readCommitted]], which only lists committed batch dirs,
-  *    so a crash between data write and manifest leaves no visible rows;
-  *  - per-batch per-route lineage rows append to `audit/`.
+  *  - a batch commits through [[Route]]'s protocol: its rows land under
+  *    `batches/batch=<id>/route=<type>/`, its lineage under
+  *    `audit/batch=<id>/` (`batch` comes back as a partition column on read),
+  *    then snapshot `<id>` (per-route counts, no fingerprint) is appended to
+  *    `_STREAM_MANIFEST.json`. Both writes overwrite, so a batch replayed
+  *    after a crash before its log entry re-writes rather than duplicates;
+  *  - a batch id already in the log is a no-op, and [[readCommitted]] reads
+  *    only logged batches: exactly-once into the store. The log holds one
+  *    entry per committed batch and is rewritten whole on each commit.
   */
 object StreamIngest {
 
   private def manifest(dir: String) = Paths.get(dir, "_STREAM_MANIFEST.json")
 
-  def committedBatches(dir: String): Set[Long] = {
-    val mp = manifest(dir)
-    if (!Files.exists(mp)) Set.empty
-    else {
-      val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-      """"batch":(\d+)""".r.findAllMatchIn(text).map(_.group(1).toLong).toSet
-    }
-  }
+  def committedBatches(dir: String): Set[Long] = Route.snapshots(manifest(dir)).map(_.batch).toSet
 
   /** Idempotently commit one micro-batch of raw tokenized rows. */
-  def commitBatch(spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit = {
-    if (committedBatches(dir).contains(batchId)) return // replayed batch: no-op
-    val routable = TfPipeline.routable(TfPipeline.envelope(batch))
-    val batchDir = s"$dir/batches/batch=$batchId"
-    routable.write.mode("overwrite").partitionBy("route").parquet(batchDir)
-
-    import org.apache.spark.sql.functions._
-    val written = spark.read.parquet(batchDir)
-    val audit = written
-      .groupBy(col("route"))
-      .agg(
-        count(lit(1)).as("rows"),
-        countDistinct(col("doc_id")).as("docs"),
-        min(col("line_no")).as("min_line"),
-        max(col("line_no")).as("max_line")
-      )
-    // audit rows land in a PER-BATCH partition dir with overwrite, so a
-    // batch replayed after a crash-before-manifest re-writes (not
-    // duplicates) its lineage -- the audit table is exactly-once like the
-    // data ('batch' comes back as the partition column on read)
-    audit.write.mode("overwrite").parquet(s"$dir/audit/batch=$batchId")
-
-    // one aggregation: derive the manifest counts from the rows just written
-    val counts = spark.read.parquet(s"$dir/audit/batch=$batchId")
-      .select(col("route"), col("rows"))
-      .collect()
-      .map(r => s""""${r.getString(0)}":${r.getLong(1)}""")
-      .mkString("{", ",", "}")
-    val prev = {
-      val mp = manifest(dir)
-      if (Files.exists(mp)) {
-        val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-        val inner = text.trim.stripPrefix("[").stripSuffix("]").trim
-        if (inner.isEmpty) Seq.empty else Seq(inner)
-      } else Seq.empty
+  def commitBatch(spark: SparkSession, batch: DataFrame, dir: String, batchId: Long): Unit =
+    if (!committedBatches(dir).contains(batchId)) { // a replayed batch is a no-op
+      val routable = TfPipeline.routable(TfPipeline.envelope(batch))
+      val counts = Route.writeData(spark, routable, s"$dir/batches/batch=$batchId", s"$dir/audit/batch=$batchId")
+      Route.commit(manifest(dir), Route.Snapshot(batchId, None, counts))
     }
-    val entry = s"""{"batch":$batchId,"counts":$counts,"committed_at_ms":${System.currentTimeMillis()}}"""
-    val json = (prev :+ entry).mkString("[", ",", "]")
-    val tmp = Paths.get(dir, "_STREAM_MANIFEST.tmp")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifest(dir), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Start the ingest stream: tokenized parquet dir -> committed route store.
     * `checkpointDir` carries Spark's own offset log, so a restarted query
@@ -104,14 +61,12 @@ object StreamIngest {
       }
       .start()
 
-  /** Read back ONLY committed batches, pruned to the requested routes
-    * (`route` partition dirs inside each committed `batch=` dir). */
-  def readCommitted(spark: SparkSession, dir: String, routes: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
+  /** Read back ONLY committed batches (`batch` and `route` come back as
+    * partition columns). */
+  def readCommitted(spark: SparkSession, dir: String): DataFrame = {
     val batches = committedBatches(dir).toSeq.sorted
     require(batches.nonEmpty, s"no committed batches under $dir")
     val paths = batches.map(b => s"$dir/batches/batch=$b")
-    val df = spark.read.option("basePath", s"$dir/batches").parquet(paths: _*)
-    if (routes.isEmpty) df else df.filter(col("route").isInCollection(routes))
+    spark.read.option("basePath", s"$dir/batches").parquet(paths: _*)
   }
 }

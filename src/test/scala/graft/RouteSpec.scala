@@ -53,7 +53,7 @@ class RouteSpec extends AnyFunSuite {
     assert(!r3.resumed && r3.counts == expected)
 
     // partition pruning readback
-    val healed = Route.readRoute(spark, dir, Seq("healed"))
+    val healed = spark.read.parquet(s"$dir/data").filter(col("route") === "healed")
     assert(healed.count() == expected("healed"))
 
     // dead-letter partitions exist for skip/unknown

@@ -64,9 +64,7 @@ class StreamIngestSpec extends AnyFunSuite {
 
     // aggregate parity: per-player output from the streamed store equals the
     // direct batch pipeline
-    val routedStore = TfPipeline.routedFromStore(
-      StreamIngest.readCommitted(spark, storeDir, TfPipeline.HandledTypes)
-    )
+    val routedStore = TfPipeline.routedFromStore(StreamIngest.readCommitted(spark, storeDir))
     val routedDirect = TfPipeline.routed(TfPipeline.envelope(full))
     def pp(r: org.apache.spark.sql.DataFrame): Seq[String] = {
       val dim = TfPipeline.subjectDim(r)
