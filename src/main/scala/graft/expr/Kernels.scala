@@ -535,8 +535,9 @@ object Kernels {
     * kernel hashes each shingle once per base hash natively and folds all k
     * mins in the same pass. Null shingles are skipped (array_min null-skip
     * over the null-propagated affine); an empty/all-null array returns null
-    * (every sig_i null via element_at). Exact-arithmetic bound k <= 1024 as
-    * in minhashSignature (i*(2^53) + 2^60 < 2^63). */
+    * (every sig_i null via element_at). Exact-arithmetic bound k <= 896 as
+    * in minhashSignature: h1 + i*h2 < 2^60 + 896 * 2^53 = 2^63 for i < 896;
+    * beyond it the Long sum wraps negative. */
   def minhashMd5Multi(shingles: ArrayData, k: Int): ArrayData = {
     val n = shingles.numElements()
     val mins = new Array[Long](k)

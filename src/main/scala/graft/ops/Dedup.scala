@@ -150,8 +150,8 @@ object Dedup {
   /** Per-shingle (h1, h2) base-hash pairs for double-hashing MinHash
     * (Kirsch-Mitzenmacher): the k signature functions derive affinely from
     * two md5-based hashes, `g_i = (h1 + i * (h2 mod 2^53)) mod 2^60` --
-    * exact 64-bit integer arithmetic on any engine (no overflow:
-    * i*(2^53) + 2^60 < 2^61), so the DuckDB oracle reproduces it. Project
+    * exact 64-bit integer arithmetic on any engine while i < 896 (see
+    * [[minhashSignature]]), so the DuckDB oracle reproduces it. Project
     * THIS column first, then take [[minhashSignature]] columns off the
     * projected frame: CollapseProject keeps the expensive hash pass
     * single-copy (it never duplicates non-cheap multi-referenced producer
@@ -171,12 +171,12 @@ object Dedup {
   /** sig_0..sig_{k-1} from a projected [[minhashHashPairs]] column. Empty
     * shingle arrays yield NULL (list_min([]) semantics).
     *
-    * k <= 1024 is the exact-arithmetic bound of the affine combination:
-    * h1 + i*(h2 mod 2^53) stays below 2^63 only while i < ~1024; beyond it
-    * the sum wraps negative and pmod no longer matches the oracle's
-    * non-negative arithmetic. */
+    * k <= 896 is the exact-arithmetic bound of the affine combination:
+    * h1 < 2^60 and h2 < 2^53, so h1 + i*h2 < 2^60 + 896 * 2^53 = 2^63 for
+    * every i < 896. From i = 896 on the sum can pass 2^63: under ANSI the
+    * chain throws, and a wrapping kernel returns negative values. */
   def minhashSignature(hashPairs: Column, k: Int): Seq[Column] = {
-    require(k >= 1 && k <= 1024, s"minhashSignature: k=$k outside the exact-arithmetic bound [1, 1024]")
+    require(k >= 1 && k <= 896, s"minhashSignature: k=$k outside the exact-arithmetic bound [1, 896]")
     (0 until k).map { i =>
       array_min(
         transform(
@@ -205,9 +205,9 @@ object Dedup {
     * natively once per base hash and all k mins fold in the same pass,
     * instead of two md5 expression calls per shingle (hex-string alloc +
     * substring + conv parse each) plus k interpreted transform/array_min
-    * passes. Same k <= 1024 exact-arithmetic bound. */
+    * passes. Same k <= 896 exact-arithmetic bound. */
   def minhashMd5Fast(shingleCol: Column, k: Int): Column = {
-    require(k >= 1 && k <= 1024, s"minhashMd5Fast: k=$k outside the exact-arithmetic bound [1, 1024]")
+    require(k >= 1 && k <= 896, s"minhashMd5Fast: k=$k outside the exact-arithmetic bound [1, 896]")
     graft.expr.GraftExpressions.minhash_md5_multi(shingleCol, k)
   }
 
@@ -452,9 +452,10 @@ object Dedup {
       // so that probe -- over the LARGEST edge set of the whole loop -- can
       // only ever say "not yet"; an already-converged input just pays one
       // no-op round over its final (smallest) edge set before detection.
+      // With maxRounds = 1 there is no later round, so the probe runs.
       val loType = next.schema("lo").dataType
       val bad =
-        if (round == 0) 1L
+        if (round == 0 && maxRounds > 1) 1L
         else next
           .select(col("hi").as("n"), col("lo"))
           .union(next.select(col("lo").as("n"), lit(null).cast(loType).as("lo")))

@@ -98,7 +98,7 @@ object Similarity {
     * the interleaved [[graft.expr.Kernels.cosineX10000]] accumulation);
     * `bad` marks centroids whose score is NULL for every row (null / null
     * element / length-mismatched cvec -- mixed-dim corpora do not occur: the
-    * quantizer is corpus rows or k-means means). */
+    * quantizer is a set of corpus-shaped vectors). */
   private[graft] case class Quantizer(
       cids: Array[Long],
       cents: Array[Float],
@@ -159,29 +159,24 @@ object Similarity {
     *
     *  - centroids = corpus vectors with `id % centroidEvery == 0` -- a
     *    deterministic sample any engine reproduces (no k-means float
-    *    iteration, so the DuckDB twin is exact); production tuning replaces
-    *    the sample with trained centroids without changing the plan shape.
+    *    iteration, so the DuckDB twin is exact); another quantizer plugs
+    *    in through [[ivfTopKWithCentroids]] without changing the plan shape.
     *  - assignment/probing use the integer-stable fused cosine
     *    ([[cosineX10000]]) with (score desc, cid asc) tie-breaks.
-    *  - SCALE SHAPE: the centroid table broadcasts (its size is corpus/
-    *    centroidEvery rows -- keep it thousands, not millions); assignment
-    *    is a map-side broadcast join (the IVF build cost, one pass); cell
-    *    membership is capped per cell via ONE bounded_collect
-    *    hash-aggregate ([[graft.ops.Dedup.cappedBuckets]]) so a hot cell
-    *    (near-constant embedding region) cannot straggle the probe join --
-    *    over-cap cells are dropped whole (recall knob, same contract as
-    *    [[lshTopK]]'s maxBucket); candidates come from exploding the capped
-    *    arrays, an equi-join on the cell id.
+    *  - SCALE SHAPE: the centroid table is collected once into a driver-side
+    *    quantizer (its size is corpus/centroidEvery rows -- keep it
+    *    thousands, not millions); assignment and probe selection are
+    *    map-side kernel passes ([[probeCells]]), so no exchange exists
+    *    before cell assignment; cell membership is capped per cell via ONE
+    *    bounded_collect hash-aggregate ([[graft.ops.Dedup.cappedBuckets]])
+    *    so a hot cell (near-constant embedding region) cannot straggle the
+    *    probe join -- over-cap cells are dropped whole (recall knob, same
+    *    contract as [[lshTopK]]'s maxBucket); the capped cell table
+    *    broadcasts into the candidate join, and candidates come from
+    *    exploding its arrays. PlanShapeSpec pins this shape.
     *
     * Same output shape as [[bruteForceTopK]]/[[lshTopK]]. Each candidate
-    * appears exactly once (assignment is unique), so no distinct is needed.
-    *
-    * The centroid-scoring subtree feeds two consumers (assignment + probe
-    * lists) under one id-keyed Exchange, which exchange reuse dedups at
-    * runtime; in a real deployment the assignment IS the IVF index -- build
-    * it once, persist (or write) it, and run probe batches against the
-    * stored table, exactly like the committed route store does for the
-    * parse leg. */
+    * appears exactly once (assignment is unique), so no distinct is needed. */
   def ivfTopK(
       df: DataFrame, // (id, vec)
       k: Int,
@@ -195,9 +190,9 @@ object Similarity {
         .select(col("id").as("cid"), col("vec").as("cvec")),
       k, nProbe, maxCell)
 
-  /** [[ivfTopK]] with an arbitrary coarse quantizer `cents` (cid, cvec) --
-    * the deterministic sample (oracle twin) and the k-means-trained variant
-    * ([[trainCentroids]]) share this one probe pipeline. */
+  /** [[ivfTopK]] with an arbitrary coarse quantizer `cents0` (cid, cvec),
+    * e.g. centroids trained elsewhere; the deterministic sample of
+    * [[ivfTopK]] (the oracle twin) is one such quantizer. */
   def ivfTopKWithCentroids(
       df: DataFrame, // (id, vec)
       cents0: DataFrame, // (cid, cvec)
@@ -243,30 +238,6 @@ object Similarity {
       .select(col("qid"), col("cid"), cosineX10000(col("qv"), col("cv")).as("sim_x10000"))
     val w = Window.partitionBy("qid").orderBy(col("sim_x10000").desc, col("cid").asc)
     scoredPairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** K-means-trained coarse quantizer for IVF: returns (cid, cvec), cid in
-    * 0..k-1, cvec float like the corpus vectors. Unlike the deterministic
-    * modulo sample (exactly reproducible in any engine, hence the DuckDB
-    * oracle twin), training iterates in floats -- this is the QUALITY
-    * variant, not an oracle one: centroids sit in the data's density modes,
-    * cells balance better, and recall at equal nProbe improves (OpsSpec pins
-    * the comparison). 100 TB shape: fit on a SAMPLE (cost O(n*k*iters) --
-    * pass df.sample(...)), then assign the full corpus through the same
-    * broadcast join as the sampled quantizer; k centroids stay driver-sized
-    * (thousands), exactly like the sampled list. */
-  def trainCentroids(df: DataFrame, k: Int, maxIter: Int = 10, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feat = df.select(array_to_vector(col("vec").cast("array<double>")).as("features"))
-    val model = new KMeans()
-      .setK(k).setMaxIter(maxIter).setSeed(seed).setFeaturesCol("features")
-      .fit(feat)
-    val spark = df.sparkSession
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat)) }
-      .toDF("cid", "cvec")
   }
 
   /** Embedding near-duplicate pairs through IVF candidates -- the 100 TB
@@ -318,66 +289,6 @@ object Similarity {
       .join(df.select(col("id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), cosineX10000(col("va"), col("vb")).as("sim_x10000"))
       .filter(col("sim_x10000") >= thrX10000)
-  }
-
-  /** Build-once IVF index on disk: `dir/centroids` (the coarse quantizer)
-    * and `dir/cells` -- member vectors written PARTITIONED BY cell, with the
-    * cell cap enforced at build time (an index property, like [[ivfTopK]]'s
-    * maxCell: over-cap cells are dropped whole). This is the 100 TB shape:
-    * the assignment job runs once, and every probe batch reads only its
-    * probed cells' partitions ([[ivfTopKFromStore]]) -- the exact analogue
-    * of the committed route store for the parse leg. The repartition before
-    * `partitionBy` keeps each cell in few files (no tasks x cells tiny-file
-    * explosion). */
-  def writeIvfIndex(df: DataFrame, dir: String, centroidEvery: Int, maxCell: Int = 1000): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = df
-      .filter(pmod(col("id"), lit(centroidEvery)) === 0)
-      .select(col("id").as("cid"), col("vec").as("cvec"))
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    // map-side assignment (kernel over the flattened quantizer): the build
-    // job's only exchanges are the cell-cap window + the layout repartition
-    val q = collectQuantizer(cents)
-    val assign = df
-      .select(get(probeCells(col("vec"), q, 1), lit(0)).as("cell"), col("id"), col("vec"))
-      .filter(col("cell").isNotNull)
-    val kept = assign
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("cell")))
-      .filter(col("__n") <= maxCell)
-      .drop("__n")
-    kept.repartition(col("cell")).write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-  }
-
-  /** Probe a [[writeIvfIndex]] index: queries score the (broadcast)
-    * centroids, probe their nProbe nearest cells, and the member scan joins
-    * on the PARTITION column `cell` -- dynamic partition pruning reads only
-    * the probed cells at scale. Value-identical to [[ivfTopK]] with the same
-    * parameters (differential-tested). */
-  def ivfTopKFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      queries: DataFrame, // (id, vec)
-      k: Int,
-      nProbe: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // map-side probe selection over the stored quantizer (driver-sized by
-    // the index contract); the cells scan below joins on the PARTITION
-    // column, so dynamic partition pruning still reads only probed cells
-    val q = collectQuantizer(spark.read.parquet(s"$dir/centroids"))
-    val probes = queries
-      .select(
-        col("id").as("qid"),
-        col("vec").as("qv"),
-        explode(probeCells(col("vec"), q, nProbe)).as("cell"))
-    val members = spark.read.parquet(s"$dir/cells")
-    val w = Window.partitionBy("qid").orderBy(col("sim_x10000").desc, col("cid").asc)
-    probes
-      .join(members, Seq("cell"))
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("cid"), cosineX10000(col("qv"), col("vec")).as("sim_x10000"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 
   /** Multi-table LSH ANN (L independent hash tables OR-amplified): candidates

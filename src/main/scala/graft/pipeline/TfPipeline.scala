@@ -699,12 +699,13 @@ object TfPipeline {
     // fans out into ~6 root stages that all scan the cached frames, and
     // cold-cache population of the expensive parse + dim lineages under that
     // concurrency (per-block locking, stage-scheduling interleave) measured
-    // ~1.4x the serial-materialize-then-run sequence at 4M rows (Profile
-    // "e2e phases" sum ~10.5 s vs lazy pipelineOnce 15.1 s; both-eager
-    // 11.2 s; routed-only 14.4 s). Keyed on ROUTED being cached because the
-    // parquet-store path (routed unpersisted, dim persisted) measured the
-    // OPPOSITE: a serial dim pass there is a full extra store scan the lazy
-    // plan overlapped with the fan-out's own scans (+1.5 s at sf0.1). A
+    // ~1.4x the serial-materialize-then-run sequence at 4M rows (BASELINE.md,
+    // "Round-6 assembly materialization order": serial phases sum ~10.5 s
+    // vs lazy pipelineOnce 15.1 s; both-eager 11.2 s; routed-only 14.4 s).
+    // Keyed on ROUTED being cached because the parquet-store path (routed
+    // unpersisted, dim persisted) measured the OPPOSITE: a serial dim pass
+    // there is a full extra store scan the lazy plan overlapped with the
+    // fan-out's own scans (+1.5 s at sf0.1). A
     // no-op for fully-unpersisted inputs (Verify keeps its one-pass shape).
     if (routedDf.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
       routedDf.count()
