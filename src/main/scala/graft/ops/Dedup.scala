@@ -390,14 +390,42 @@ object Dedup {
     * Components in MapReduce and Beyond", SoCC'14): converges in O(log^2 n)
     * rounds on any graph -- unlike plain min-label propagation, whose round
     * count is the graph DIAMETER (a 100 TB near-dup chain of boilerplate
-    * variants can be thousands of hops deep). Each round is two window
-    * aggregates plus two edge-dedups over the edge list (four equi-key
-    * exchanges, no joins on the spine); every intermediate edge set is at
-    * most the input size plus one edge per node, so memory stays linear
-    * and there is no all-pairs blowup. Rounds localCheckpoint
-    * (lineage truncation -- the driver loop would otherwise stack analysis
-    * cost per round; on a real cluster prefer `checkpoint` with a reliable
-    * dir so executor loss stays recoverable).
+    * variants can be thousands of hops deep).
+    *
+    * ROUND SHAPE. The loop state is the NODE AGGREGATE of the current edge
+    * set: one row per node u with its neighbour set `nbrs` and m = min(u,
+    * nbrs), built by exploding every edge into both orientations and
+    * grouping by node (one hash exchange). Each node aggregate is eagerly
+    * `localCheckpoint`ed, so that checkpoint holds exactly (u, nbrs, m) for
+    * every node of the round's edge set; the probe, the next round and the
+    * labels read it instead of recomputing the lineage (on a real cluster
+    * prefer `checkpoint` with a reliable dir so executor loss stays
+    * recoverable). A round then reads the checkpoint once:
+    *  - large-star: every LARGER neighbour v of u re-attaches to m;
+    *  - small-star: group those edges by `hi` (the second hash exchange),
+    *    collect the `lo` side as a set (which is the edge dedup), and
+    *    re-attach hi and every smaller neighbour to the set's minimum;
+    *  - the node aggregate of the small-star edges is the next checkpoint.
+    * So a round's materializing query plans TWO hash exchanges; the input
+    * pairs are referenced once, by the first node aggregate, and no
+    * `distinct` or join runs anywhere. Edge rows never grow: the large-star
+    * emits one row per distinct edge, the small-star one per distinct
+    * large-star edge.
+    *
+    * CONVERGENCE. The edge set is a star forest -- the fixpoint -- when
+    * every node is settled: a root (no smaller neighbour) or a leaf (one
+    * neighbour, which is smaller). The probe scans the checkpointed node
+    * aggregate for an unsettled node (`isEmpty`, no exchange), before the
+    * first round too, so a graph that already is a star forest runs no
+    * round and a graph one round settles runs one. A star forest's labels
+    * are m read straight off the node aggregate (a root is its own minimum,
+    * a leaf's only neighbour is its root): no final `distinct`.
+    *
+    * BOUNDS. `maxRounds` caps the star rounds; 0 means the input must
+    * already be a star forest. Past the cap the call throws. A node's
+    * neighbour set holds its degree in the round's edge set, and after
+    * convergence a root's set holds its whole component, so the largest
+    * component's size bounds the widest row (and one task's memory).
     *
     * Input pairs may contain duplicates / self-pairs / either orientation.
     * Returns (id, component) for every id appearing in a NON-SELF pair
@@ -407,74 +435,41 @@ object Dedup {
     * component is the smallest id in its component. Ids must be
     * integral-typed. */
   def connectedComponents(pairs: DataFrame, idA: Column, idB: Column, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    var edges = pairs
-      .select(greatest(idA, idB).as("hi"), least(idA, idB).as("lo"))
-      .filter(col("hi") =!= col("lo"))
-      .distinct()
-      .localCheckpoint()
+    require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
+    var nodes = nodeAggregate(
+      pairs
+        .select(greatest(idA, idB).as("hi"), least(idA, idB).as("lo"))
+        .filter(col("hi") =!= col("lo")))
     var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      // large-star: key each node u by its full neighborhood, m = min of
-      // the neighborhood incl. u; every LARGER neighbor re-attaches to m
-      val sym = edges
-        .select(col("hi").as("u"), col("lo").as("v"))
-        .union(edges.select(col("lo").as("u"), col("hi").as("v")))
-      val lm = least(col("u"), min(col("v")).over(Window.partitionBy("u")))
-      val large = sym
-        .select(col("u"), col("v"), lm.as("m"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .distinct()
-      // small-star on the (hi > lo)-oriented result: every node's SMALLER
-      // neighbors (and the node itself) re-attach to the neighborhood min
-      val sm = min(col("lo")).over(Window.partitionBy("hi"))
-      val withM = large.select(col("hi"), col("lo"), sm.as("m"))
-      val nextPlan = withM
-        .select(col("hi"), col("m").as("lo"))
-        .union(withM.filter(col("lo") =!= col("m")).select(col("lo").as("hi"), col("m").as("lo")))
-        .distinct()
-      // eager localCheckpoint each round: ONE compute pass, then the
-      // convergence probe and the next round's two union branches read the
-      // materialized partitions. (A persist-marked plan is worse here: the
-      // probe references `next` twice and an uncached first action executes
-      // the whole round subtree once per branch -- no cross-branch CSE.)
-      val next = nextPlan.localCheckpoint()
-      // converged when the edge set is a star forest: every node points at
-      // exactly one (root) node, and no root is itself re-attached. ONE
-      // probe job: per node, whether its parents disagree (min != max over
-      // non-null lo -- same predicate as distinct-count > 1, but a plain
-      // partial-aggregable min/max instead of a two-phase Expand
-      // distinct-aggregate) and whether it occurs on both sides of an edge.
-      // The round-1 probe is SKIPPED: no real candidate graph is a star
-      // forest on arrival (one round of star alternation is never enough),
-      // so that probe -- over the LARGEST edge set of the whole loop -- can
-      // only ever say "not yet"; an already-converged input just pays one
-      // no-op round over its final (smallest) edge set before detection.
-      // With maxRounds = 1 there is no later round, so the probe runs.
-      val loType = next.schema("lo").dataType
-      val bad =
-        if (round == 0 && maxRounds > 1) 1L
-        else next
-          .select(col("hi").as("n"), col("lo"))
-          .union(next.select(col("lo").as("n"), lit(null).cast(loType).as("lo")))
-          .groupBy("n")
-          .agg(min(col("lo")).as("lo_min"), max(col("lo")).as("lo_max"),
-            count(col("lo")).as("asChild"), count(lit(1)).as("tot"))
-          .filter(col("lo_min") =!= col("lo_max") || (col("asChild") > 0 && col("tot") > col("asChild")))
-          .limit(1)
-          .count()
-      edges.unpersist(blocking = false)
-      edges = next
-      converged = bad == 0L
+    // unsettled: a smaller neighbour and any second neighbour
+    while (!nodes.filter(size(col("nbrs")) > 1 && array_min(col("nbrs")) < col("u")).isEmpty) {
+      require(round < maxRounds, s"connectedComponents did not converge in $maxRounds rounds")
+      // large-star: each larger neighbour of u re-attaches to m
+      val large = nodes.select(explode(filter(col("nbrs"), _ > col("u"))).as("hi"), col("m").as("lo"))
+      // small-star: the set's minimum stands in for hi's own edge (hi, m);
+      // every other member l becomes (l, m)
+      val small = large
+        .groupBy("hi")
+        .agg(collect_set(col("lo")).as("los"))
+        .select(col("hi"), col("los"), array_min(col("los")).as("m"))
+        .select(explode(transform(col("los"), l =>
+          struct(when(l === col("m"), col("hi")).otherwise(l).as("hi"), col("m").as("lo")))).as("e"))
+        .select("e.*")
+      nodes = nodeAggregate(small)
       round += 1
     }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-    // star forest -> labels: children point at the root, roots label themselves
-    edges
-      .select(col("hi").as("id"), col("lo").as("component"))
-      .union(edges.select(col("lo").as("id"), col("lo").as("component")))
-      .distinct()
+    nodes.select(col("u").as("id"), col("m").as("component"))
   }
+
+  /** (hi, lo) edges, duplicates allowed -> checkpointed (u, nbrs, m): each
+    * node's neighbour set and the minimum of it and the node. */
+  private def nodeAggregate(edges: DataFrame): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col("hi").as("u"), col("lo").as("v")),
+        struct(col("lo").as("u"), col("hi").as("v")))).as("e"))
+      .groupBy(col("e.u").as("u"))
+      .agg(collect_set(col("e.v")).as("nbrs"))
+      .select(col("u"), col("nbrs"), least(col("u"), array_min(col("nbrs"))).as("m"))
+      .localCheckpoint()
 }

@@ -146,6 +146,13 @@ object Similarity {
     Quantizer(cids, cents, cn2, bad, dim)
   }
 
+  /** The deterministic coarse quantizer: corpus vectors whose
+    * `id % centroidEvery == 0`. */
+  private def sampledQuantizer(df: DataFrame, centroidEvery: Int): Quantizer =
+    collectQuantizer(
+      df.filter(pmod(col("id"), lit(centroidEvery)) === 0)
+        .select(col("id").as("cid"), col("vec").as("cvec")))
+
   /** Top-nProbe probed cell ids for a vector column, map-side (see
     * [[graft.expr.Kernels.ivfProbeCells]]): best-first, so element 1 is the
     * assignment cell and posexplode's pos is crank-1. */
@@ -159,8 +166,7 @@ object Similarity {
     *
     *  - centroids = corpus vectors with `id % centroidEvery == 0` -- a
     *    deterministic sample any engine reproduces (no k-means float
-    *    iteration, so the DuckDB twin is exact); another quantizer plugs
-    *    in through [[ivfTopKWithCentroids]] without changing the plan shape.
+    *    iteration, so the DuckDB twin is exact).
     *  - assignment/probing use the integer-stable fused cosine
     *    ([[cosineX10000]]) with (score desc, cid asc) tie-breaks.
     *  - SCALE SHAPE: the centroid table is collected once into a driver-side
@@ -183,22 +189,6 @@ object Similarity {
       centroidEvery: Int,
       nProbe: Int,
       maxCell: Int = 1000
-  ): DataFrame =
-    ivfTopKWithCentroids(
-      df,
-      df.filter(pmod(col("id"), lit(centroidEvery)) === 0)
-        .select(col("id").as("cid"), col("vec").as("cvec")),
-      k, nProbe, maxCell)
-
-  /** [[ivfTopK]] with an arbitrary coarse quantizer `cents0` (cid, cvec),
-    * e.g. centroids trained elsewhere; the deterministic sample of
-    * [[ivfTopK]] (the oracle twin) is one such quantizer. */
-  def ivfTopKWithCentroids(
-      df: DataFrame, // (id, vec)
-      cents0: DataFrame, // (cid, cvec)
-      k: Int,
-      nProbe: Int,
-      maxCell: Int = 1000
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // MAP-SIDE probe selection (guide §2.4): the flattened broadcast
@@ -209,7 +199,7 @@ object Similarity {
     // assignment. The kernel subtree is referenced twice (assignment build
     // + probe side) and recomputes -- 2x map-side flops for 0 shuffles, the
     // right trade at any scale.
-    val q = collectQuantizer(cents0)
+    val q = sampledQuantizer(df, centroidEvery)
     val probes = df.select(
       col("id"),
       explode(probeCells(col("vec"), q, nProbe)).as("cell"))
@@ -260,11 +250,8 @@ object Similarity {
       nProbe: Int,
       maxCell: Int = 1000
   ): DataFrame = {
-    // map-side probe selection, same shape as [[ivfTopKWithCentroids]]
-    val q = collectQuantizer(
-      df.filter(pmod(col("id"), lit(centroidEvery)) === 0)
-        .select(col("id").as("cid"), col("vec").as("cvec"))
-    )
+    // map-side probe selection, same shape as [[ivfTopK]]
+    val q = sampledQuantizer(df, centroidEvery)
     val probes = df.select(
       col("id"),
       explode(probeCells(col("vec"), q, nProbe)).as("cell"))

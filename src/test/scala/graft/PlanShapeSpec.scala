@@ -68,26 +68,33 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case _ => false
   }
 
-  private def run(df: DataFrame): Executed = {
+  /** (action name, query execution) of every action heard while `body`
+    * runs, up to the first that `last` accepts. The listener bus is
+    * asynchronous: an action run before `body` can still be queued ahead. */
+  private def actions(last: (String, QueryExecution) => Boolean)(body: => Unit): Seq[(String, QueryExecution)] = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val heard = new LinkedBlockingQueue[QueryExecution]()
+    val heard = new LinkedBlockingQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = heard.put(qe)
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = heard.put(funcName -> qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     classic.listenerManager.register(listener)
     try {
-      Bench.force(df)
-      // the listener bus is asynchronous: a job run while `df` was built can
-      // still be queued ahead of the write
-      def write(): QueryExecution = {
-        val qe = heard.poll(60, TimeUnit.SECONDS)
-        assert(qe != null, "the noop write was not heard within 60 s")
-        if (qe.logical.exists(_.isInstanceOf[OverwriteByExpression])) qe else write()
+      body
+      val out = Seq.newBuilder[(String, QueryExecution)]
+      var done = false
+      while (!done) {
+        val a = heard.poll(60, TimeUnit.SECONDS)
+        assert(a != null, "the last action was not heard within 60 s")
+        out += a
+        done = last(a._1, a._2)
       }
-      new Executed(write())
+      out.result()
     } finally classic.listenerManager.unregister(listener)
   }
+
+  private def run(df: DataFrame): Executed =
+    new Executed(actions((_, qe) => qe.logical.exists(_.isInstanceOf[OverwriteByExpression]))(Bench.force(df)).last._2)
 
   private def query(name: String): Executed = run(SparkEntry.queries(name)(spark, sfDir))
 
@@ -210,6 +217,28 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("q_embed_neardup_ann: broadcast cell table, no exchange before cell assignment") {
     checkIvfCells(query("q_embed_neardup_ann"))
+  }
+
+  test("connectedComponents: two hash exchanges per round, none in the probes or the labels") {
+    import spark.implicits._
+    // a path 1..8 in mixed orientation, a triangle with a duplicate edge and
+    // a self pair, and a star whose centre is not its minimum
+    val pairs = (Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (6L, 5L), (6L, 7L), (8L, 7L),
+      (10L, 11L), (11L, 12L), (12L, 10L), (10L, 11L), (12L, 12L)) ++ (20L to 25L).map(l => (l, 22L)))
+      .toDF("id_a", "id_b")
+    val heard = actions((name, _) => name == "collect") {
+      Dedup.connectedComponents(pairs, col("id_a"), col("id_b")).collect()
+    }
+    heard.foreach { case (name, qe) =>
+      val e = new Executed(qe)
+      val hash = e.shuffles.count(_.outputPartitioning.isInstanceOf[HashPartitioning])
+      if (name == "localCheckpoint") e.check(hash <= 2, s"a round materializes through at most 2 hash exchanges, got $hash")
+      else e.check(e.shuffles.isEmpty, s"no exchange in $name, got ${e.shuffles.size}")
+    }
+    // three star rounds: a node aggregate and a probe before each, and one
+    // after the last
+    val names = heard.map(_._1)
+    assert(names == Seq.fill(4)(Seq("localCheckpoint", "isEmpty")).flatten :+ "collect", s"actions run: $names")
   }
 
   test("pipeline assembly: no shuffle over the persisted hub; pinned exchange counts over the store") {
