@@ -3,8 +3,10 @@ package graft
 import graft.loggen.LogGen
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
 import graft.pipeline.{Route, TfPipeline}
+import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract (see SURVEY.md §7): every operator in SURVEY.md §2 has a
@@ -58,6 +60,28 @@ object SparkEntry {
           }
         }
       )
+  }
+
+  /** Run one streamed gate query to completion: `write` fills a fresh temp
+    * input dir, `stream` reads it into a uniquely named memory sink, and the
+    * drained sink table goes through `readBack` and [[localize]] before the
+    * sink view and the dir are dropped, so repeated runs leak neither. */
+  private def drainStream(s: SparkSession, name: String, mode: OutputMode = OutputMode.Update)(
+      write: String => Unit,
+      stream: String => DataFrame
+  )(readBack: DataFrame => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val qname = s"${name}_v${System.identityHashCode(s)}"
+    try {
+      write(dir)
+      val q = StreamingPipeline.memorySink(stream(dir), qname, mode).start()
+      try q.processAllAvailable()
+      finally q.stop()
+      localize(s, readBack(s.table(qname)))
+    } finally {
+      s.catalog.dropTempView(qname)
+      deleteDir(dir)
+    }
   }
 
   /** Flagship: full per-player stats from the tokenized log table. */
@@ -272,29 +296,19 @@ object SparkEntry {
       // documents table: the stateful bucket machine must reproduce the
       // batch LSH candidate set (k=8, bands=4x2, md5 signatures) exactly --
       // the oracle is the same DuckDB pair SQL as tf_lsh_candidates
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-lsh-stream-drv").toString
-      val qname = s"lsh_stream_v${System.identityHashCode(s)}"
-      try {
-        T(s, d, "documents").select(col("doc_id"), col("text")).write.mode("overwrite").parquet(dir)
-        val src = s.readStream.schema("doc_id BIGINT, text STRING").parquet(dir)
-        val cands = streaming.lshCandidatesStream(
-          s,
-          src,
-          col("doc_id"),
-          Dedup.shingles(words(col("text")), 3),
-          8,
-          2,
-          fast = false
-        )
-        val q = streaming.memorySinkAppend(cands, qname).start()
-        try q.processAllAvailable()
-        finally q.stop()
-        localize(s, s.table(qname).select(col("id_a"), col("id_b")).distinct())
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
-      }
+      drainStream(s, "lsh_stream", OutputMode.Append)(
+        dir => T(s, d, "documents").select(col("doc_id"), col("text")).write.mode("overwrite").parquet(dir),
+        dir =>
+          StreamingPipeline.lshCandidatesStream(
+            s,
+            s.readStream.schema("doc_id BIGINT, text STRING").parquet(dir),
+            col("doc_id"),
+            Dedup.shingles(words(col("text")), 3),
+            8,
+            2,
+            fast = false
+          )
+      )(_.select(col("id_a"), col("id_b")).distinct())
     }),
     "tf_dedup_stream" -> ((s, d) => {
       // streaming first-arrival-wins exact dedup over a STREAMED copy of the
@@ -302,32 +316,23 @@ object SparkEntry {
       // arrival-order-dependent winner id) makes the gate deterministic --
       // if the keyed state missed a duplicate, the extra row breaks the
       // row/hash compare against the distinct-key oracle
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-drv").toString
-      val qname = s"dedup_stream_v${System.identityHashCode(s)}"
-      try {
-        T(s, d, "documents")
-          .select(col("doc_id"), col("text"))
-          .withColumn("ts", to_timestamp(col("doc_id") + lit(1600000000L)))
-          .write.mode("overwrite").parquet(dir)
-        // every initial file in ONE micro-batch, explicitly: the watermark
-        // horizon (10 min) is narrower than the corpus's doc_id-derived
-        // event-time span, so a split across triggers could evict keys
-        // mid-corpus and make the gate depend on trigger boundaries
-        val src = s.readStream
-          .option("maxFilesPerTrigger", Int.MaxValue.toString)
-          .schema("doc_id BIGINT, text STRING, ts TIMESTAMP").parquet(dir)
-        val key = concat_ws(" ", slice(words(col("text")), 1, 3))
-        val q = streaming
-          .memorySink(streaming.dedupExactStream(src, key, col("ts")), qname, complete = false)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        localize(s, s.table(qname).select(col("content_key")))
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
-      }
+      drainStream(s, "dedup_stream")(
+        dir =>
+          T(s, d, "documents")
+            .select(col("doc_id"), col("text"))
+            .withColumn("ts", to_timestamp(col("doc_id") + lit(1600000000L)))
+            .write.mode("overwrite").parquet(dir),
+        dir => {
+          // every initial file in ONE micro-batch, explicitly: the watermark
+          // horizon (10 min) is narrower than the corpus's doc_id-derived
+          // event-time span, so a split across triggers could evict keys
+          // mid-corpus and make the gate depend on trigger boundaries
+          val src = s.readStream
+            .option("maxFilesPerTrigger", Int.MaxValue.toString)
+            .schema("doc_id BIGINT, text STRING, ts TIMESTAMP").parquet(dir)
+          StreamingPipeline.dedupExactStream(src, concat_ws(" ", slice(words(col("text")), 1, 3)), col("ts"))
+        }
+      )(_.select(col("content_key")))
     }),
     "q_dedup_cc" -> ((s, d) => {
       // cluster resolution: LSH candidate pairs -> connected components ->
@@ -404,63 +409,34 @@ object SparkEntry {
       // flatMapGroupsWithState per-doc sequential machine over a STREAMED
       // copy of the tokenized table, compared against the sim's medic
       // fields for the player subjects with >=1 surviving medic-typed line
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-medic-stream").toString
-      val qname = s"medics_stream_v${System.identityHashCode(s)}"
-      // localize + clean up: repeated runs must not leak /tmp parquet copies
-      // or registered memory-sink views
-      try {
-        tfInput(s, d).write.mode("overwrite").parquet(dir)
-        val q = streaming
-          .memorySink(streaming.medicStatsStream(s, streaming.sequencedStream(s, dir)), qname, complete = false)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        localize(
-          s,
-          streaming
-            .latestMedicRows(s.table(qname))
-            .filter(!col("aborted") && shiftrightunsigned(col("sid"), 32) === 1)
-            .select(
-              col("doc_id"), col("sid"),
-              col("advantages_lost"),
-              fcanon(col("biggest_advantage_lost")).as("biggest_advantage_lost"),
-              col("near_full_charge_death"), col("deaths_after_uber"),
-              fcanon(col("avg_time_before_healing")).as("avg_time_before_healing"),
-              fcanon(col("avg_time_to_build")).as("avg_time_to_build"),
-              fcanon(col("avg_time_to_use")).as("avg_time_to_use"),
-              fcanon(col("avg_uber_length")).as("avg_uber_length"),
-              col("charge_count"), col("drops")
-            )
-        )
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
+      drainStream(s, "medics_stream")(
+        dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
+        dir => StreamingPipeline.medicStatsStream(s, StreamingPipeline.sequencedStream(s, dir))
+      ) { table =>
+        StreamingPipeline
+          .latestRows(table)
+          .filter(!col("aborted") && shiftrightunsigned(col("sid"), 32) === 1)
+          .select(
+            col("doc_id"), col("sid"),
+            col("advantages_lost"),
+            fcanon(col("biggest_advantage_lost")).as("biggest_advantage_lost"),
+            col("near_full_charge_death"), col("deaths_after_uber"),
+            fcanon(col("avg_time_before_healing")).as("avg_time_before_healing"),
+            fcanon(col("avg_time_to_build")).as("avg_time_to_build"),
+            fcanon(col("avg_time_to_use")).as("avg_time_to_use"),
+            fcanon(col("avg_uber_length")).as("avg_uber_length"),
+            col("charge_count"), col("drops")
+          )
       }
     }),
     "tf_chat_stream" -> ((s, d) => {
       // streaming chat module against the SAME expectation table as the
       // batch tf_chat query: messages are emitted exactly once with
       // first-seen identity, so no latest-row dedup is needed
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-chat-stream").toString
-      val qname = s"chat_stream_v${System.identityHashCode(s)}"
-      try {
-        tfInput(s, d).write.mode("overwrite").parquet(dir)
-        val q = streaming
-          .memorySink(streaming.chatStream(s, streaming.sequencedStream(s, dir)), qname, complete = false)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        localize(
-          s,
-          s.table(qname)
-            .select("doc_id", "line_no", "time", "name", "steam_id", "message", "chat_type")
-        )
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
-      }
+      drainStream(s, "chat_stream")(
+        dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
+        dir => StreamingPipeline.chatStream(s, StreamingPipeline.sequencedStream(s, dir))
+      )(_.select("doc_id", "line_no", "time", "name", "steam_id", "message", "chat_type"))
     }),
     "tf_classstats_stream" -> ((s, d) => {
       // streaming classStats (flatMapGroupsWithState as-of machine) gated
@@ -468,19 +444,11 @@ object SparkEntry {
       // provides the class arrays, the (gate-proven) subject dimension
       // provides the player universe + steam3 identity, zeros fill players
       // that were never a beneficiary -- exactly tf_per_player's shape
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-class-stream").toString
-      val qname = s"class_stream_v${System.identityHashCode(s)}"
-      try {
-        tfInput(s, d).write.mode("overwrite").parquet(dir)
-        val q = streaming
-          .memorySink(streaming.classStatsStream(s, streaming.sequencedStream(s, dir)), qname, complete = false)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val allRows = streaming
-          .latestMedicRows(s.table(qname))
-          .filter(!col("aborted"))
+      drainStream(s, "class_stream")(
+        dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
+        dir => StreamingPipeline.classStatsStream(s, StreamingPipeline.sequencedStream(s, dir))
+      ) { table =>
+        val allRows = StreamingPipeline.latestRows(table).filter(!col("aborted"))
         val latest = allRows.filter(shiftrightunsigned(col("sid"), 32) === 1)
         val r = routedOf(s, d)
         val dim = TfPipeline.subjectDim(r)
@@ -497,57 +465,38 @@ object SparkEntry {
           case (src, p) =>
             (0 until 10).map(i => coalesce(element_at(col(src), i + 1), lit(0L)).as(s"$p$i"))
         }
-        localize(
-          s,
-          players
-            .join(latest.drop("deaths"), Seq("doc_id", "sid"), "left")
-            .join(deathsClaimed, Seq("doc_id", "sid"), "left")
-            .select(
-              Seq(
-                col("doc_id"),
-                concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3")
-              ) ++ cells: _*
-            )
-        )
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
+        players
+          .join(latest.drop("deaths"), Seq("doc_id", "sid"), "left")
+          .join(deathsClaimed, Seq("doc_id", "sid"), "left")
+          .select(
+            Seq(
+              col("doc_id"),
+              concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3")
+            ) ++ cells: _*
+          )
       }
     }),
     "tf_healspread_stream" -> ((s, d) => {
       // streaming healSpread gated against the sim's per-player heals
       // string (same expectation slice as tf_per_player.heals)
-      val streaming = graft.streaming.StreamingPipeline
-      val dir = java.nio.file.Files.createTempDirectory("graft-heal-stream").toString
-      val qname = s"heal_stream_v${System.identityHashCode(s)}"
-      try {
-        tfInput(s, d).write.mode("overwrite").parquet(dir)
-        val q = streaming
-          .memorySink(streaming.healSpreadStream(s, streaming.sequencedStream(s, dir)), qname, complete = false)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val latest = streaming
-          .latestMedicRows(s.table(qname))
+      drainStream(s, "heal_stream")(
+        dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
+        dir => StreamingPipeline.healSpreadStream(s, StreamingPipeline.sequencedStream(s, dir))
+      ) { table =>
+        val latest = StreamingPipeline
+          .latestRows(table)
           .filter(!col("aborted") && shiftrightunsigned(col("sid"), 32) === 1)
-        val r = routedOf(s, d)
         val players = TfPipeline
-          .subjectDim(r)
+          .subjectDim(routedOf(s, d))
           .filter(shiftrightunsigned(col("sid"), 32) === 1)
           .select(col("doc_id"), col("sid"))
-        localize(
-          s,
-          players
-            .join(latest, Seq("doc_id", "sid"), "left")
-            .select(
-              col("doc_id"),
-              concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3"),
-              coalesce(col("heals"), lit("")).as("heals")
-            )
-        )
-      } finally {
-        s.catalog.dropTempView(qname)
-        deleteDir(dir)
+        players
+          .join(latest, Seq("doc_id", "sid"), "left")
+          .select(
+            col("doc_id"),
+            concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3"),
+            coalesce(col("heals"), lit("")).as("heals")
+          )
       }
     }),
     "tf_composed" -> ((s, d) => {

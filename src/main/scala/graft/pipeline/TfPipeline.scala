@@ -357,6 +357,16 @@ object TfPipeline {
       .select("doc_id", "sid", "data_kind", "name", "steam64_text", "first_line", "death_key")
   }
 
+  /** (doc_id, bkey, claimant): which player-interned subject claims each
+    * deaths bucket -- the first-seen subject per (doc, death_key), as a
+    * single min_by hash aggregate (no sort/window; first_line is unique per
+    * subject within a doc, sid is a formal tiebreak). */
+  private def deathClaims(dim: DataFrame): DataFrame =
+    dim
+      .filter(shiftrightunsigned(col("sid"), 32) === 1 && col("death_key").isNotNull)
+      .groupBy(col("doc_id"), col("death_key").as("bkey"))
+      .agg(min_by(col("sid"), struct(col("first_line"), col("sid"))).as("claimant"))
+
   /** Re-key per-bucket deaths arrays by the subject that CLAIMS them, the
     * distributed twin of the reference's finalize (classstats.rs:113-120 +
     * lib.rs:106-115): deaths accumulate under the raw kill-target's interned
@@ -372,18 +382,8 @@ object TfPipeline {
     * `buckets`: (doc_id, sid, deaths) with sid = bucket key; `dim`:
     * [[subjectDim]] output. Returns (doc_id, sid, deaths) keyed by the
     * claiming subject; unclaimed buckets and claimants whose key misses are
-    * dropped (callers default deaths to zeros). Shape: one tiny window + one
-    * union-merge exchange, both keyed (doc_id, x) -- no join, skew-free. */
-  /** (doc_id, bkey, claimant): which player-interned subject claims each
-    * deaths bucket -- the first-seen subject per (doc, death_key), as a
-    * single min_by hash aggregate (no sort/window; first_line is unique per
-    * subject within a doc, sid is a formal tiebreak). */
-  private def deathClaims(dim: DataFrame): DataFrame =
-    dim
-      .filter(shiftrightunsigned(col("sid"), 32) === 1 && col("death_key").isNotNull)
-      .groupBy(col("doc_id"), col("death_key").as("bkey"))
-      .agg(min_by(col("sid"), struct(col("first_line"), col("sid"))).as("claimant"))
-
+    * dropped (callers default deaths to zeros). Shape: one tiny aggregate +
+    * one union-merge exchange, both keyed (doc_id, x) -- no join, skew-free. */
   def claimDeaths(buckets: DataFrame, dim: DataFrame): DataFrame = {
     val claims = deathClaims(dim)
     buckets
@@ -501,20 +501,7 @@ object TfPipeline {
             col("charge_count"),
             col("drops")
           )
-        ).otherwise(
-          struct(
-            lit(0L).as("advantages_lost"),
-            lit(0f).as("biggest_advantage_lost"),
-            lit(0L).as("near_full_charge_death"),
-            lit(0L).as("deaths_after_uber"),
-            lit(0f).as("avg_time_before_healing"),
-            lit(0f).as("avg_time_to_build"),
-            lit(0f).as("avg_time_to_use"),
-            lit(0f).as("avg_uber_length"),
-            lit(0L).as("charge_count"),
-            lit(0L).as("drops")
-          )
-        )
+        ).otherwise(medicDefault)
       )
       .select("doc_id", "sid", "medic")
   }

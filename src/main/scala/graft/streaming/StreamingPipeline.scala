@@ -3,15 +3,25 @@ package graft.streaming
 import graft.expr.GraftExpressions._
 import graft.pipeline.TfPipeline
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
 
-/** Structured Streaming variant of the parse -> route layer: a continuously
-  * arriving tokenized-sequence table is envelope-parsed, routed, and
-  * aggregated into windowed per-event-type counts with a watermark. The
-  * reference's batch semantics (single ordered pass) stay in TfPipeline;
-  * streaming covers the ingest/monitoring side (SURVEY.md §2.8).
+/** Structured Streaming twins of the batch layers, for the ingest side
+  * (SURVEY.md §2.8). Two kinds of operator live here:
+  *
+  *  - stateless or key-only state: the batch envelope over a streaming
+  *    reader with watermarked, windowed per-event-type counts
+  *    ([[routedCounts]]); first-arrival-wins exact dedup whose state the
+  *    watermark evicts ([[dedupExactStream]]); MinHash-LSH candidate pairs
+  *    at arrival from a capped per-bucket machine ([[lshCandidatesStream]]);
+  *  - the reference's sequential per-doc pass (lib.rs:58-104: recovery
+  *    lookahead, doc abort, doc-relative time) over micro-batches: one
+  *    driver, [[perDoc]], owns that pass, and the medic, classStats,
+  *    healSpread and chat modules each supply only their own state, their
+  *    step for a surviving line, and their output rows. Each is
+  *    differential-tested against its batch [[TfPipeline]] twin.
   */
 object StreamingPipeline {
 
@@ -25,24 +35,13 @@ object StreamingPipeline {
     )
   )
 
-  /** Streaming envelope: same expressions as the batch path (stateless ->
-    * identical semantics per row). */
+  /** Streaming envelope: the batch [[TfPipeline.envelope]] over a streaming
+    * reader (stateless -> identical semantics per row), with `ts` as an
+    * event-time timestamp for watermarks. */
   def envelopeStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(inputSchema)
-      .parquet(dir)
-      .withColumn("line", tokens_to_string(col("tokens")))
-      .withColumn("r", parse_raw_line(col("line")))
-      .select(
-        col("doc_id"),
-        col("line_no"),
-        col("source"),
-        col("r.status").as("status"),
-        col("r.kind").as("kind"),
-        col("r.subject").as("subject"),
-        col("r.event_type").as("event_type"),
-        timestamp_seconds(col("r.ts")).as("ts")
-      )
+    TfPipeline
+      .envelope(spark.readStream.schema(inputSchema).parquet(dir))
+      .withColumn("ts", timestamp_seconds(col("ts")))
 
   /** Windowed routed counts: 5-minute event-time windows per event type with
     * a 10-minute watermark for late lines. */
@@ -107,7 +106,6 @@ object StreamingPipeline {
       fast: Boolean = true,
       maxBucket: Int = 1000
   ): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
     graft.ops.Dedup
       .bandedIds(docs, id, shingleCol, k, bandSize, fast)
@@ -131,53 +129,15 @@ object StreamingPipeline {
       .toDF()
   }
 
-  /** Per-(doc, medic) charge state tracked with mapGroupsWithState: a
-    * streaming analogue of the medic build-time machine (counts completed
-    * first_heal -> chargeready builds). */
-  final case class MedicEvent(doc_id: String, sid: Long, line_no: Long, event_type: String, time: Long)
-  final case class BuildState(lastBuildStart: Long, builds: Long)
-  final case class BuildCount(doc_id: String, sid: Long, builds: Long)
 
-  def buildCounts(spark: SparkSession, env: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import spark.implicits._
-    val typed = env
-      .filter(col("status") === 0 && col("event_type").isin("first_heal", "charge_ready"))
-      .withColumn("sid", subject_id(col("kind"), col("subject")))
-      .select(col("doc_id"), col("sid"), col("line_no"), col("event_type"), unix_timestamp(col("ts")).as("time"))
-      .as[MedicEvent]
-    typed
-      .groupByKey(e => (e.doc_id, e.sid))
-      .mapGroupsWithState[BuildState, BuildCount](GroupStateTimeout.NoTimeout) {
-        case ((doc, sid), events, state) =>
-          var st = state.getOption.getOrElse(BuildState(0L, 0L))
-          // per-batch events sorted by line order: the in-doc sequence
-          for (e <- events.toSeq.sortBy(_.line_no)) {
-            if (e.event_type == "first_heal") st = st.copy(lastBuildStart = e.time)
-            else if (st.lastBuildStart > 0)
-              st = BuildState(0L, st.builds + 1)
-          }
-          state.update(st)
-          BuildCount(doc, sid, st.builds)
-      }
-      .toDF()
-  }
-
-  /** Memory-sink writer for tests/smoke: processAllAvailable drives a batch
-    * of parquet through the streaming plan synchronously. */
-  def memorySink(df: DataFrame, name: String, complete: Boolean): DataStreamWriter[Row] =
-    df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(if (complete) OutputMode.Complete else OutputMode.Update)
-
-  /** Append-mode memory sink (flatMapGroupsWithState(Append) queries must
-    * run in Append output mode). */
-  def memorySinkAppend(df: DataFrame, name: String): DataStreamWriter[Row] =
-    df.writeStream.format("memory").queryName(name).outputMode(OutputMode.Append)
+  /** Memory-sink writer for the driver gate and tests: processAllAvailable
+    * drives the available input through the streaming plan synchronously.
+    * flatMapGroupsWithState(Append) queries need `OutputMode.Append`. */
+  def memorySink(df: DataFrame, name: String, mode: OutputMode): DataStreamWriter[Row] =
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
 
   // ---------------------------------------------------------------------
-  // Streaming medic module with reference-sequential semantics
+  // The per-doc sequential machine (lib.rs:58-104) shared by every module
   // ---------------------------------------------------------------------
 
   /** One classified line for the per-doc state machine: pointwise columns
@@ -206,30 +166,9 @@ object StreamingPipeline {
       healingOpt: Option[Long]
   )
 
-  /** Mutable-free per-medic accumulator mirroring TfPipeline.medicStats'
-    * aggregate columns (sums kept in double like Spark's FloatType sum). */
-  final case class MedicAcc(
-      advantagesLost: Long = 0L,
-      biggestAdv: Float = 0f,
-      nearFull: Long = 0L,
-      deathsAfterUber: Long = 0L,
-      totalBeforeHeal: Double = 0d,
-      healCount: Long = 0L,
-      totalBuild: Long = 0L,
-      buildCount: Long = 0L,
-      totalUber: Double = 0d,
-      chargeCount: Long = 0L,
-      drops: Long = 0L,
-      // sequential machine bits (batch twin: fh/cr line windows)
-      lastFhTime: Long = 0L,
-      fhSinceLastCr: Boolean = false,
-      uberEnd: Long = 0L
-  )
-
-  /** The sequential recovery machine's control state (lib.rs:58-104),
-    * shared by every streaming module. `pendingConsumeTs` is Some(errTs)
-    * when the NEXT line is consumed by a just-evaluated error; `nextLine`
-    * is the cross-batch resume guard. */
+  /** The sequential recovery machine's control state (lib.rs:58-104).
+    * `pendingConsumeTs` is Some(errTs) when the NEXT line is consumed by a
+    * just-evaluated error; `nextLine` is the cross-batch resume guard. */
   final case class SeqCtl(
       startTs: Option[Long] = None,
       pendingConsumeTs: Option[Long] = None,
@@ -269,54 +208,67 @@ object StreamingPipeline {
     }
   }
 
-  /** Per-doc medic state: recovery control plus per-medic accumulators. */
-  final case class DocState(
-      ctl: SeqCtl = SeqCtl(),
-      medics: Map[Long, MedicAcc] = Map.empty
-  )
+  /** A doc's keyed state: the recovery control plus the module's own state. */
+  final case class DocRun[S](ctl: SeqCtl, state: S)
 
-  final case class MedicRow(
-      doc_id: String,
-      sid: Long,
-      aborted: Boolean,
-      advantages_lost: Long,
-      biggest_advantage_lost: Float,
-      near_full_charge_death: Long,
-      deaths_after_uber: Long,
-      avg_time_before_healing: Float,
-      avg_time_to_build: Float,
-      avg_time_to_use: Float,
-      avg_uber_length: Float,
-      charge_count: Long,
-      drops: Long,
-      // lines-consumed watermark: monotone per key, so consumers can pick
-      // the latest emission order-independently (max_by(_, up_to))
-      up_to: Long
-  )
+  /** The per-doc driver every sequential module runs on. Lines are keyed by
+    * doc with flatMapGroupsWithState(Update, NoTimeout); within a micro-batch
+    * they are sorted by line_no, and lines below the `nextLine` resume guard
+    * (replays) are skipped. Cross-batch order is the source's file order, the
+    * streaming contract for sequence logs. Each line advances the recovery
+    * machine; a surviving handled line goes to `step` with its doc-relative
+    * time, and `step` may emit rows at that line. After the batch, a live doc
+    * emits those rows then `rows(doc, state, upTo)`; a doc that aborted in
+    * this batch emits only `tombstone(doc, upTo)` -- rows stepped earlier in
+    * the batch are dropped -- and an already-aborted doc emits nothing.
+    * `upTo` is the lines-consumed watermark, monotone per doc.
+    *
+    * State bound: one state row per doc ever seen, never evicted (NoTimeout,
+    * no watermark), so total state grows with the distinct docs of the
+    * stream's lifetime; each row holds the control plus the module's maps,
+    * which are bounded by the subjects of that doc. */
+  private def perDoc[S: TypeTag, O <: Product: TypeTag](seq: DataFrame, init: S)(
+      step: (String, S, SeqLine, Long, O => Unit) => S,
+      rows: (String, S, Long) => Iterator[O],
+      tombstone: (String, Long) => Iterator[O]
+  ): DataFrame = {
+    import seq.sparkSession.implicits._
+    seq
+      .as[SeqLine]
+      .groupByKey(_.doc_id)
+      .flatMapGroupsWithState[DocRun[S], O](OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        case (doc, lines, state) =>
+          val prior = state.getOption.getOrElse(DocRun(SeqCtl(), init))
+          if (prior.ctl.aborted) Iterator.empty
+          else {
+            val atLine = scala.collection.mutable.ArrayBuffer.empty[O]
+            var ctl = prior.ctl
+            var st = prior.state
+            val ordered = lines.toArray.sortBy(_.line_no).filter(_.line_no >= ctl.nextLine)
+            var i = 0
+            while (i < ordered.length && !ctl.aborted) {
+              val l = ordered(i)
+              i += 1
+              val (next, timeOpt) = advance(ctl, l)
+              ctl = next
+              timeOpt.foreach(time => st = step(doc, st, l, time, atLine += _))
+            }
+            state.update(DocRun(ctl, st))
+            if (ctl.aborted) tombstone(doc, ctl.nextLine)
+            else atLine.iterator ++ rows(doc, st, ctl.nextLine)
+          }
+      }
+      .toDF()
+  }
 
-  /** Classified streaming lines: the batch pointwise classifier over the
-    * streaming envelope (stateless -> identical semantics), flattened to the
-    * medic-typed primitives. */
+  /** Classified streaming lines: the batch envelope and pointwise classifier
+    * over a streaming reader (stateless -> identical semantics), flattened
+    * to the [[SeqLine]] primitives. */
   def sequencedStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(inputSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val env = reader
-      .parquet(dir)
-      .withColumn("line", tokens_to_string(col("tokens")))
-      .withColumn("r", parse_raw_line(col("line")))
-      .select(
-        col("doc_id"),
-        col("line_no"),
-        col("r.status").as("status"),
-        col("r.date").as("date"),
-        col("r.kind").as("kind"),
-        col("r.subject").as("subject"),
-        col("r.event_type").as("event_type"),
-        col("r.params").as("params"),
-        col("r.ts").as("ts")
-      )
     TfPipeline
-      .classifyPointwise(env)
+      .classifyPointwise(TfPipeline.envelope(reader.parquet(dir)))
       // sid is only read on handled medic rows; sentinel for non-OK lines
       .withColumn("sid", coalesce(subject_id(col("kind"), col("subject")), lit(-2L)))
       // typed fields come pre-extracted from the one-pass `tp` struct; the
@@ -346,105 +298,120 @@ object StreamingPipeline {
   private def u32(v: Long): Long = v & 0xffffffffL
 
   /** Latest emission per (doc, sid) from an accumulating (Update-mode) sink
-    * table, picked order-independently via the monotone `up_to` watermark. */
-  def latestMedicRows(df: DataFrame): DataFrame = {
-    val payload = df.columns.filter(c => c != "doc_id" && c != "sid").map(col)
+    * table of any per-subject module, picked order-independently via the
+    * monotone `up_to` watermark. */
+  def latestRows(df: DataFrame): DataFrame = {
+    val payload = df.columns.toSeq.filter(c => c != "doc_id" && c != "sid").map(col)
     df.groupBy(col("doc_id"), col("sid"))
       .agg(max_by(struct(payload: _*), col("up_to")).as("r"))
       .select(col("doc_id"), col("sid"), col("r.*"))
   }
 
-  /** Streaming medic stats keyed by doc: flatMapGroupsWithState runs the
-    * reference's SEQUENTIAL per-doc machine -- error-consumption chains,
-    * doc-level abort, doc-relative event time -- over micro-batches (events
-    * sorted by line_no within a batch; cross-batch order is the source's
-    * file order, the streaming contract for sequence logs). Emits the
-    * current per-(doc, medic) stats every batch; an aborted doc emits a
-    * single tombstone row (sid = -1, aborted = true) and nothing after,
-    * mirroring the batch path's whole-doc exclusion. */
-  def medicStatsStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import spark.implicits._
+  // ---------------------------------------------------------------------
+  // Streaming medic module
+  // ---------------------------------------------------------------------
 
-    def emitRows(doc: String, st: DocState): Iterator[MedicRow] =
-      st.medics.iterator.map { case (sid, a) =>
-        if (a.healCount > 0)
-          MedicRow(doc, sid, aborted = false,
-            a.advantagesLost, a.biggestAdv, a.nearFull, a.deathsAfterUber,
-            f32div(a.totalBeforeHeal.toFloat, a.healCount.toFloat),
-            f32div(a.totalBuild.toFloat, a.buildCount.toFloat),
-            f32div(0f, a.chargeCount.toFloat),
-            f32div(a.totalUber.toFloat, a.chargeCount.toFloat),
-            a.chargeCount, a.drops, st.ctl.nextLine)
-        else
-          MedicRow(doc, sid, aborted = false, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, st.ctl.nextLine)
-      }
+  /** Mutable-free per-medic accumulator mirroring TfPipeline.medicStats'
+    * aggregate columns (sums kept in double like Spark's FloatType sum). */
+  final case class MedicAcc(
+      advantagesLost: Long = 0L,
+      biggestAdv: Float = 0f,
+      nearFull: Long = 0L,
+      deathsAfterUber: Long = 0L,
+      totalBeforeHeal: Double = 0d,
+      healCount: Long = 0L,
+      totalBuild: Long = 0L,
+      buildCount: Long = 0L,
+      totalUber: Double = 0d,
+      chargeCount: Long = 0L,
+      drops: Long = 0L,
+      // sequential machine bits (batch twin: fh/cr line windows)
+      lastFhTime: Long = 0L,
+      fhSinceLastCr: Boolean = false,
+      uberEnd: Long = 0L
+  )
 
-    seq
-      .as[SeqLine]
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[DocState, MedicRow](
-        OutputMode.Update,
-        GroupStateTimeout.NoTimeout
-      ) { case (doc, lines, state) =>
-        var st = state.getOption.getOrElse(DocState())
-        if (st.ctl.aborted) Iterator.empty
+  final case class MedicRow(
+      doc_id: String,
+      sid: Long,
+      aborted: Boolean,
+      advantages_lost: Long,
+      biggest_advantage_lost: Float,
+      near_full_charge_death: Long,
+      deaths_after_uber: Long,
+      avg_time_before_healing: Float,
+      avg_time_to_build: Float,
+      avg_time_to_use: Float,
+      avg_uber_length: Float,
+      charge_count: Long,
+      drops: Long,
+      // lines-consumed watermark: monotone per key, so consumers can pick
+      // the latest emission order-independently (max_by(_, up_to))
+      up_to: Long
+  )
+
+  /** Streaming medic stats on the per-doc machine: per-medic accumulators
+    * (state: medic sid -> [[MedicAcc]]) exactly equal to the batch
+    * [[TfPipeline.medicStats]]. Emits the current per-(doc, medic) stats
+    * every batch; an aborted doc emits a single tombstone row (sid = -1,
+    * aborted = true) and nothing after, mirroring the batch path's
+    * whole-doc exclusion. */
+  def medicStatsStream(spark: SparkSession, seq: DataFrame): DataFrame =
+    perDoc[Map[Long, MedicAcc], MedicRow](seq, Map.empty)(
+      step = (_, medics, l, time, _) =>
+        if (!TfPipeline.MedicTypes.contains(l.event_type)) medics
         else {
-          val ordered = lines.toArray.sortBy(_.line_no).filter(_.line_no >= st.ctl.nextLine)
-          var i = 0
-          while (i < ordered.length && !st.ctl.aborted) {
-            val l = ordered(i)
-            i += 1
-            val (ctl2, timeOpt) = advance(st.ctl, l)
-            st = st.copy(ctl = ctl2)
-            timeOpt.foreach { time =>
-              if (TfPipeline.MedicTypes.contains(l.event_type)) {
-                val a = st.medics.getOrElse(l.sid, MedicAcc())
-                val b = l.event_type match {
-                  case "first_heal" =>
-                    a.copy(
-                      totalBeforeHeal = a.totalBeforeHeal + l.f_time,
-                      healCount = a.healCount + 1,
-                      lastFhTime = time,
-                      fhSinceLastCr = true
-                    )
-                  case "charge_ready" =>
-                    val consume = a.fhSinceLastCr && a.lastFhTime > 0
-                    a.copy(
-                      totalBuild = a.totalBuild + (if (consume) math.max(time - a.lastFhTime, 0L) else 0L),
-                      buildCount = a.buildCount + (if (consume) 1 else 0),
-                      fhSinceLastCr = false
-                    )
-                  case "charge_ended" =>
-                    a.copy(uberEnd = time, totalUber = a.totalUber + l.duration)
-                  case "charge_deployed" => a.copy(chargeCount = a.chargeCount + 1)
-                  case "advantage_lost" =>
-                    a.copy(
-                      advantagesLost = a.advantagesLost + 1,
-                      biggestAdv = if (l.f_time > a.biggestAdv) l.f_time else a.biggestAdv
-                    )
-                  case "medic_death" =>
-                    a.copy(
-                      nearFull = a.nearFull + (if (l.charge >= 95 && l.charge < 100) 1 else 0),
-                      deathsAfterUber =
-                        a.deathsAfterUber + (if (math.max(time - a.uberEnd, 0L) <= 10) 1 else 0),
-                      drops = a.drops + (if (l.charge >= 100) 1 else 0)
-                    )
-                  case _ => a
-                }
-                st = st.copy(medics = st.medics.updated(l.sid, b))
-              }
-            }
+          val a = medics.getOrElse(l.sid, MedicAcc())
+          val b = l.event_type match {
+            case "first_heal" =>
+              a.copy(
+                totalBeforeHeal = a.totalBeforeHeal + l.f_time,
+                healCount = a.healCount + 1,
+                lastFhTime = time,
+                fhSinceLastCr = true
+              )
+            case "charge_ready" =>
+              val consume = a.fhSinceLastCr && a.lastFhTime > 0
+              a.copy(
+                totalBuild = a.totalBuild + (if (consume) math.max(time - a.lastFhTime, 0L) else 0L),
+                buildCount = a.buildCount + (if (consume) 1 else 0),
+                fhSinceLastCr = false
+              )
+            case "charge_ended" =>
+              a.copy(uberEnd = time, totalUber = a.totalUber + l.duration)
+            case "charge_deployed" => a.copy(chargeCount = a.chargeCount + 1)
+            case "advantage_lost" =>
+              a.copy(
+                advantagesLost = a.advantagesLost + 1,
+                biggestAdv = if (l.f_time > a.biggestAdv) l.f_time else a.biggestAdv
+              )
+            case "medic_death" =>
+              a.copy(
+                nearFull = a.nearFull + (if (l.charge >= 95 && l.charge < 100) 1 else 0),
+                deathsAfterUber =
+                  a.deathsAfterUber + (if (math.max(time - a.uberEnd, 0L) <= 10) 1 else 0),
+                drops = a.drops + (if (l.charge >= 100) 1 else 0)
+              )
+            case _ => a
           }
-          state.update(st)
-          if (st.ctl.aborted)
-            Iterator.single(
-              MedicRow(doc, -1L, aborted = true, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, st.ctl.nextLine))
-          else emitRows(doc, st)
-        }
-      }
-      .toDF()
-  }
+          medics.updated(l.sid, b)
+        },
+      rows = (doc, medics, upTo) =>
+        medics.iterator.map { case (sid, a) =>
+          if (a.healCount > 0)
+            MedicRow(doc, sid, aborted = false,
+              a.advantagesLost, a.biggestAdv, a.nearFull, a.deathsAfterUber,
+              f32div(a.totalBeforeHeal.toFloat, a.healCount.toFloat),
+              f32div(a.totalBuild.toFloat, a.buildCount.toFloat),
+              f32div(0f, a.chargeCount.toFloat),
+              f32div(a.totalUber.toFloat, a.chargeCount.toFloat),
+              a.chargeCount, a.drops, upTo)
+          else
+            MedicRow(doc, sid, aborted = false, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, upTo)
+        },
+      tombstone = (doc, upTo) =>
+        Iterator.single(MedicRow(doc, -1L, aborted = true, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, upTo))
+    )
 
   // ---------------------------------------------------------------------
   // Streaming classStats module (A1-A4 + J3 as-of class + A13 round gate)
@@ -459,11 +426,10 @@ object StreamingPipeline {
       damage: Vector[Long] = Vector.fill(10)(0L)
   )
 
-  /** Per-doc classStats state: recovery control, the as-of entry table
-    * (sid -> normalized class; "" = entry created by a kill target with its
-    * class still unknown), accumulators, and the round-active gate. */
+  /** Per-doc classStats state: the as-of entry table (sid -> normalized
+    * class; "" = entry created by a kill target with its class still
+    * unknown), accumulators, and the round-active gate. */
   final case class ClassDocState(
-      ctl: SeqCtl = SeqCtl(),
       entries: Map[Long, String] = Map.empty,
       stats: Map[Long, ClassAcc] = Map.empty,
       active: Boolean = false
@@ -480,18 +446,14 @@ object StreamingPipeline {
       up_to: Long
   )
 
-  /** Streaming classStats keyed by doc: the same flatMapGroupsWithState
-    * machine shape as [[medicStatsStream]] (shared [[advance]] recovery
-    * step, doc aborts -> tombstone), running the reference's SEQUENTIAL
-    * as-of semantics (classstats.rs:61-120): spawns/role changes set the
-    * subject's class; an active kill creates the target's entry BEFORE the
-    * class reads; deaths/assists/damage require the read subject to have an
-    * entry; consumers accumulate under the beneficiary subject. Exactly
-    * equal to the batch [[TfPipeline.classStats]] window formulation
+  /** Streaming classStats on the per-doc machine, running the reference's
+    * SEQUENTIAL as-of semantics (classstats.rs:61-120): spawns/role changes
+    * set the subject's class; an active kill creates the target's entry
+    * BEFORE the class reads; deaths/assists/damage require the read subject
+    * to have an entry; consumers accumulate under the beneficiary subject.
+    * Exactly equal to the batch [[TfPipeline.classStats]] window formulation
     * (differential-tested incl. doc aborts and consumption chains). */
   def classStatsStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import spark.implicits._
     import graft.expr.{LineParser, Steam}
 
     val zero = Vector.fill(10)(0L)
@@ -507,156 +469,113 @@ object StreamingPipeline {
       case _         => Steam.K_SYSTEM << 32
     }
 
-    seq
-      .as[SeqLine]
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ClassDocState, ClassRow](
-        OutputMode.Update,
-        GroupStateTimeout.NoTimeout
-      ) { case (doc, lines, state) =>
-        var st = state.getOption.getOrElse(ClassDocState())
-        if (st.ctl.aborted) Iterator.empty
-        else {
-          def bump(sid: Long, pick: ClassAcc => ClassAcc): Unit = {
-            val a = st.stats.getOrElse(sid, ClassAcc())
-            st = st.copy(stats = st.stats.updated(sid, pick(a)))
-          }
-          val ordered = lines.toArray.sortBy(_.line_no).filter(_.line_no >= st.ctl.nextLine)
-          var i = 0
-          while (i < ordered.length && !st.ctl.aborted) {
-            val l = ordered(i)
-            i += 1
-            val (ctl2, timeOpt) = advance(st.ctl, l)
-            st = st.copy(ctl = ctl2)
-            if (timeOpt.isDefined) l.event_type match {
-              case "round_start" => st = st.copy(active = true)
-              case "round_win"   => st = st.copy(active = false)
-              case "spawned" | "role_change" =>
-                if (l.class_str != null)
-                  st = st.copy(entries = st.entries.updated(l.sid, l.class_str))
-              case "kill" if st.active =>
-                val tsid = killTargetSid(l)
-                // the attacker's class is read BEFORE the target entry is
-                // created (classstats.rs:81-82) -- observable on a self-kill
-                // with no prior entry; then the target entry is created and
-                // the kill is counted under the target's as-of class
-                val attackerEntry = st.entries.get(l.sid)
-                if (!st.entries.contains(tsid))
-                  st = st.copy(entries = st.entries.updated(tsid, ""))
-                val vIdx = clsIdx(st.entries(tsid))
-                bump(l.sid, a => a.copy(kills = a.kills.updated(vIdx, a.kills(vIdx) + 1)))
-                // the victim is a beneficiary group either way; its death
-                // counts only when the ATTACKER had an entry (its class may
-                // still be unknown) -- classstats.rs:83-86
-                attackerEntry match {
-                  case Some(ac) =>
-                    val aIdx = clsIdx(ac)
-                    bump(tsid, a => a.copy(deaths = a.deaths.updated(aIdx, a.deaths(aIdx) + 1)))
-                  case None => bump(tsid, identity)
-                }
-              case "kill_assist" if st.active =>
-                // the assister's group exists even when the target has no
-                // entry (batch: the consumer row always groups)
-                val counted = l.target_raw != null && {
-                  val t = Steam.againstSubjectId(l.target_raw)
-                  st.entries.contains(t) && {
-                    val tIdx = clsIdx(st.entries(t))
-                    bump(l.sid, a => a.copy(assists = a.assists.updated(tIdx, a.assists(tIdx) + 1)))
-                    true
-                  }
-                }
-                if (!counted) bump(l.sid, identity)
-              case "damage" if st.active =>
-                val d = l.dmgOpt.getOrElse(0L)
-                if (d > 0 && d < 1500) {
-                  val t =
-                    if (l.target_raw == null) Steam.K_SYSTEM << 32
-                    else Steam.againstSubjectId(l.target_raw)
-                  if (st.entries.contains(t)) {
-                    val tIdx = clsIdx(st.entries(t))
-                    bump(l.sid, a => a.copy(damage = a.damage.updated(tIdx, a.damage(tIdx) + d)))
-                  } else bump(l.sid, identity)
-                }
-              case _ =>
-            }
-          }
-          state.update(st)
-          if (st.ctl.aborted)
-            Iterator.single(ClassRow(doc, -1L, aborted = true, zero, zero, zero, zero, st.ctl.nextLine))
-          else
-            st.stats.iterator.map { case (sid, a) =>
-              ClassRow(doc, sid, aborted = false,
-                sat(a.kills), sat(a.deaths), sat(a.assists), sat(a.damage), st.ctl.nextLine)
-            }
+    perDoc[ClassDocState, ClassRow](seq, ClassDocState())(
+      step = (_, prior, l, _, _) => {
+        var st = prior
+        def bump(sid: Long, pick: ClassAcc => ClassAcc): Unit = {
+          val a = st.stats.getOrElse(sid, ClassAcc())
+          st = st.copy(stats = st.stats.updated(sid, pick(a)))
         }
-      }
-      .toDF()
+        l.event_type match {
+          case "round_start" => st = st.copy(active = true)
+          case "round_win"   => st = st.copy(active = false)
+          case "spawned" | "role_change" =>
+            if (l.class_str != null)
+              st = st.copy(entries = st.entries.updated(l.sid, l.class_str))
+          case "kill" if st.active =>
+            val tsid = killTargetSid(l)
+            // the attacker's class is read BEFORE the target entry is
+            // created (classstats.rs:81-82) -- observable on a self-kill
+            // with no prior entry; then the target entry is created and
+            // the kill is counted under the target's as-of class
+            val attackerEntry = st.entries.get(l.sid)
+            if (!st.entries.contains(tsid))
+              st = st.copy(entries = st.entries.updated(tsid, ""))
+            val vIdx = clsIdx(st.entries(tsid))
+            bump(l.sid, a => a.copy(kills = a.kills.updated(vIdx, a.kills(vIdx) + 1)))
+            // the victim is a beneficiary group either way; its death
+            // counts only when the ATTACKER had an entry (its class may
+            // still be unknown) -- classstats.rs:83-86
+            attackerEntry match {
+              case Some(ac) =>
+                val aIdx = clsIdx(ac)
+                bump(tsid, a => a.copy(deaths = a.deaths.updated(aIdx, a.deaths(aIdx) + 1)))
+              case None => bump(tsid, identity)
+            }
+          case "kill_assist" if st.active =>
+            // the assister's group exists even when the target has no
+            // entry (batch: the consumer row always groups)
+            val counted = l.target_raw != null && {
+              val t = Steam.againstSubjectId(l.target_raw)
+              st.entries.contains(t) && {
+                val tIdx = clsIdx(st.entries(t))
+                bump(l.sid, a => a.copy(assists = a.assists.updated(tIdx, a.assists(tIdx) + 1)))
+                true
+              }
+            }
+            if (!counted) bump(l.sid, identity)
+          case "damage" if st.active =>
+            val d = l.dmgOpt.getOrElse(0L)
+            if (d > 0 && d < 1500) {
+              val t =
+                if (l.target_raw == null) Steam.K_SYSTEM << 32
+                else Steam.againstSubjectId(l.target_raw)
+              if (st.entries.contains(t)) {
+                val tIdx = clsIdx(st.entries(t))
+                bump(l.sid, a => a.copy(damage = a.damage.updated(tIdx, a.damage(tIdx) + d)))
+              } else bump(l.sid, identity)
+            }
+          case _ =>
+        }
+        st
+      },
+      rows = (doc, st, upTo) =>
+        st.stats.iterator.map { case (sid, a) =>
+          ClassRow(doc, sid, aborted = false, sat(a.kills), sat(a.deaths), sat(a.assists), sat(a.damage), upTo)
+        },
+      tombstone = (doc, upTo) =>
+        Iterator.single(ClassRow(doc, -1L, aborted = true, zero, zero, zero, zero, upTo))
+    )
   }
 
   // ---------------------------------------------------------------------
   // Streaming healSpread module (A5: per-(healer, target) u32-wrapped sums)
   // ---------------------------------------------------------------------
 
-  final case class HealDocState(
-      ctl: SeqCtl = SeqCtl(),
-      heals: Map[Long, Map[Long, Long]] = Map.empty // healer sid -> target account -> u32 sum
-  )
-
   /** heals rendered in target-account order as "[U:1:acct]:sum;..." -- the
     * same string shape as tf_per_player's flattened heals column, so the
     * driver query compares against the SAME sim expectation. */
   final case class HealRow(doc_id: String, sid: Long, aborted: Boolean, heals: String, up_to: Long)
 
-  /** Streaming healSpread on the shared per-doc machine (healspread.rs:20-33):
+  /** Streaming healSpread on the per-doc machine (healspread.rs:20-33):
     * `healed` lines whose `against` target is a PLAYER accumulate the healing
-    * amount (absent -> 0) under (healer, target account) with u32 wrapping;
-    * missing `against` is a no-op. Exactly equal to the batch
-    * [[TfPipeline.healSpread]] aggregate (differential-tested). */
+    * amount (absent -> 0) under (healer, target account) with u32 wrapping
+    * (state: healer sid -> target account -> sum); missing `against` is a
+    * no-op. Exactly equal to the batch [[TfPipeline.healSpread]] aggregate
+    * (differential-tested). */
   def healSpreadStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import spark.implicits._
     import graft.expr.Steam
 
     def render(m: Map[Long, Long]): String =
       m.toSeq.sorted.map { case (acct, v) => s"[U:1:$acct]:$v" }.mkString(";")
 
-    seq
-      .as[SeqLine]
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[HealDocState, HealRow](
-        OutputMode.Update,
-        GroupStateTimeout.NoTimeout
-      ) { case (doc, lines, state) =>
-        var st = state.getOption.getOrElse(HealDocState())
-        if (st.ctl.aborted) Iterator.empty
+    perDoc[Map[Long, Map[Long, Long]], HealRow](seq, Map.empty)(
+      step = (_, heals, l, _, _) =>
+        if (l.event_type != "healed" || l.target_raw == null) heals
         else {
-          val ordered = lines.toArray.sortBy(_.line_no).filter(_.line_no >= st.ctl.nextLine)
-          var i = 0
-          while (i < ordered.length && !st.ctl.aborted) {
-            val l = ordered(i)
-            i += 1
-            val (ctl2, timeOpt) = advance(st.ctl, l)
-            st = st.copy(ctl = ctl2)
-            if (timeOpt.isDefined && l.event_type == "healed" && l.target_raw != null) {
-              val t = Steam.againstSubjectId(l.target_raw)
-              if (Steam.packedKind(t) == Steam.K_PLAYER.toInt) {
-                val acct = t & 0xffffffffL
-                val m = st.heals.getOrElse(l.sid, Map.empty[Long, Long])
-                val next = (m.getOrElse(acct, 0L) + l.healingOpt.getOrElse(0L)) & 0xffffffffL
-                st = st.copy(heals = st.heals.updated(l.sid, m.updated(acct, next)))
-              }
-            }
+          val t = Steam.againstSubjectId(l.target_raw)
+          if (Steam.packedKind(t) != Steam.K_PLAYER.toInt) heals
+          else {
+            val acct = t & 0xffffffffL
+            val m = heals.getOrElse(l.sid, Map.empty[Long, Long])
+            val next = (m.getOrElse(acct, 0L) + l.healingOpt.getOrElse(0L)) & 0xffffffffL
+            heals.updated(l.sid, m.updated(acct, next))
           }
-          state.update(st)
-          if (st.ctl.aborted)
-            Iterator.single(HealRow(doc, -1L, aborted = true, "", st.ctl.nextLine))
-          else
-            st.heals.iterator.map { case (sid, m) =>
-              HealRow(doc, sid, aborted = false, render(m), st.ctl.nextLine)
-            }
-        }
-      }
-      .toDF()
+        },
+      rows = (doc, heals, upTo) =>
+        heals.iterator.map { case (sid, m) => HealRow(doc, sid, aborted = false, render(m), upTo) },
+      tombstone = (doc, upTo) => Iterator.single(HealRow(doc, -1L, aborted = true, "", upTo))
+    )
   }
 
   // ---------------------------------------------------------------------
@@ -664,7 +583,6 @@ object StreamingPipeline {
   // ---------------------------------------------------------------------
 
   final case class SubjEntry(dataKind: Int, name: String, steam64: Long)
-  final case class ChatDocState(ctl: SeqCtl = SeqCtl(), subjects: Map[Long, SubjEntry] = Map.empty)
   final case class ChatMsg(
       doc_id: String,
       line_no: Long,
@@ -676,73 +594,54 @@ object StreamingPipeline {
   )
 
   /** Streaming chat: say/say_team messages resolved against the FIRST-SEEN
-    * subject identity (SubjectData semantics, common.rs:308-342), player
-    * subjects only (F2), emitted in processing order with doc-relative time.
-    * Each message is emitted exactly once (the resume guard makes re-emission
-    * impossible); a doc that aborts mid-batch emits nothing for that batch
-    * and nothing after -- messages emitted in EARLIER batches stand (the
-    * Update-mode sink cannot retract; batch consumers drop aborted docs via
-    * the medic tombstones or the batch universe). */
-  def chatStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import spark.implicits._
-    seq
-      .as[SeqLine]
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ChatDocState, ChatMsg](
-        OutputMode.Update,
-        GroupStateTimeout.NoTimeout
-      ) { case (doc, lines, state) =>
-        var st = state.getOption.getOrElse(ChatDocState())
-        val out = scala.collection.mutable.ArrayBuffer.empty[ChatMsg]
-        if (!st.ctl.aborted) {
-          val ordered = lines.toArray.sortBy(_.line_no).filter(_.line_no >= st.ctl.nextLine)
-          var i = 0
-          while (i < ordered.length && !st.ctl.aborted) {
-            val l = ordered(i)
-            i += 1
-            val (ctl2, timeOpt) = advance(st.ctl, l)
-            st = st.copy(ctl = ctl2)
-            timeOpt.foreach { time =>
-              // first-seen-wins intern, mirroring TfPipeline.subjectDim
-              if (!st.subjects.contains(l.sid)) {
-                val k = graft.expr.Steam.packedKind(l.sid)
-                val e =
-                  if (k == 1 || k == 2) {
-                    val parts = graft.expr.Steam.splitPlayerSubject(l.subject)
-                    if (parts == null) SubjEntry(3, l.subject, -1L)
-                    else {
-                      // ASCII digits ONLY, matching the batch twin's
-                      // rlike("^[0-9]{1,18}$") -- Character.isDigit also
-                      // accepts non-ASCII Unicode decimal digits, which the
-                      // batch path classifies as data_kind=3
-                      val uidOk = parts(1).nonEmpty && parts(1).length <= 18 &&
-                        parts(1).forall(c => c >= '0' && c <= '9') &&
-                        java.lang.Long.parseLong(parts(1)) <= 65535L
-                      val acct = graft.expr.Kernels.steamTextAccount(
-                        org.apache.spark.unsafe.types.UTF8String.fromString(parts(2)))
-                      if (acct != null && uidOk)
-                        SubjEntry(1, parts(0), graft.expr.Steam.steam64(acct.longValue()))
-                      else if (uidOk) SubjEntry(2, parts(0), -1L)
-                      else SubjEntry(3, l.subject, -1L)
-                    }
-                  } else SubjEntry(k, l.subject, -1L)
-                st = st.copy(subjects = st.subjects.updated(l.sid, e))
-              }
-              if ((l.event_type == "say" || l.event_type == "say_team") &&
-                graft.expr.Steam.packedKind(l.sid) == 1) {
-                val e = st.subjects(l.sid)
-                if (e.dataKind == 1)
-                  out += ChatMsg(doc, l.line_no, time, e.name, e.steam64,
-                    Option(l.text).getOrElse(""),
-                    if (l.event_type == "say") "All" else "Team")
-              }
-            }
+    * subject identity (SubjectData semantics, common.rs:308-342; state: sid
+    * -> [[SubjEntry]]), player subjects only (F2), emitted at their line with
+    * doc-relative time. Each message is emitted exactly once (the resume
+    * guard makes re-emission impossible); a doc that aborts mid-batch emits
+    * nothing for that batch and nothing after -- messages emitted in EARLIER
+    * batches stand (the Update-mode sink cannot retract; batch consumers
+    * drop aborted docs via the medic tombstones or the batch universe). */
+  def chatStream(spark: SparkSession, seq: DataFrame): DataFrame =
+    perDoc[Map[Long, SubjEntry], ChatMsg](seq, Map.empty)(
+      step = (doc, prior, l, time, emit) => {
+        // first-seen-wins intern, mirroring TfPipeline.subjectDim
+        val subjects =
+          if (prior.contains(l.sid)) prior
+          else {
+            val k = graft.expr.Steam.packedKind(l.sid)
+            val e =
+              if (k == 1 || k == 2) {
+                val parts = graft.expr.Steam.splitPlayerSubject(l.subject)
+                if (parts == null) SubjEntry(3, l.subject, -1L)
+                else {
+                  // ASCII digits ONLY, matching the batch twin's
+                  // rlike("^[0-9]{1,18}$") -- Character.isDigit also
+                  // accepts non-ASCII Unicode decimal digits, which the
+                  // batch path classifies as data_kind=3
+                  val uidOk = parts(1).nonEmpty && parts(1).length <= 18 &&
+                    parts(1).forall(c => c >= '0' && c <= '9') &&
+                    java.lang.Long.parseLong(parts(1)) <= 65535L
+                  val acct = graft.expr.Kernels.steamTextAccount(
+                    org.apache.spark.unsafe.types.UTF8String.fromString(parts(2)))
+                  if (acct != null && uidOk)
+                    SubjEntry(1, parts(0), graft.expr.Steam.steam64(acct.longValue()))
+                  else if (uidOk) SubjEntry(2, parts(0), -1L)
+                  else SubjEntry(3, l.subject, -1L)
+                }
+              } else SubjEntry(k, l.subject, -1L)
+            prior.updated(l.sid, e)
           }
-          state.update(st)
+        if ((l.event_type == "say" || l.event_type == "say_team") &&
+          graft.expr.Steam.packedKind(l.sid) == 1) {
+          val e = subjects(l.sid)
+          if (e.dataKind == 1)
+            emit(ChatMsg(doc, l.line_no, time, e.name, e.steam64,
+              Option(l.text).getOrElse(""),
+              if (l.event_type == "say") "All" else "Team"))
         }
-        if (st.ctl.aborted) Iterator.empty else out.iterator
-      }
-      .toDF()
-  }
+        subjects
+      },
+      rows = (_, _, _) => Iterator.empty,
+      tombstone = (_, _) => Iterator.empty
+    )
 }

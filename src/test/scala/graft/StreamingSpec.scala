@@ -4,6 +4,7 @@ import graft.loggen.LogGen
 import graft.pipeline.TfPipeline
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -37,7 +38,7 @@ class StreamingSpec extends AnyFunSuite {
       .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
       .parquet(s"$base/in")
     val dd = StreamingPipeline.dedupExactStream(src, col("text"), col("ts"))
-    val q = StreamingPipeline.memorySink(dd, "dedup_stream", complete = false).start()
+    val q = StreamingPipeline.memorySink(dd, "dedup_stream", OutputMode.Update).start()
     try {
       q.processAllAvailable()
       // batch 2: a cross-batch duplicate (must hit the keyed state) + a new key
@@ -118,7 +119,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(s"$base/in")
     def sh(c: org.apache.spark.sql.Column) = graft.ops.Dedup.shingles(split(c, " "), 3)
     val cands = StreamingPipeline.lshCandidatesStream(spark, src, col("doc_id"), sh(col("text")), 8, 2)
-    val q = StreamingPipeline.memorySinkAppend(cands, "lsh_stream").start()
+    val q = StreamingPipeline.memorySink(cands, "lsh_stream", OutputMode.Append).start()
     try {
       q.processAllAvailable()
       // batch 2: a near-dup of doc 1 -- the pair must be emitted AT ARRIVAL
@@ -185,6 +186,62 @@ class StreamingSpec extends AnyFunSuite {
       s"each pair must be emitted exactly once per band across the restart, got $byPair")
   }
 
+  test("streaming LSH candidates: bucket cap edge -- at the cap equals batch, over it keeps the first cap ids") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    spark.sparkContext.setLogLevel("WARN")
+    val base = Files.createTempDirectory("graft-lsh-cap").toString
+    new java.io.File(s"$base/in").mkdirs()
+    def writeFile(name: String, rows: Seq[(Long, String)]): Unit = {
+      val df = rows.toDF("doc_id", "text")
+      val tmp = s"$base/tmp-$name"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.move(f.toPath, java.nio.file.Paths.get(s"$base/in/$name.parquet"))
+    }
+    // identical texts share all 4 band buckets; the two texts share no
+    // shingle, so their buckets are disjoint: one bucket family holds
+    // exactly maxBucket = 3 members, the other maxBucket + 1
+    val atCap = "the quick brown fox jumps over the lazy dog today"
+    val overCap = "completely different text about catalyst optimizer internals here"
+    val maxBucket = 3
+    val nBands = 4 // k=8, bandSize=2
+    def sh(c: org.apache.spark.sql.Column) = graft.ops.Dedup.shingles(split(c, " "), 3)
+    // each bucket fills across two micro-batches, so the cap is checked
+    // against the recovered member list, not only within one batch
+    writeFile("a", Seq((1L, atCap), (2L, atCap), (10L, overCap), (11L, overCap)))
+    val src = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(s"$base/in")
+    val cands = StreamingPipeline.lshCandidatesStream(
+      spark, src, col("doc_id"), sh(col("text")), 8, 2, maxBucket = maxBucket)
+    val q = StreamingPipeline.memorySink(cands, "lsh_cap", OutputMode.Append).start()
+    try {
+      q.processAllAvailable()
+      writeFile("b", Seq((3L, atCap), (12L, overCap), (13L, overCap)))
+      q.processAllAvailable()
+      val out = spark.table("lsh_cap").select("id_a", "id_b").as[(Long, Long)].collect()
+      val got = out.toSet
+      val all = Seq(1L, 2L, 3L).map(_ -> atCap) ++ Seq(10L, 11L, 12L, 13L).map(_ -> overCap)
+      val batch = graft.ops.Dedup
+        .lshCandidates(all.toDF("doc_id", "text"), col("doc_id"), sh(col("text")), 8, 2, maxBucket = maxBucket)
+        .as[(Long, Long)].collect().toSet
+      // at the cap: the bucket is kept whole, in the stream and in batch
+      assert(batch == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"batch must keep the at-cap bucket and drop the over-cap one: $batch")
+      assert(got.filter(_._1 < 10L) == batch, s"at the cap the stream must equal batch: $got vs $batch")
+      // over the cap: batch drops the bucket, the stream keeps the pairs
+      // among the first maxBucket ids (here the three smallest) and never
+      // admits the fourth
+      assert(got.filter(_._1 >= 10L) == Set((10L, 11L), (10L, 12L), (11L, 12L)),
+        s"over the cap the stream must keep only the first $maxBucket members' pairs: $got")
+      // one emission per pair per shared band
+      assert(out.groupBy(identity).values.map(_.length).toSet == Set(nBands),
+        s"each kept pair must be emitted once per band: ${out.toSeq}")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("lsh_cap")
+      ()
+    }
+  }
+
   test("streaming envelope + windowed routed counts match the batch counts") {
     spark.sparkContext.setLogLevel("WARN")
     val dir = Files.createTempDirectory("graft-stream").toString
@@ -192,7 +249,7 @@ class StreamingSpec extends AnyFunSuite {
     input.write.mode("overwrite").parquet(dir)
 
     val counts = StreamingPipeline.routedCounts(StreamingPipeline.envelopeStream(spark, dir))
-    val q = StreamingPipeline.memorySink(counts, "routed_counts", complete = true).start()
+    val q = StreamingPipeline.memorySink(counts, "routed_counts", OutputMode.Complete).start()
     try {
       q.processAllAvailable()
       val got = spark
@@ -228,7 +285,7 @@ class StreamingSpec extends AnyFunSuite {
       ("d1", 0L, say("10:00:00")), ("d1", 1L, say("10:00:10")),
       ("d1", 2L, say("10:00:20")), ("d1", 3L, say("11:00:00"))))
     val counts = StreamingPipeline.routedCounts(StreamingPipeline.envelopeStream(spark, s"$base/in"))
-    val q = StreamingPipeline.memorySink(counts, "wm_counts", complete = false).start()
+    val q = StreamingPipeline.memorySink(counts, "wm_counts", OutputMode.Update).start()
     try {
       q.processAllAvailable() // watermark after batch 1: 11:00 - 10 min = 10:50
       // batch 2: one LATE line (10:00:30, far below the watermark -> must be
@@ -247,23 +304,6 @@ class StreamingSpec extends AnyFunSuite {
       spark.catalog.dropTempView("wm_counts")
       ()
     }
-  }
-
-  test("stateful build counts via mapGroupsWithState") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
-    // enough docs that at least one lobby has a medic emitting
-    // first_heal/charge_ready events
-    LogGen.generate(spark, 6, 400, 42L).toDF().write.mode("overwrite").parquet(dir)
-    val env = StreamingPipeline.envelopeStream(spark, dir)
-    val q = StreamingPipeline
-      .memorySink(StreamingPipeline.buildCounts(spark, env), "builds", complete = false)
-      .start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.sql("select * from builds").collect()
-      assert(rows.nonEmpty)
-      assert(rows.forall(_.getLong(2) >= 0))
-    } finally q.stop()
   }
 
   test("streaming medic module: multi-batch delivery (docs split across files) equals batch") {
@@ -285,7 +325,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val seq = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
     val q = StreamingPipeline
-      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_mb", complete = false)
+      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_mb", OutputMode.Update)
       .start()
     try {
       q.processAllAvailable()
@@ -293,7 +333,7 @@ class StreamingSpec extends AnyFunSuite {
       // actually split into one batch per segment file
       assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
         s"expected >=3 non-empty micro-batches, got ${q.recentProgress.map(_.numInputRows).mkString(",")}")
-      val got = StreamingPipeline.latestMedicRows(spark.sql("select * from medics_mb"))
+      val got = StreamingPipeline.latestRows(spark.sql("select * from medics_mb"))
         .filter(!col("aborted"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(3), r.getLong(11), r.getLong(12)))
@@ -312,7 +352,7 @@ class StreamingSpec extends AnyFunSuite {
       // equality with the batch windows+join formulation
       val seq2 = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
       val qc = StreamingPipeline
-        .memorySink(StreamingPipeline.chatStream(spark, seq2), "chat_mb", complete = false)
+        .memorySink(StreamingPipeline.chatStream(spark, seq2), "chat_mb", OutputMode.Update)
         .start()
       try {
         qc.processAllAvailable()
@@ -343,12 +383,12 @@ class StreamingSpec extends AnyFunSuite {
 
     val seq = StreamingPipeline.sequencedStream(spark, dir)
     val q = StreamingPipeline
-      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_stream", complete = false)
+      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_stream", OutputMode.Update)
       .start()
     try {
       q.processAllAvailable()
       // latest emission per key via the monotone up_to watermark
-      val got = StreamingPipeline.latestMedicRows(spark.sql("select * from medics_stream"))
+      val got = StreamingPipeline.latestRows(spark.sql("select * from medics_stream"))
 
       val tombstoned = got.filter(col("aborted")).select("doc_id").collect().map(_.getString(0)).toSet
       val streamed = got
@@ -420,10 +460,10 @@ class StreamingSpec extends AnyFunSuite {
       }
       val seq = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
       val q = StreamingPipeline
-        .memorySink(StreamingPipeline.classStatsStream(spark, seq), "class_stream", complete = false)
+        .memorySink(StreamingPipeline.classStatsStream(spark, seq), "class_stream", OutputMode.Update)
         .start()
       def snapshot(): (Set[String], Map[(String, Long), (Seq[Long], Seq[Long], Seq[Long], Seq[Long])]) = {
-        val latest = StreamingPipeline.latestMedicRows(spark.sql("select * from class_stream"))
+        val latest = StreamingPipeline.latestRows(spark.sql("select * from class_stream"))
         val tomb = latest.filter(col("aborted")).select("doc_id").collect().map(_.getString(0)).toSet
         val rows = latest.filter(!col("aborted")).collect().map { r =>
           (r.getString(0), r.getLong(1)) ->
@@ -456,11 +496,11 @@ class StreamingSpec extends AnyFunSuite {
         // equality with the batch aggregate's (healer -> account -> u32 sum)
         val seqH = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
         val qh = StreamingPipeline
-          .memorySink(StreamingPipeline.healSpreadStream(spark, seqH), "heal_stream", complete = false)
+          .memorySink(StreamingPipeline.healSpreadStream(spark, seqH), "heal_stream", OutputMode.Update)
           .start()
         try {
           qh.processAllAvailable()
-          val gotHeals = StreamingPipeline.latestMedicRows(spark.sql("select * from heal_stream"))
+          val gotHeals = StreamingPipeline.latestRows(spark.sql("select * from heal_stream"))
             .filter(!col("aborted"))
             .collect()
             .map(r => (r.getString(0), r.getLong(1)) -> r.getString(3))
