@@ -411,7 +411,7 @@ object SparkEntry {
       // fields for the player subjects with >=1 surviving medic-typed line
       drainStream(s, "medics_stream")(
         dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
-        dir => StreamingPipeline.medicStatsStream(s, StreamingPipeline.sequencedStream(s, dir))
+        dir => StreamingPipeline.medicStatsStream(StreamingPipeline.sequencedStream(s, dir))
       ) { table =>
         StreamingPipeline
           .latestRows(table)
@@ -435,7 +435,7 @@ object SparkEntry {
       // first-seen identity, so no latest-row dedup is needed
       drainStream(s, "chat_stream")(
         dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
-        dir => StreamingPipeline.chatStream(s, StreamingPipeline.sequencedStream(s, dir))
+        dir => StreamingPipeline.chatStream(StreamingPipeline.sequencedStream(s, dir))
       )(_.select("doc_id", "line_no", "time", "name", "steam_id", "message", "chat_type"))
     }),
     "tf_classstats_stream" -> ((s, d) => {
@@ -446,7 +446,7 @@ object SparkEntry {
       // that were never a beneficiary -- exactly tf_per_player's shape
       drainStream(s, "class_stream")(
         dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
-        dir => StreamingPipeline.classStatsStream(s, StreamingPipeline.sequencedStream(s, dir))
+        dir => StreamingPipeline.classStatsStream(StreamingPipeline.sequencedStream(s, dir))
       ) { table =>
         val allRows = StreamingPipeline.latestRows(table).filter(!col("aborted"))
         val latest = allRows.filter(shiftrightunsigned(col("sid"), 32) === 1)
@@ -481,7 +481,7 @@ object SparkEntry {
       // string (same expectation slice as tf_per_player.heals)
       drainStream(s, "heal_stream")(
         dir => tfInput(s, d).write.mode("overwrite").parquet(dir),
-        dir => StreamingPipeline.healSpreadStream(s, StreamingPipeline.sequencedStream(s, dir))
+        dir => StreamingPipeline.healSpreadStream(StreamingPipeline.sequencedStream(s, dir))
       ) { table =>
         val latest = StreamingPipeline
           .latestRows(table)

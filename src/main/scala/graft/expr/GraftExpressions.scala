@@ -496,8 +496,6 @@ object GraftExpressions {
   def clamp_u8(c: Column): Column = col(ClampInt(ex(c), 0L, 255L))
   def clamp_u16(c: Column): Column = col(ClampInt(ex(c), 0L, 65535L))
   def clamp_u32(c: Column): Column = col(ClampInt(ex(c), 0L, 4294967295L))
-  def clamp_i32(c: Column): Column =
-    col(ClampInt(ex(c), Int.MinValue.toLong, Int.MaxValue.toLong))
   def clamp_i64(c: Column): Column = col(ClampInt(ex(c), Long.MinValue, Long.MaxValue))
   def parse_f32(c: Column): Column = col(ParseF32(ex(c)))
   def date_epoch(c: Column): Column = col(DateEpoch(ex(c)))

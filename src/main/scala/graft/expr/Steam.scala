@@ -236,10 +236,6 @@ object Steam {
     else playerSubjectIdU(raw)
   }
 
-  /** Steam account id (u32) if the packed id is a Player, else -1. */
-  def accountOf(packed: Long): Long =
-    if (packedKind(packed) == K_PLAYER.toInt) packedValue(packed) else -1L
-
   def steam64(account: Long): Long = STEAM64_BASE + account
 
   def steam3(account: Long): String = "[U:1:" + account + "]"

@@ -1,36 +1,27 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** Handler composition (SURVEY.md §2.9): the Spark analogue of the
-  * reference's `handler!` macro / `HandlerStack` (module/mod.rs:71-226) and
-  * of user compositions like examples/combine_handlers.rs (chat + lobby).
+  * reference's `handler!` macro / `HandlerStack` (module/mod.rs:71-226).
   *
-  * A module is a `DataFrame -> DataFrame` aggregate stage over the routed
-  * frame; per-player modules key on `(doc_id, sid)` and are assembled with
-  * full-outer joins (the reference iterates one SubjectMap, so every subject
-  * appears in every module's output slot); global modules key on `doc_id`.
-  * Users add custom modules by extending the maps -- the analogue of
-  * implementing `EventHandler` (examples/custom_handler.rs).
+  * A per-player module is a `DataFrame -> DataFrame` stage over the routed
+  * frame keyed on `(doc_id, sid)`, assembled with left joins onto the
+  * player subjects (the reference iterates one SubjectMap, so every subject
+  * appears in every module's output slot). Users add custom modules by
+  * extending the map -- the analogue of implementing `EventHandler`
+  * (examples/custom_handler.rs).
   */
 object Handlers {
 
   /** (routed, dim) -> frame keyed (doc_id, sid). */
   type PerPlayerModule = (DataFrame, DataFrame) => DataFrame
 
-  /** (routed, dim) -> frame keyed (doc_id). */
-  type GlobalModule = (DataFrame, DataFrame) => DataFrame
-
   val perPlayerModules: Map[String, PerPlayerModule] = Map(
     "class_stats" -> ((r, _) => TfPipeline.classStats(r)),
     "heal_spread" -> ((r, _) => TfPipeline.healSpread(r)),
     "medic_stats" -> ((r, _) => TfPipeline.medicStats(r))
-  )
-
-  val globalModules: Map[String, GlobalModule] = Map(
-    "chat" -> ((r, dim) => TfPipeline.chat(r, dim)),
-    "lobby" -> ((r, _) => Lobby.lobbySettings(r))
   )
 
   /** Example custom module (HighestDamage, examples/custom_handler.rs:29-56):
@@ -49,10 +40,9 @@ object Handlers {
     *
     * NOTE: this generic composition left-joins each module's arbitrary
     * schema; the BUILT-IN assembly (TfPipeline.perPlayerAssembled) instead
-    * merges the fixed module set with a null-padded union + one
-    * first(ignoreNulls) aggregate -- measurably cheaper (left-outer SMJ of
-    * even tiny sides costs ~3s each at 4M rows) and the pattern to follow
-    * when a custom composition grows past a couple of modules. */
+    * folds the built-in modules in one per-doc pass cogrouped with the
+    * player rows, with no join at all (left-outer SMJ of even tiny sides
+    * costs ~3s each at 4M rows). */
   def composePerPlayer(
       routed: DataFrame,
       dim: DataFrame,
@@ -67,16 +57,5 @@ object Handlers {
     modules
       .foldLeft(players) { case (acc, (_, m)) => acc.join(m(routed, dim), Seq("doc_id", "sid"), "left") }
       .orderBy("doc_id", "steam64")
-  }
-
-  /** Compose global modules: one row per doc with each module's output
-    * columns (missing docs -> nulls, like empty GlobalOutput sections). */
-  def composeGlobal(
-      routed: DataFrame,
-      dim: DataFrame,
-      modules: Seq[(String, GlobalModule)]
-  ): DataFrame = {
-    val docs = routed.select(col("doc_id")).distinct()
-    modules.foldLeft(docs) { case (acc, (_, m)) => acc.join(m(routed, dim), Seq("doc_id"), "left") }
   }
 }

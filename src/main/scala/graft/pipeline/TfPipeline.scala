@@ -3,16 +3,18 @@ package graft.pipeline
 import graft.expr.GraftExpressions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset}
 
 /** The parse -> enrich -> route -> aggregate pipeline over the tokenized
   * sequence table `(doc_id, line_no, source, tokens, n_tok)`.
   *
   * Spark-first design (SURVEY.md §3.1): every stage is a declarative
   * DataFrame transform built from native expressions, so Catalyst keeps
-  * column pruning / filter pushdown, and all heavy operators are windows,
-  * hash aggregates and co-partitioned joins keyed by `(doc_id, subject)` --
-  * no cross-document shuffle anywhere except the final sink.
+  * column pruning / filter pushdown. The heavy operators are the per-doc
+  * classification windows, one per-doc sorted pass that folds the
+  * per-player modules ([[PlayerModules]]), and aggregates and joins keyed
+  * by `(doc_id, subject)` -- no cross-document shuffle anywhere except the
+  * final sink.
   *
   * Quirk fidelity notes are in SURVEY.md §7 risk 3 and graft.expr.LineParser.
   */
@@ -39,16 +41,6 @@ object TfPipeline {
   )
 
   private val wDoc = Window.partitionBy("doc_id").orderBy("line_no")
-
-  /** IEEE f32 division (NaN/Inf on zero divisor), ANSI-mode safe. The
-    * reference's averages divide by possibly-zero f32 counts. */
-  private def f32div(n: Column, d: Column): Column = {
-    val nf = n.cast("float")
-    val df = d.cast("float")
-    when(df === 0f, when(nf === 0f, lit(Float.NaN)).otherwise(lit(Float.PositiveInfinity)))
-      .otherwise(nf / df) // Spark division promotes to double...
-      .cast("float") // ...so narrow back to the reference's f32
-  }
 
   // -------------------------------------------------------------------------
   // Stage 1+2: decode + envelope
@@ -253,27 +245,15 @@ object TfPipeline {
   }
 
   /** Shared derivation: surviving handled rows (flattened, with ts) -> the
-    * routed frame consumed by every module aggregate. The two ordered windows
-    * share the classification pass's (doc_id) partitioning + line_no sort. */
+    * routed frame consumed by every module. The one ordered window shares the
+    * classification pass's (doc_id) partitioning + line_no sort, and leaves
+    * the frame clustered by doc and sorted by line for the module pass. */
   private def deriveRouted(filtered: DataFrame): DataFrame = {
     filtered
       .withColumn("start_ts", first(col("ts")).over(wDoc))
       .withColumn("time", pmod(col("ts") - col("start_ts"), lit(4294967296L)))
-      // round-active gate (A13) hoisted here so the one ordered-window pass
-      // is shared by every consumer of the (persisted) routed frame
-      .withColumn(
-        "active",
-        coalesce(
-          last(
-            when(col("event_type") === "round_start", lit(true))
-              .when(col("event_type") === "round_win", lit(false)),
-            ignoreNulls = true
-          ).over(wDoc),
-          lit(false)
-        )
-      )
       .select("doc_id", "line_no", "source", "kind", "subject", "event_type", "ts",
-        "sid", "time", "active", "text", "target_raw", "target_kind", "healing",
+        "sid", "time", "text", "target_raw", "target_kind", "healing",
         "dmg", "charge", "duration", "f_time", "class_str")
   }
 
@@ -359,7 +339,7 @@ object TfPipeline {
 
   /** (doc_id, bkey, claimant): which player-interned subject claims each
     * deaths bucket -- the first-seen subject per (doc, death_key), as a
-    * single min_by hash aggregate (no sort/window; first_line is unique per
+    * single min_by aggregate (no window; first_line is unique per
     * subject within a doc, sid is a formal tiebreak). */
   private def deathClaims(dim: DataFrame): DataFrame =
     dim
@@ -401,7 +381,7 @@ object TfPipeline {
   }
 
   // -------------------------------------------------------------------------
-  // Stage 5: module aggregations
+  // Stage 5: modules
   // -------------------------------------------------------------------------
 
   /** Chat (A6 + J2): ordered player messages with first-seen identity. */
@@ -432,376 +412,106 @@ object TfPipeline {
       )
   }
 
-  /** Heal spread (A5): per (healer, target) healing sums, u32 wrapping. */
-  def healSpread(routedDf: DataFrame): DataFrame = {
+  /** The routed frame as the module fold's input: grouped by doc, each doc's
+    * lines in line order. `routed` is already classified and carries the u32
+    * `time`, so the fold only steps. The routed frame is clustered by doc and
+    * sorted by line (the `start_ts` window), so the grouping plans no
+    * exchange and no sort. */
+  private def docLines(routedDf: DataFrame): KeyValueGroupedDataset[String, PlayerModules.RoutedLine] = {
+    import routedDf.sparkSession.implicits._
     routedDf
-      .filter(col("event_type") === "healed")
-      .withColumn("target_sid", against_subject_id(col("target_raw")))
-      .filter(shiftrightunsigned(col("target_sid"), 32) === 1)
-      .withColumn("amount", coalesce(col("healing"), lit(0L)))
-      .groupBy(col("doc_id"), col("sid"), (col("target_sid").bitwiseAND(lit(0xffffffffL))).as("target_account"))
-      .agg(pmod(sum(col("amount")), lit(4294967296L)).as("healing"))
-      .groupBy(col("doc_id"), col("sid"))
-      .agg(
-        map_from_entries(
-          sort_array(collect_list(struct(col("target_account"), col("healing"))))
-        ).as("heals_by_account")
-      )
+      .select(col("doc_id"), col("line_no"), col("time"), col("sid"), col("event_type"),
+        col("charge"), col("duration"), col("f_time"), col("class_str"), col("target_kind"),
+        col("target_raw"), col("dmg").as("dmgOpt"), col("healing").as("healingOpt"))
+      .groupBy(col("doc_id"))
+      .as[String, PlayerModules.RoutedLine]
   }
 
-  /** Medic stats (A7-A10): windowed state machines per (doc, medic). */
-  def medicStats(routedDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id", "sid").orderBy("line_no")
-    val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    val ty = col("event_type")
-    val frame = routedDf
-      .filter(ty.isInCollection(MedicTypes))
-      // last FirstHeal before this row (value + line), last ChargeReady line,
-      // last ChargeEnded time: the sequential state, as ordered windows
-      .withColumn("fh_time", last(when(ty === "first_heal", col("time")), ignoreNulls = true).over(wPrev))
-      .withColumn("fh_line", last(when(ty === "first_heal", col("line_no")), ignoreNulls = true).over(wPrev))
-      .withColumn("cr_line", last(when(ty === "charge_ready", col("line_no")), ignoreNulls = true).over(wPrev))
-      .withColumn("uber_end", coalesce(last(when(ty === "charge_ended", col("time")), ignoreNulls = true).over(wPrev), lit(0L)))
-      .withColumn(
-        "build_consume",
-        ty === "charge_ready" && col("fh_line").isNotNull && col("fh_time") > 0 &&
-          (col("cr_line").isNull || col("fh_line") > col("cr_line"))
-      )
-      .withColumn("build_time", greatest(col("time") - col("fh_time"), lit(0L)))
-
-    frame
-      .groupBy(col("doc_id"), col("sid"))
-      .agg(
-        count(when(ty === "advantage_lost", 1)).as("advantages_lost"),
-        greatest(coalesce(max(when(ty === "advantage_lost", col("f_time"))), lit(0f)), lit(0f))
-          .as("biggest_advantage_lost"), // only updated when time > current (starts 0)
-        count(when(ty === "medic_death" && col("charge") >= 95 && col("charge") < 100, 1)).as("near_full_charge_death"),
-        count(when(ty === "medic_death" && greatest(col("time") - col("uber_end"), lit(0L)) <= 10, 1)).as("deaths_after_uber"),
-        sum(when(ty === "first_heal", col("f_time")).otherwise(lit(0f))).as("total_time_before_healing"),
-        count(when(ty === "first_heal", 1)).as("start_healing_count"),
-        sum(when(col("build_consume"), col("build_time")).otherwise(lit(0L))).as("total_time_to_build"),
-        count(when(col("build_consume"), 1)).as("uber_build_count"),
-        sum(when(ty === "charge_ended", col("duration")).otherwise(lit(0f))).as("total_uber_length"),
-        count(when(ty === "charge_deployed", 1)).as("charge_count"),
-        count(when(ty === "medic_death" && col("charge") >= 100, 1)).as("drops")
-      )
-      .withColumn(
-        "medic",
-        when(
-          col("start_healing_count") > 0,
-          struct(
-            col("advantages_lost"),
-            col("biggest_advantage_lost"),
-            col("near_full_charge_death"),
-            col("deaths_after_uber"),
-            f32div(col("total_time_before_healing"), col("start_healing_count")).as("avg_time_before_healing"),
-            f32div(col("total_time_to_build"), col("uber_build_count")).as("avg_time_to_build"),
-            f32div(lit(0f), col("charge_count")).as("avg_time_to_use"), // never accrued (reference quirk)
-            f32div(col("total_uber_length"), col("charge_count")).as("avg_uber_length"),
-            col("charge_count"),
-            col("drops")
-          )
-        ).otherwise(medicDefault)
-      )
-      .select("doc_id", "sid", "medic")
+  /** The per-doc pass of the per-player modules: each doc folded through the
+    * medic, classStats and healSpread steps of [[PlayerModules]] (the steps
+    * the stream runs). One row per (doc, sid) that any module keys: `kills`,
+    * bucket-keyed `deaths`, `assists`, `damage` (u16-saturated),
+    * `heals_by_account` and `medic`, each null where that module emits no
+    * row. */
+  private def modulePass(routedDf: DataFrame): DataFrame = {
+    import routedDf.sparkSession.implicits._
+    docLines(routedDf)
+      .flatMapSortedGroups(col("line_no"))((doc, lines) =>
+        PlayerModules.moduleRows(doc, PlayerModules.foldDoc(lines)))
+      .toDF()
   }
 
-  /** Class stats (A1-A4 + J3 as-of class lookup + A13 round gate).
-    *
-    * Single-scan formulation: each routed row emits its state/consumer
-    * contributions as an inline array that is exploded once -- ONE pass over
-    * the (possibly cached or store-read) input instead of six filtered
-    * re-scans, one exchange on (doc_id, key). Semantics identical to the
-    * reference's per-event handler calls (classstats.rs:61-109). */
-  def classStats(routedDf: DataFrame): DataFrame = {
-    val ty = col("event_type")
-    val base = routedDf.filter(
-      ty.isin("kill", "kill_assist", "damage", "spawned", "role_change", "round_start", "round_win")
-    )
+  /** Heal spread (A5): per (healer, target account) healing sums, u32
+    * wrapping, as a map in target-account order. A projection of the pass. */
+  def healSpread(routedDf: DataFrame): DataFrame =
+    modulePass(routedDf).filter(col("heals_by_account").isNotNull)
+      .select("doc_id", "sid", "heals_by_account")
 
-    // `ord` = within-line evaluation order, mirroring the reference's
-    // statement order inside one Killed event (classstats.rs:81-88):
-    //   0 = the death consumer's attacker-entry lookup (`self.data.get
-    //       (&subject)` runs BEFORE the target entry is created, so a
-    //       self-kill by a never-seen subject finds NO attacker entry),
-    //   1 = state rows (spawn/role class sets, kill target-entry creation),
-    //   2 = consumers that read AFTER creation (the kill's target-class
-    //       read sees the entry `data_mut` just created).
-    def entry(key: Column, cls: Column, isState: Column, role: Column, other: Column, dmg: Column,
-              ord: Int) =
-      struct(key.as("key"), cls.as("cls"), isState.as("is_state"), role.as("role"),
-        other.as("other"), dmg.as("dmg"), lit(ord).as("ord"))
+  /** Medic stats (A7-A10) per (doc, medic). A projection of the pass. */
+  def medicStats(routedDf: DataFrame): DataFrame =
+    modulePass(routedDf).filter(col("medic").isNotNull).select("doc_id", "sid", "medic")
 
-    val nullS = lit(null.asInstanceOf[String])
-    val nullL = lit(null.asInstanceOf[Long])
-
-    val killTargetSid =
-      when(col("target_kind") === "player", player_subject_id(col("target_raw")))
-        .when(col("target_kind") === "console", lit(graft.expr.Steam.K_CONSOLE << 32))
-        .when(col("target_kind") === "team", lit((graft.expr.Steam.K_TEAM << 32) | 2L))
-        .otherwise(lit(graft.expr.Steam.K_SYSTEM << 32))
-
-    // a missing `against` defaults the target to System("unknown") in the
-    // reference (player.rs:19-21 default attr); its class resolves only if a
-    // kill ever created a System entry
-    val damageTarget = coalesce(
-      against_subject_id(col("target_raw")),
-      lit(graft.expr.Steam.K_SYSTEM << 32)
-    )
-
-    val contribs =
-      // class change: one state entry
-      when(
-        ty.isin("spawned", "role_change") && col("class_str").isNotNull,
-        array(entry(col("sid"), col("class_str"), lit(1), nullS, nullL, nullL, 1))
-      )
-        // active kill: target-entry creation (state) + kill/death consumers;
-        // the death consumer ('ka', keyed by the ATTACKER) evaluates at
-        // ord=0 -- before this line's own target-entry state row -- so a
-        // self-kill without a prior entry counts NO death, like the
-        // reference (and the streaming machine)
-        .when(
-          ty === "kill" && col("active"),
-          array(
-            entry(col("tsid"), nullS, lit(1), nullS, nullL, nullL, 1),
-            entry(col("tsid"), nullS, lit(0), lit("kt"), col("sid"), nullL, 2),
-            entry(col("sid"), nullS, lit(0), lit("ka"), col("tsid"), nullL, 0)
-          )
-        )
-        .when(
-          ty === "kill_assist" && col("active"),
-          array(entry(against_subject_id(col("target_raw")), nullS, lit(0), lit("at"), col("sid"), nullL, 2))
-        )
-        .when(
-          ty === "damage" && col("active") && col("dmg") > 0 && col("dmg") < 1500,
-          array(entry(damageTarget, nullS, lit(0), lit("dt"), col("sid"), col("dmg"), 2))
-        )
-        .otherwise(array().cast(
-          "array<struct<key:bigint,cls:string,is_state:int,role:string,other:bigint,dmg:bigint,ord:int>>"
-        ))
-
-    val union = base
-      .withColumn("tsid", killTargetSid)
-      .select(col("doc_id"), col("line_no"), explode(contribs).as("e"))
-      .select(
-        col("doc_id"),
-        col("e.key").as("key"),
-        col("line_no"),
-        col("e.cls").as("cls"),
-        col("e.is_state").as("is_state"),
-        col("e.role").as("role"),
-        col("e.other").as("other"),
-        col("e.dmg").as("dmg"),
-        col("e.ord").as("ord")
-      )
-
-    // ---- as-of lookups per (doc, key): within one line, rows order by
-    // `ord` (death lookup < state insert < class read -- the reference's
-    // statement order inside a Killed event)
-    val wKey = Window
-      .partitionBy("doc_id", "key")
-      .orderBy(col("line_no"), col("ord"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val looked = union
-      .withColumn("last_cls", last(col("cls"), ignoreNulls = true).over(wKey))
-      .withColumn("entry_before", count(when(col("is_state") === 1, 1)).over(wKey) > 0)
-      .filter(col("is_state") === 0)
-      .withColumn("cls_eff", coalesce(col("last_cls"), lit("unknown")))
-
-    // deaths require the ATTACKER to have an entry; its class may still be
-    // unknown (entry created as a kill target) -- classstats.rs:81-86
-    val cells = ClassNames.zipWithIndex.flatMap { case (c, i) =>
-      Seq(
-        least(sum(when(col("role") === "kt" && col("cls_eff") === c, 1L).otherwise(0L)), lit(65535L)).as(s"k_$i"),
-        least(sum(when(col("role") === "ka" && col("entry_before") && col("cls_eff") === c, 1L).otherwise(0L)), lit(65535L)).as(s"d_$i"),
-        least(sum(when(col("role") === "at" && col("entry_before") && col("cls_eff") === c, 1L).otherwise(0L)), lit(65535L)).as(s"a_$i"),
-        least(sum(when(col("role") === "dt" && col("entry_before") && col("cls_eff") === c, col("dmg")).otherwise(0L)), lit(65535L)).as(s"g_$i")
-      )
-    }
-
-    looked
-      .groupBy(col("doc_id"), col("other").as("sid"))
-      .agg(cells.head, cells.tail: _*)
-      .select(
-        col("doc_id"),
-        col("sid"),
-        array((0 until 10).map(i => col(s"k_$i")): _*).as("kills"),
-        array((0 until 10).map(i => col(s"d_$i")): _*).as("deaths"),
-        array((0 until 10).map(i => col(s"a_$i")): _*).as("assists"),
-        array((0 until 10).map(i => col(s"g_$i")): _*).as("damage")
-      )
-  }
+  /** Class stats (A1-A4 + J3 as-of class lookup + A13 round gate) per
+    * (doc, beneficiary), deaths keyed by bucket. A projection of the pass. */
+  def classStats(routedDf: DataFrame): DataFrame =
+    modulePass(routedDf).filter(col("kills").isNotNull)
+      .select("doc_id", "sid", "kills", "deaths", "assists", "damage")
 
   // -------------------------------------------------------------------------
   // Stage 6: output assembly (J5)
   // -------------------------------------------------------------------------
-
-  private def zeroArr = array((0 until 10).map(_ => lit(0L)): _*)
-  private def medicDefault = struct(
-    lit(0L).as("advantages_lost"),
-    lit(0f).as("biggest_advantage_lost"),
-    lit(0L).as("near_full_charge_death"),
-    lit(0L).as("deaths_after_uber"),
-    lit(0f).as("avg_time_before_healing"),
-    lit(0f).as("avg_time_to_build"),
-    lit(0f).as("avg_time_to_use"),
-    lit(0f).as("avg_uber_length"),
-    lit(0L).as("charge_count"),
-    lit(0L).as("drops")
-  )
 
   /** Per-player assembled output for every interned PLAYER subject, ordered
     * by (doc_id, steam64). */
   def perPlayer(routedDf: DataFrame, dim: DataFrame): DataFrame =
     perPlayerAssembled(routedDf, dim)
       // materialization boundary before the global output sort: the range
-      // partitioner's sampling pass re-executes its child, and the join tree
+      // partitioner's sampling pass re-executes its child, and the tree
       // above is deliberately exchange-free on top of the (doc_id)-clustered
-      // routed frame -- without this shuffle the sampler would recompute
-      // every module aggregate a second time. One extra exchange of the
-      // tiny per-player output buys single execution of the heavy tree.
+      // routed frame -- without this shuffle the sampler would run the
+      // module pass a second time. One extra exchange of the tiny per-player
+      // output buys single execution of the heavy tree.
       .repartition(col("doc_id"))
       .orderBy("doc_id", "steam64")
-
-  private val medicTypeDdl =
-    "struct<advantages_lost:bigint,biggest_advantage_lost:float," +
-      "near_full_charge_death:bigint,deaths_after_uber:bigint," +
-      "avg_time_before_healing:float,avg_time_to_build:float," +
-      "avg_time_to_use:float,avg_uber_length:float,charge_count:bigint,drops:bigint>"
 
   /** [[perPlayer]] without the ordered-output contract (the assembly only) --
     * separately timeable, and the right shape for sinks that do their own
     * partitioning.
     *
-    * Assembly is a SINGLE-PASS merge, not a join chain: each module's
-    * (doc_id, sid)-keyed output contributes one null-padded row to a union
-    * that ONE aggregate collapses with first(_, ignoreNulls) -- exact because
-    * every module emits at most one row per key (J5 semantics). One exchange
-    * of already-aggregated rows replaces three left-outer sort-merge joins
-    * (each of which costs two exchanges plus a merge pass), and the shape is
-    * skew-free at 100 TB because the key space is (doc, player). */
+    * ONE per-doc pass: each doc's routed lines, in line order, cogrouped
+    * with the doc's dim rows -- every player subject with its name, and
+    * every death claim of [[claimDeaths]]' keying. The pass folds the
+    * [[PlayerModules]] steps and emits one row per player: its kills,
+    * assists, damage, heals and medic, and the deaths of the bucket it
+    * claims (zeros where a module has none). Both sides are keyed by doc
+    * alone, so over the doc-clustered routed frame and a dim derived from it
+    * the pass plans no exchange; the key space is (doc, player), so the
+    * shape is skew-free at 100 TB. */
   def perPlayerAssembled(routedDf: DataFrame, dim: DataFrame): DataFrame = {
-    // Persist-MARKED but unmaterialized inputs are populated serially before
-    // the assembly job WHEN the routed frame itself is cached: the union
-    // fans out into ~6 root stages that all scan the cached frames, and
-    // cold-cache population of the expensive parse + dim lineages under that
-    // concurrency (per-block locking, stage-scheduling interleave) measured
-    // ~1.4x the serial-materialize-then-run sequence at 4M rows (BASELINE.md,
-    // "Round-6 assembly materialization order": serial phases sum ~10.5 s
-    // vs lazy pipelineOnce 15.1 s; both-eager 11.2 s; routed-only 14.4 s).
-    // Keyed on ROUTED being cached because the parquet-store path (routed
-    // unpersisted, dim persisted) measured the OPPOSITE: a serial dim pass
-    // there is a full extra store scan the lazy plan overlapped with the
-    // fan-out's own scans (+1.5 s at sf0.1). A
-    // no-op for fully-unpersisted inputs (Verify keeps its one-pass shape).
-    if (routedDf.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      routedDf.count()
-      if (dim.storageLevel != org.apache.spark.storage.StorageLevel.NONE) { dim.count(); () }
-    }
-    val players = dim
+    import routedDf.sparkSession.implicits._
+    // the dim side: each player's name, and the bucket each claimant claims
+    val dimRows = dim
       .filter(shiftrightunsigned(col("sid"), 32) === 1) // SubjectId::steam_id() is Some
-      .withColumn("account", col("sid").bitwiseAND(lit(0xffffffffL)))
-      .withColumn("steam3", concat(lit("[U:1:"), col("account"), lit("]")))
-      .withColumn("steam64", col("account") + lit(graft.expr.Steam.STEAM64_BASE))
+      .select(col("doc_id"), col("sid"), col("name"), lit(null).cast("bigint").as("bkey"))
+      .unionByName(deathClaims(dim).select(col("doc_id"), col("claimant").as("sid"),
+        lit(null).cast("string").as("name"), col("bkey")))
+      .groupBy(col("doc_id"))
+      .as[String, PlayerModules.DimRow]
 
-    val nStr = lit(null).cast("string")
-    val nLong = lit(null).cast("bigint")
-    val nArr = lit(null).cast("array<bigint>")
-    val nMap = lit(null).cast("map<bigint,bigint>")
-    val nMedic = lit(null).cast(medicTypeDdl)
-
-    def leg(df: DataFrame, cols: Column*): DataFrame =
-      df.select(Seq(col("doc_id"), col("sid")) ++ cols: _*)
-
-    // deaths are BUCKET-keyed in classStats output (raw kill-target interned
-    // id); the reference's finalize re-keys them by the claiming subject's
-    // SubjectData-id (classstats.rs:113-120, see [[claimDeaths]] for the
-    // semantics). Shape note: classStats is deliberately consumed ONCE --
-    // a second reference to its (explode + window + agg) subtree would
-    // re-execute it wholesale (measured 3x on the assembly leg). The tiny
-    // dim-derived claim mapping left-joins onto the aggregated cs rows
-    // (co-partitioned on (doc_id, sid): the join reuses cs's groupBy
-    // partitioning, only the claims side exchanges), and ONE explode emits
-    // both the in-place row (deaths kept when self-claimed) and the
-    // redirect row (deaths moved to a differing claimant) -- for every
-    // non-pathological subject this reduces to "deaths of my own bucket".
-    val cs = classStats(routedDf).alias("cs")
-    val claims = deathClaims(dim).withColumnRenamed("doc_id", "cl_doc")
-    val csClaimed = cs
-      .join(claims, col("cs.doc_id") === col("cl_doc") && col("cs.sid") === col("bkey"), "left")
-      .select(
-        col("cs.doc_id").as("doc_id"),
-        explode(
-          array(
-            struct(
-              col("cs.sid").as("sid"),
-              col("kills").as("kills"),
-              when(col("claimant") === col("cs.sid"), col("deaths")).as("deaths"),
-              col("assists").as("assists"),
-              col("damage").as("damage")
-            ),
-            struct(
-              when(col("claimant") =!= col("cs.sid"), col("claimant")).as("sid"),
-              nArr.as("kills"),
-              col("deaths").as("deaths"),
-              nArr.as("assists"),
-              nArr.as("damage")
-            )
-          )
-        ).as("e")
-      )
-      .select(col("doc_id"), col("e.sid").as("sid"), col("e.kills").as("kills"),
-        col("e.deaths").as("deaths"), col("e.assists").as("assists"), col("e.damage").as("damage"))
-      .filter(col("sid").isNotNull)
-
-    val unioned =
-      leg(players, col("steam3"), col("steam64"), col("name"),
-        nArr.as("kills"), nArr.as("deaths"), nArr.as("assists"), nArr.as("damage"),
-        nMap.as("heals_by_account"), nMedic.as("medic"))
-        .unionByName(leg(csClaimed, nStr.as("steam3"), nLong.as("steam64"), nStr.as("name"),
-          col("kills"), col("deaths"), col("assists"), col("damage"),
-          nMap.as("heals_by_account"), nMedic.as("medic")))
-        .unionByName(leg(healSpread(routedDf), nStr.as("steam3"), nLong.as("steam64"), nStr.as("name"),
-          nArr.as("kills"), nArr.as("deaths"), nArr.as("assists"), nArr.as("damage"),
-          col("heals_by_account"), nMedic.as("medic")))
-        .unionByName(leg(medicStats(routedDf), nStr.as("steam3"), nLong.as("steam64"), nStr.as("name"),
-          nArr.as("kills"), nArr.as("deaths"), nArr.as("assists"), nArr.as("damage"),
-          nMap.as("heals_by_account"), col("medic")))
-
-    unioned
-      .groupBy(col("doc_id"), col("sid"))
-      .agg(
-        first(col("steam3"), ignoreNulls = true).as("steam3"),
-        first(col("steam64"), ignoreNulls = true).as("steam64"),
-        first(col("name"), ignoreNulls = true).as("name"),
-        first(col("kills"), ignoreNulls = true).as("kills"),
-        first(col("deaths"), ignoreNulls = true).as("deaths"),
-        first(col("assists"), ignoreNulls = true).as("assists"),
-        first(col("damage"), ignoreNulls = true).as("damage"),
-        first(col("heals_by_account"), ignoreNulls = true).as("heals_by_account"),
-        first(col("medic"), ignoreNulls = true).as("medic")
-      )
-      // module rows whose subject never interned as a player (bots, world)
-      // have no players leg -> excluded, exactly like the old players-side
-      // left join
-      .filter(col("steam3").isNotNull)
+    docLines(routedDf)
+      .cogroupSorted(dimRows)(col("line_no"))()((doc, lines, dimOfDoc) =>
+        PlayerModules.playerRows(doc, PlayerModules.foldDoc(lines), dimOfDoc))
       .select(
         col("doc_id"),
-        col("steam3"),
-        col("steam64"),
+        concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3"),
+        (col("sid").bitwiseAND(lit(0xffffffffL)) + lit(graft.expr.Steam.STEAM64_BASE)).as("steam64"),
         col("name"),
-        coalesce(col("kills"), zeroArr).as("kills"),
-        coalesce(col("deaths"), zeroArr).as("deaths"),
-        coalesce(col("assists"), zeroArr).as("assists"),
-        coalesce(col("damage"), zeroArr).as("damage"),
-        transform_keys(
-          coalesce(
-            col("heals_by_account"),
-            map_from_entries(array().cast("array<struct<target_account:long,healing:long>>"))
-          ),
-          (k, _) => concat(lit("[U:1:"), k, lit("]"))
-        ).as("heals"),
-        coalesce(col("medic"), medicDefault).as("medic")
+        col("kills"),
+        col("deaths"),
+        col("assists"),
+        col("damage"),
+        transform_keys(col("heals_by_account"), (k, _) => concat(lit("[U:1:"), k, lit("]"))).as("heals"),
+        col("medic")
       )
   }
 

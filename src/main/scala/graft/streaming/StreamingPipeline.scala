@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.expr.GraftExpressions._
-import graft.pipeline.TfPipeline
+import graft.pipeline.{PlayerModules, TfPipeline}
+import graft.pipeline.PlayerModules.{ClassDocState, MedicAcc, MedicStats}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -11,17 +12,17 @@ import scala.reflect.runtime.universe.TypeTag
 /** Structured Streaming twins of the batch layers, for the ingest side
   * (SURVEY.md §2.8). Two kinds of operator live here:
   *
-  *  - stateless or key-only state: the batch envelope over a streaming
-  *    reader with watermarked, windowed per-event-type counts
-  *    ([[routedCounts]]); first-arrival-wins exact dedup whose state the
+  *  - key-only state: first-arrival-wins exact dedup whose state the
   *    watermark evicts ([[dedupExactStream]]); MinHash-LSH candidate pairs
   *    at arrival from a capped per-bucket machine ([[lshCandidatesStream]]);
   *  - the reference's sequential per-doc pass (lib.rs:58-104: recovery
   *    lookahead, doc abort, doc-relative time) over micro-batches: one
   *    driver, [[perDoc]], owns that pass, and the medic, classStats,
   *    healSpread and chat modules each supply only their own state, their
-  *    step for a surviving line, and their output rows. Each is
-  *    differential-tested against its batch [[TfPipeline]] twin.
+  *    step for a surviving line, and their output rows. The first three
+  *    run the steps of [[graft.pipeline.PlayerModules]], which the batch
+  *    module pass folds too; the stream adds the multi-batch split, replay
+  *    and tombstone behaviour, differential-tested against batch.
   */
 object StreamingPipeline {
 
@@ -34,23 +35,6 @@ object StreamingPipeline {
       StructField("n_tok", IntegerType)
     )
   )
-
-  /** Streaming envelope: the batch [[TfPipeline.envelope]] over a streaming
-    * reader (stateless -> identical semantics per row), with `ts` as an
-    * event-time timestamp for watermarks. */
-  def envelopeStream(spark: SparkSession, dir: String): DataFrame =
-    TfPipeline
-      .envelope(spark.readStream.schema(inputSchema).parquet(dir))
-      .withColumn("ts", timestamp_seconds(col("ts")))
-
-  /** Windowed routed counts: 5-minute event-time windows per event type with
-    * a 10-minute watermark for late lines. */
-  def routedCounts(env: DataFrame): DataFrame =
-    env
-      .filter(col("status") === 0)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
 
   /** Streaming exact deduplication (ingest-side first-arrival-wins): keep
     * each content key's first-arriving row, drop every later duplicate --
@@ -164,7 +148,7 @@ object StreamingPipeline {
       target_raw: String,
       dmgOpt: Option[Long],
       healingOpt: Option[Long]
-  )
+  ) extends PlayerModules.ModuleLine
 
   /** The sequential recovery machine's control state (lib.rs:58-104).
     * `pendingConsumeTs` is Some(errTs) when the NEXT line is consumed by a
@@ -290,11 +274,6 @@ object StreamingPipeline {
       )
   }
 
-  /** IEEE f32 division with the batch f32div's exact semantics. */
-  private def f32div(n: Float, d: Float): Float =
-    if (d == 0f) { if (n == 0f) Float.NaN else Float.PositiveInfinity }
-    else (n.toDouble / d.toDouble).toFloat
-
   private def u32(v: Long): Long = v & 0xffffffffL
 
   /** Latest emission per (doc, sid) from an accumulating (Update-mode) sink
@@ -308,28 +287,9 @@ object StreamingPipeline {
   }
 
   // ---------------------------------------------------------------------
-  // Streaming medic module
+  // The per-player modules: the steps of graft.pipeline.PlayerModules, the
+  // same ones the batch module pass folds
   // ---------------------------------------------------------------------
-
-  /** Mutable-free per-medic accumulator mirroring TfPipeline.medicStats'
-    * aggregate columns (sums kept in double like Spark's FloatType sum). */
-  final case class MedicAcc(
-      advantagesLost: Long = 0L,
-      biggestAdv: Float = 0f,
-      nearFull: Long = 0L,
-      deathsAfterUber: Long = 0L,
-      totalBeforeHeal: Double = 0d,
-      healCount: Long = 0L,
-      totalBuild: Long = 0L,
-      buildCount: Long = 0L,
-      totalUber: Double = 0d,
-      chargeCount: Long = 0L,
-      drops: Long = 0L,
-      // sequential machine bits (batch twin: fh/cr line windows)
-      lastFhTime: Long = 0L,
-      fhSinceLastCr: Boolean = false,
-      uberEnd: Long = 0L
-  )
 
   final case class MedicRow(
       doc_id: String,
@@ -350,90 +310,22 @@ object StreamingPipeline {
       up_to: Long
   )
 
-  /** Streaming medic stats on the per-doc machine: per-medic accumulators
-    * (state: medic sid -> [[MedicAcc]]) exactly equal to the batch
-    * [[TfPipeline.medicStats]]. Emits the current per-(doc, medic) stats
-    * every batch; an aborted doc emits a single tombstone row (sid = -1,
-    * aborted = true) and nothing after, mirroring the batch path's
-    * whole-doc exclusion. */
-  def medicStatsStream(spark: SparkSession, seq: DataFrame): DataFrame =
+  private def medicRow(doc: String, sid: Long, aborted: Boolean, m: MedicStats, upTo: Long): MedicRow =
+    MedicRow(doc, sid, aborted, m.advantages_lost, m.biggest_advantage_lost, m.near_full_charge_death,
+      m.deaths_after_uber, m.avg_time_before_healing, m.avg_time_to_build, m.avg_time_to_use,
+      m.avg_uber_length, m.charge_count, m.drops, upTo)
+
+  /** Streaming medic stats on the per-doc machine (state: medic sid ->
+    * [[MedicAcc]]). Emits the current per-(doc, medic) stats every batch;
+    * an aborted doc emits a single tombstone row (sid = -1, aborted = true)
+    * and nothing after, mirroring the batch path's whole-doc exclusion. */
+  def medicStatsStream(seq: DataFrame): DataFrame =
     perDoc[Map[Long, MedicAcc], MedicRow](seq, Map.empty)(
-      step = (_, medics, l, time, _) =>
-        if (!TfPipeline.MedicTypes.contains(l.event_type)) medics
-        else {
-          val a = medics.getOrElse(l.sid, MedicAcc())
-          val b = l.event_type match {
-            case "first_heal" =>
-              a.copy(
-                totalBeforeHeal = a.totalBeforeHeal + l.f_time,
-                healCount = a.healCount + 1,
-                lastFhTime = time,
-                fhSinceLastCr = true
-              )
-            case "charge_ready" =>
-              val consume = a.fhSinceLastCr && a.lastFhTime > 0
-              a.copy(
-                totalBuild = a.totalBuild + (if (consume) math.max(time - a.lastFhTime, 0L) else 0L),
-                buildCount = a.buildCount + (if (consume) 1 else 0),
-                fhSinceLastCr = false
-              )
-            case "charge_ended" =>
-              a.copy(uberEnd = time, totalUber = a.totalUber + l.duration)
-            case "charge_deployed" => a.copy(chargeCount = a.chargeCount + 1)
-            case "advantage_lost" =>
-              a.copy(
-                advantagesLost = a.advantagesLost + 1,
-                biggestAdv = if (l.f_time > a.biggestAdv) l.f_time else a.biggestAdv
-              )
-            case "medic_death" =>
-              a.copy(
-                nearFull = a.nearFull + (if (l.charge >= 95 && l.charge < 100) 1 else 0),
-                deathsAfterUber =
-                  a.deathsAfterUber + (if (math.max(time - a.uberEnd, 0L) <= 10) 1 else 0),
-                drops = a.drops + (if (l.charge >= 100) 1 else 0)
-              )
-            case _ => a
-          }
-          medics.updated(l.sid, b)
-        },
+      step = (_, medics, l, time, _) => PlayerModules.medicStep(medics, l, time),
       rows = (doc, medics, upTo) =>
-        medics.iterator.map { case (sid, a) =>
-          if (a.healCount > 0)
-            MedicRow(doc, sid, aborted = false,
-              a.advantagesLost, a.biggestAdv, a.nearFull, a.deathsAfterUber,
-              f32div(a.totalBeforeHeal.toFloat, a.healCount.toFloat),
-              f32div(a.totalBuild.toFloat, a.buildCount.toFloat),
-              f32div(0f, a.chargeCount.toFloat),
-              f32div(a.totalUber.toFloat, a.chargeCount.toFloat),
-              a.chargeCount, a.drops, upTo)
-          else
-            MedicRow(doc, sid, aborted = false, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, upTo)
-        },
-      tombstone = (doc, upTo) =>
-        Iterator.single(MedicRow(doc, -1L, aborted = true, 0L, 0f, 0L, 0L, 0f, 0f, 0f, 0f, 0L, 0L, upTo))
+        medics.iterator.map { case (sid, a) => medicRow(doc, sid, aborted = false, PlayerModules.medicStats(a), upTo) },
+      tombstone = (doc, upTo) => Iterator.single(medicRow(doc, -1L, aborted = true, PlayerModules.medicDefault, upTo))
     )
-
-  // ---------------------------------------------------------------------
-  // Streaming classStats module (A1-A4 + J3 as-of class + A13 round gate)
-  // ---------------------------------------------------------------------
-
-  /** Per-beneficiary 10-cell accumulators (u64 here; the reference's u16
-    * saturation is applied at emission, like the batch `least(sum, 65535)`). */
-  final case class ClassAcc(
-      kills: Vector[Long] = Vector.fill(10)(0L),
-      deaths: Vector[Long] = Vector.fill(10)(0L),
-      assists: Vector[Long] = Vector.fill(10)(0L),
-      damage: Vector[Long] = Vector.fill(10)(0L)
-  )
-
-  /** Per-doc classStats state: the as-of entry table (sid -> normalized
-    * class; "" = entry created by a kill target with its class still
-    * unknown), accumulators, and the round-active gate. */
-  final case class ClassDocState(
-      entries: Map[Long, String] = Map.empty,
-      stats: Map[Long, ClassAcc] = Map.empty,
-      active: Boolean = false
-  )
 
   final case class ClassRow(
       doc_id: String,
@@ -446,132 +338,35 @@ object StreamingPipeline {
       up_to: Long
   )
 
-  /** Streaming classStats on the per-doc machine, running the reference's
-    * SEQUENTIAL as-of semantics (classstats.rs:61-120): spawns/role changes
-    * set the subject's class; an active kill creates the target's entry
-    * BEFORE the class reads; deaths/assists/damage require the read subject
-    * to have an entry; consumers accumulate under the beneficiary subject.
-    * Exactly equal to the batch [[TfPipeline.classStats]] window formulation
-    * (differential-tested incl. doc aborts and consumption chains). */
-  def classStatsStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import graft.expr.{LineParser, Steam}
-
+  /** Streaming classStats on the per-doc machine (state: [[ClassDocState]]),
+    * deaths bucket-keyed like the batch [[TfPipeline.classStats]]. */
+  def classStatsStream(seq: DataFrame): DataFrame = {
     val zero = Vector.fill(10)(0L)
-    def sat(v: Vector[Long]): Seq[Long] = v.map(x => if (x > 65535L) 65535L else x)
-    def clsIdx(entry: String): Int =
-      if (entry == null || entry.isEmpty) LineParser.classIndex("unknown")
-      else LineParser.classIndex(entry)
-
-    def killTargetSid(l: SeqLine): Long = l.target_kind match {
-      case "player"  => Steam.playerSubjectId(l.target_raw)
-      case "console" => Steam.K_CONSOLE << 32
-      case "team"    => (Steam.K_TEAM << 32) | 2L
-      case _         => Steam.K_SYSTEM << 32
-    }
-
     perDoc[ClassDocState, ClassRow](seq, ClassDocState())(
-      step = (_, prior, l, _, _) => {
-        var st = prior
-        def bump(sid: Long, pick: ClassAcc => ClassAcc): Unit = {
-          val a = st.stats.getOrElse(sid, ClassAcc())
-          st = st.copy(stats = st.stats.updated(sid, pick(a)))
-        }
-        l.event_type match {
-          case "round_start" => st = st.copy(active = true)
-          case "round_win"   => st = st.copy(active = false)
-          case "spawned" | "role_change" =>
-            if (l.class_str != null)
-              st = st.copy(entries = st.entries.updated(l.sid, l.class_str))
-          case "kill" if st.active =>
-            val tsid = killTargetSid(l)
-            // the attacker's class is read BEFORE the target entry is
-            // created (classstats.rs:81-82) -- observable on a self-kill
-            // with no prior entry; then the target entry is created and
-            // the kill is counted under the target's as-of class
-            val attackerEntry = st.entries.get(l.sid)
-            if (!st.entries.contains(tsid))
-              st = st.copy(entries = st.entries.updated(tsid, ""))
-            val vIdx = clsIdx(st.entries(tsid))
-            bump(l.sid, a => a.copy(kills = a.kills.updated(vIdx, a.kills(vIdx) + 1)))
-            // the victim is a beneficiary group either way; its death
-            // counts only when the ATTACKER had an entry (its class may
-            // still be unknown) -- classstats.rs:83-86
-            attackerEntry match {
-              case Some(ac) =>
-                val aIdx = clsIdx(ac)
-                bump(tsid, a => a.copy(deaths = a.deaths.updated(aIdx, a.deaths(aIdx) + 1)))
-              case None => bump(tsid, identity)
-            }
-          case "kill_assist" if st.active =>
-            // the assister's group exists even when the target has no
-            // entry (batch: the consumer row always groups)
-            val counted = l.target_raw != null && {
-              val t = Steam.againstSubjectId(l.target_raw)
-              st.entries.contains(t) && {
-                val tIdx = clsIdx(st.entries(t))
-                bump(l.sid, a => a.copy(assists = a.assists.updated(tIdx, a.assists(tIdx) + 1)))
-                true
-              }
-            }
-            if (!counted) bump(l.sid, identity)
-          case "damage" if st.active =>
-            val d = l.dmgOpt.getOrElse(0L)
-            if (d > 0 && d < 1500) {
-              val t =
-                if (l.target_raw == null) Steam.K_SYSTEM << 32
-                else Steam.againstSubjectId(l.target_raw)
-              if (st.entries.contains(t)) {
-                val tIdx = clsIdx(st.entries(t))
-                bump(l.sid, a => a.copy(damage = a.damage.updated(tIdx, a.damage(tIdx) + d)))
-              } else bump(l.sid, identity)
-            }
-          case _ =>
-        }
-        st
-      },
+      step = (_, st, l, _, _) => PlayerModules.classStep(st, l),
       rows = (doc, st, upTo) =>
         st.stats.iterator.map { case (sid, a) =>
-          ClassRow(doc, sid, aborted = false, sat(a.kills), sat(a.deaths), sat(a.assists), sat(a.damage), upTo)
+          ClassRow(doc, sid, aborted = false, PlayerModules.saturate(a.kills), PlayerModules.saturate(a.deaths),
+            PlayerModules.saturate(a.assists), PlayerModules.saturate(a.damage), upTo)
         },
       tombstone = (doc, upTo) =>
         Iterator.single(ClassRow(doc, -1L, aborted = true, zero, zero, zero, zero, upTo))
     )
   }
 
-  // ---------------------------------------------------------------------
-  // Streaming healSpread module (A5: per-(healer, target) u32-wrapped sums)
-  // ---------------------------------------------------------------------
-
   /** heals rendered in target-account order as "[U:1:acct]:sum;..." -- the
     * same string shape as tf_per_player's flattened heals column, so the
     * driver query compares against the SAME sim expectation. */
   final case class HealRow(doc_id: String, sid: Long, aborted: Boolean, heals: String, up_to: Long)
 
-  /** Streaming healSpread on the per-doc machine (healspread.rs:20-33):
-    * `healed` lines whose `against` target is a PLAYER accumulate the healing
-    * amount (absent -> 0) under (healer, target account) with u32 wrapping
-    * (state: healer sid -> target account -> sum); missing `against` is a
-    * no-op. Exactly equal to the batch [[TfPipeline.healSpread]] aggregate
-    * (differential-tested). */
-  def healSpreadStream(spark: SparkSession, seq: DataFrame): DataFrame = {
-    import graft.expr.Steam
-
+  /** Streaming healSpread on the per-doc machine (state: healer sid ->
+    * target account -> u32-wrapped sum). */
+  def healSpreadStream(seq: DataFrame): DataFrame = {
     def render(m: Map[Long, Long]): String =
       m.toSeq.sorted.map { case (acct, v) => s"[U:1:$acct]:$v" }.mkString(";")
 
-    perDoc[Map[Long, Map[Long, Long]], HealRow](seq, Map.empty)(
-      step = (_, heals, l, _, _) =>
-        if (l.event_type != "healed" || l.target_raw == null) heals
-        else {
-          val t = Steam.againstSubjectId(l.target_raw)
-          if (Steam.packedKind(t) != Steam.K_PLAYER.toInt) heals
-          else {
-            val acct = t & 0xffffffffL
-            val m = heals.getOrElse(l.sid, Map.empty[Long, Long])
-            val next = (m.getOrElse(acct, 0L) + l.healingOpt.getOrElse(0L)) & 0xffffffffL
-            heals.updated(l.sid, m.updated(acct, next))
-          }
-        },
+    perDoc[PlayerModules.Heals, HealRow](seq, Map.empty)(
+      step = (_, heals, l, _, _) => PlayerModules.healStep(heals, l),
       rows = (doc, heals, upTo) =>
         heals.iterator.map { case (sid, m) => HealRow(doc, sid, aborted = false, render(m), upTo) },
       tombstone = (doc, upTo) => Iterator.single(HealRow(doc, -1L, aborted = true, "", upTo))
@@ -601,7 +396,7 @@ object StreamingPipeline {
     * nothing for that batch and nothing after -- messages emitted in EARLIER
     * batches stand (the Update-mode sink cannot retract; batch consumers
     * drop aborted docs via the medic tombstones or the batch universe). */
-  def chatStream(spark: SparkSession, seq: DataFrame): DataFrame =
+  def chatStream(seq: DataFrame): DataFrame =
     perDoc[Map[Long, SubjEntry], ChatMsg](seq, Map.empty)(
       step = (doc, prior, l, time, emit) => {
         // first-seen-wins intern, mirroring TfPipeline.subjectDim

@@ -232,26 +232,21 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(pA.kills(unk) == 2 && pA.kills.sum == 2, "A killed B and the bot (both class-unknown)")
   }
 
-  test("perPlayer assembly plan contains exactly ONE classStats subtree (no double execution)") {
+  test("perPlayer assembly plan contains exactly ONE per-doc module pass (no double execution)") {
     // Regression guard for the double-reference trap: a DataFrame referenced
     // from two union branches is EXECUTED twice -- Spark does no cross-branch
-    // subtree CSE. The deaths-claim redirect must ride the single classStats
-    // aggregate (join + explode), not a second reference to it. The
-    // classStats contribution explode is identifiable by its role literals.
+    // subtree CSE. The assembly folds the modules and re-keys the deaths in
+    // ONE per-doc pass: the plan's one CoGroup node (routed lines cogrouped
+    // with the dim rows), and no MapGroups (the projections' pass).
     val input = LogGen.generate(spark, 2, 200, Seed).toDF()
     val routed = TfPipeline.routed(TfPipeline.envelope(input))
     val plan = TfPipeline
       .perPlayerAssembled(routed, TfPipeline.subjectDim(routed))
       .queryExecution
       .optimizedPlan
-    var csSubtrees = 0
-    plan.foreach {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
-        val s = g.generator.toString
-        if (s.contains("kt") && s.contains("ka")) csSubtrees += 1
-      case _ =>
-    }
-    assert(csSubtrees == 1, s"expected exactly one classStats explode subtree, found $csSubtrees")
+    import org.apache.spark.sql.catalyst.plans.logical.{CoGroup, MapGroups}
+    val passes = plan.collect { case g @ (_: CoGroup | _: MapGroups) => g.nodeName }
+    assert(passes == Seq("CoGroup"), s"expected exactly one per-doc module pass, found $passes")
   }
 
   test("routed rows preserve the token array exactly (per-row invariant)") {

@@ -6,8 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Handler composition (§2.9): chat + lobby composed like
-  * examples/combine_handlers.rs; a custom module (HighestDamage,
+/** Handler composition (§2.9): a custom module (HighestDamage,
   * examples/custom_handler.rs) composed with the built-ins. */
 class HandlersSpec extends AnyFunSuite {
 
@@ -19,20 +18,6 @@ class HandlersSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  test("chat + lobby global composition (combine_handlers.rs shape)") {
-    spark.sparkContext.setLogLevel("WARN")
-    val routed = TfPipeline.routed(TfPipeline.envelope(LogGen.generate(spark, 3, 300, 42L).toDF())).cache()
-    val dim = TfPipeline.subjectDim(routed)
-    val composed = Handlers
-      .composeGlobal(routed, dim, Seq("chat" -> Handlers.globalModules("chat"), "lobby" -> Handlers.globalModules("lobby")))
-      .collect()
-    assert(composed.length == 3, "one row per doc")
-    val cols = composed.head.schema.fieldNames.toSet
-    assert(cols.contains("chat") && cols.contains("settings") && cols.contains("ok"))
-    assert(composed.exists(r => !r.isNullAt(r.fieldIndex("chat"))), "chat populated")
-    routed.unpersist()
-  }
 
   test("custom HighestDamage module composes with built-ins and matches max") {
     val routed = TfPipeline.routed(TfPipeline.envelope(LogGen.generate(spark, 2, 400, 7L).toDF())).cache()

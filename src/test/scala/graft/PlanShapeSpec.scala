@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -30,7 +30,8 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
   * failure message carries the formatted plan.
   *
   * The sf queries read the sf0.001 tables of TESTDATA.md; the pipeline
-  * shapes run on a LogGen corpus of 40 docs x 300 lines.
+  * shapes run on a LogGen corpus of 40 docs x 300 lines, over the store
+  * also with one hard-error doc added.
   */
 class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -248,14 +249,47 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val dim = TfPipeline.subjectDim(routed).persist()
     dim.count()
     try {
-      // the cached hub keeps the classify window's doc_id partitioning;
-      // only the dim broadcast remains
+      // the cached hub keeps the classify window's doc_id partitioning and
+      // line order: the module pass cogroups it with the dim rows without an
+      // exchange or a window; the only aggregate is the death claims'
+      // (partial and final)
       val assembled = run(TfPipeline.perPlayerAssembled(routed, dim))
-      assembled.check(assembled.shuffles.isEmpty && assembled.broadcasts.size == 1, "hub assembly: 0 shuffles, 1 broadcast")
+      assembled.check(assembled.shuffles.isEmpty && assembled.broadcasts.isEmpty, "hub assembly: 0 shuffles, 0 broadcasts")
+      assembled.check(assembled.windows.isEmpty, "hub assembly: no Window")
+      assembled.check(assembled.count[SortAggregateExec] == 2,
+        s"hub assembly: 2 SortAggregate, got ${assembled.count[SortAggregateExec]}")
       val chat = run(TfPipeline.chat(routed, dim))
       chat.check(chat.shuffles.isEmpty && chat.broadcasts.size == 1, "hub chat: 0 shuffles, 1 broadcast")
     } finally { dim.unpersist(blocking = true); routed.unpersist(blocking = true) }
 
+    // As planned, the store scan carries the `__error` anti-join (one hash
+    // exchange and one broadcast). On a store without a hard-error doc AQE
+    // drops it at run time; one hard-error doc keeps it. The other exchanges
+    // of the assembly are the classify window's doc_id exchange and two of
+    // the small dim (re-keyed for the death claims and for the cogroup).
+    storeCounts(input, assembly = ((4, 1), (3, 0)), chat = ((2, 2), (1, 1)))
+    storeCounts(input.unionByName(hardErrorDoc), assembly = ((4, 1), (4, 1)), chat = ((2, 2), (2, 2)))
+  }
+
+  /** One doc whose truncated kill line is followed within 60 s by another
+    * line: a hard error, so the doc lands in the `__error` route. */
+  private def hardErrorDoc: DataFrame = {
+    import spark.implicits._
+    val p = """"A<2><[U:1:100]><Red>""""
+    Seq(
+      s"""04/11/2021 - 10:00:00: $p spawned as "Scout"""",
+      s"""04/11/2021 - 10:00:05: $p killed ${'"'}B<3><[U:1:200]><Blue""",
+      s"""04/11/2021 - 10:00:10: $p spawned as "Medic""""
+    ).zipWithIndex.map { case (l, i) =>
+      val t = LogGen.tokenize(l)
+      graft.loggen.SeqRow("doc-error", i.toLong, "src-0", t, t.length)
+    }.toDF()
+  }
+
+  /** Writes `input` to a route store and pins the (shuffle, broadcast)
+    * exchanges of the assembly and of chat over it: as planned, then in
+    * AQE's final plan. */
+  private def storeCounts(input: DataFrame, assembly: ((Int, Int), (Int, Int)), chat: ((Int, Int), (Int, Int))): Unit = {
     val dir = Files.createTempDirectory("graft-plan-shape").toString
     try {
       Route.writeRouted(spark, TfPipeline.routable(TfPipeline.envelope(input)), dir, Route.fingerprint(input))
@@ -263,23 +297,17 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val sdim = TfPipeline.subjectDim(stored).persist()
       sdim.count()
       try {
-        // As planned, each of the three store scans carries the `__error`
-        // anti-join (one hash exchange and one broadcast); this corpus has
-        // no hard-error doc, so AQE drops those subtrees at run time.
-        // Lowering these counts is the store read path's open work.
-        val assembledDf = TfPipeline.perPlayerAssembled(stored, sdim)
-        assert(planned(assembledDf) == ((9, 4)))
-        val assembled = run(assembledDf)
-        assembled.check(assembled.shuffles.size == 6 && assembled.broadcasts.size == 1,
-          s"store assembly: 6 shuffles, 1 broadcast, got ${assembled.shuffles.size}, ${assembled.broadcasts.size}")
-        assembled.check(
-          assembled.scans.nonEmpty && assembled.scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "route"))),
-          "every store scan is pruned by a route partition filter")
-        val chatDf = TfPipeline.chat(stored, sdim)
-        assert(planned(chatDf) == ((2, 2)))
-        val chat = run(chatDf)
-        chat.check(chat.shuffles.size == 1 && chat.broadcasts.size == 1,
-          s"store chat: 1 shuffle, 1 broadcast, got ${chat.shuffles.size}, ${chat.broadcasts.size}")
+        for ((name, df, (planShape, finalShape)) <- Seq(
+            ("assembly", TfPipeline.perPlayerAssembled(stored, sdim), assembly),
+            ("chat", TfPipeline.chat(stored, sdim), chat))) {
+          assert(planned(df) == planShape, s"store $name as planned")
+          val e = run(df)
+          e.check((e.shuffles.size, e.broadcasts.size) == finalShape,
+            s"store $name: $finalShape (shuffles, broadcasts), got ${(e.shuffles.size, e.broadcasts.size)}")
+          e.check(
+            e.scans.nonEmpty && e.scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "route"))),
+            "every store scan is pruned by a route partition filter")
+        }
       } finally { sdim.unpersist(blocking = true); () }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }

@@ -242,70 +242,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming envelope + windowed routed counts match the batch counts") {
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-stream").toString
-    val input = LogGen.generate(spark, 2, 200, 42L).toDF()
-    input.write.mode("overwrite").parquet(dir)
-
-    val counts = StreamingPipeline.routedCounts(StreamingPipeline.envelopeStream(spark, dir))
-    val q = StreamingPipeline.memorySink(counts, "routed_counts", OutputMode.Complete).start()
-    try {
-      q.processAllAvailable()
-      val got = spark
-        .sql("select sum(n) from routed_counts")
-        .head()
-        .getLong(0)
-      val want = graft.pipeline.TfPipeline
-        .envelope(input)
-        .filter(org.apache.spark.sql.functions.col("status") === 0)
-        .count()
-      assert(got == want, "windowed streaming counts must cover every valid line")
-    } finally q.stop()
-  }
-
-  test("routedCounts watermark: rows >10 min behind max event time are dropped") {
-    import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft-stream-wm").toString
-    new java.io.File(s"$base/in").mkdirs()
-    def writeFile(name: String, lines: Seq[(String, Long, String)]): Unit = {
-      import spark.implicits._
-      val df = lines.map { case (doc, no, l) =>
-        val t = LogGen.tokenize(l)
-        graft.loggen.SeqRow(doc, no, "s", t, t.length)
-      }.toDF()
-      val tmp = s"$base/tmp-$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
-      Files.move(f.toPath, java.nio.file.Paths.get(s"$base/in/$name.parquet"))
-    }
-    val P = """"A<2><[U:1:100]><Red>""""
-    def say(ts: String) = s"""04/11/2021 - $ts: $P say "m""""
-    writeFile("a", Seq(
-      ("d1", 0L, say("10:00:00")), ("d1", 1L, say("10:00:10")),
-      ("d1", 2L, say("10:00:20")), ("d1", 3L, say("11:00:00"))))
-    val counts = StreamingPipeline.routedCounts(StreamingPipeline.envelopeStream(spark, s"$base/in"))
-    val q = StreamingPipeline.memorySink(counts, "wm_counts", OutputMode.Update).start()
-    try {
-      q.processAllAvailable() // watermark after batch 1: 11:00 - 10 min = 10:50
-      // batch 2: one LATE line (10:00:30, far below the watermark -> must be
-      // dropped, its 10:00 window stays at 3) and one on-time line (11:01 ->
-      // its window updates to 2)
-      writeFile("b", Seq(("d2", 0L, say("10:00:30")), ("d2", 1L, say("11:01:00"))))
-      q.processAllAvailable()
-      val rows = spark.sql("select window.start, n from wm_counts").collect()
-        .map(r => (r.getTimestamp(0).toInstant.toString, r.getLong(1)))
-      val early = rows.filter(_._1 == "2021-04-11T10:00:00Z").map(_._2)
-      assert(early.nonEmpty && early.max == 3, s"late row must not update its window: ${rows.toSeq}")
-      val eleven = rows.filter(_._1 == "2021-04-11T11:00:00Z").map(_._2)
-      assert(eleven.nonEmpty && eleven.max == 2, s"on-time row must update its window: ${rows.toSeq}")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView("wm_counts")
-      ()
-    }
-  }
-
   test("streaming medic module: multi-batch delivery (docs split across files) equals batch") {
     import org.apache.spark.sql.functions._
     val base = Files.createTempDirectory("graft-stream-mb").toString
@@ -325,7 +261,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val seq = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
     val q = StreamingPipeline
-      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_mb", OutputMode.Update)
+      .memorySink(StreamingPipeline.medicStatsStream(seq), "medics_mb", OutputMode.Update)
       .start()
     try {
       q.processAllAvailable()
@@ -352,7 +288,7 @@ class StreamingSpec extends AnyFunSuite {
       // equality with the batch windows+join formulation
       val seq2 = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
       val qc = StreamingPipeline
-        .memorySink(StreamingPipeline.chatStream(spark, seq2), "chat_mb", OutputMode.Update)
+        .memorySink(StreamingPipeline.chatStream(seq2), "chat_mb", OutputMode.Update)
         .start()
       try {
         qc.processAllAvailable()
@@ -383,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val seq = StreamingPipeline.sequencedStream(spark, dir)
     val q = StreamingPipeline
-      .memorySink(StreamingPipeline.medicStatsStream(spark, seq), "medics_stream", OutputMode.Update)
+      .memorySink(StreamingPipeline.medicStatsStream(seq), "medics_stream", OutputMode.Update)
       .start()
     try {
       q.processAllAvailable()
@@ -460,7 +396,7 @@ class StreamingSpec extends AnyFunSuite {
       }
       val seq = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
       val q = StreamingPipeline
-        .memorySink(StreamingPipeline.classStatsStream(spark, seq), "class_stream", OutputMode.Update)
+        .memorySink(StreamingPipeline.classStatsStream(seq), "class_stream", OutputMode.Update)
         .start()
       def snapshot(): (Set[String], Map[(String, Long), (Seq[Long], Seq[Long], Seq[Long], Seq[Long])]) = {
         val latest = StreamingPipeline.latestRows(spark.sql("select * from class_stream"))
@@ -496,7 +432,7 @@ class StreamingSpec extends AnyFunSuite {
         // equality with the batch aggregate's (healer -> account -> u32 sum)
         val seqH = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
         val qh = StreamingPipeline
-          .memorySink(StreamingPipeline.healSpreadStream(spark, seqH), "heal_stream", OutputMode.Update)
+          .memorySink(StreamingPipeline.healSpreadStream(seqH), "heal_stream", OutputMode.Update)
           .start()
         try {
           qh.processAllAvailable()
