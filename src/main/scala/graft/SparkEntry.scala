@@ -2,7 +2,7 @@ package graft
 
 import graft.loggen.LogGen
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
-import graft.pipeline.{Route, TfPipeline}
+import graft.pipeline.TfPipeline
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -168,20 +168,9 @@ object SparkEntry {
         ) ++ arrays: _*
       )
     }),
-    "tf_chat" -> ((s, d) => {
-      val r = routedOf(s, d)
-      TfPipeline
-        .chatMessages(r, TfPipeline.subjectDim(r))
-        .select(
-          col("doc_id"),
-          col("line_no"),
-          col("msg.time").as("time"),
-          col("msg.name").as("name"),
-          col("msg.steam_id").as("steam_id"),
-          col("msg.message").as("message"),
-          col("msg.chat_type").as("chat_type")
-        )
-    }),
+    "tf_chat" -> ((s, d) =>
+      // (doc_id, line_no, time, name, steam_id, message, chat_type)
+      TfPipeline.chatPass(routedOf(s, d)).select(col("doc_id"), inline(col("chat")))),
     "tf_route_counts" -> ((s, d) =>
       TfPipeline
         .routable(TfPipeline.envelope(tfInput(s, d)))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the hot parse path. All of them codegen to
@@ -270,42 +269,45 @@ object GraftExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
 
-  case class SplitPlayerSubjectExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(
-      Seq(
-        StructField("name", StringType),
-        StructField("user_id", StringType),
-        StructField("steam", StringType),
-        StructField("team", StringType)
-      )
+  val subjectDataSchema: StructType = StructType(
+    Seq(
+      StructField("data_kind", IntegerType, nullable = false),
+      StructField("name", StringType),
+      StructField("steam64_text", LongType),
+      StructField("death_key", LongType)
     )
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(v: Any): Any =
-      Kernels.splitPlayerSubject(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(
-        ctx,
-        ev,
-        c => {
-          val tmp = ctx.freshName("kout")
-          s"""
-           |InternalRow $tmp = graft.expr.Kernels.splitPlayerSubject($c);
-           |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-           """.stripMargin
-        }
-      )
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
+  )
 
-  case class SteamTextAccount(child: Expression) extends UnaryKernel {
-    override def dataType: DataType = LongType
-    override protected def kernelCall(c: String): String =
-      s"graft.expr.Kernels.steamTextAccount($c)"
-    override protected def boxedJavaType: String = "java.lang.Long"
-    override protected def unbox(tmp: String): String = s"$tmp.longValue()"
-    override protected def nullSafeEval(v: Any): Any =
-      Kernels.steamTextAccount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+  /** SubjectData of (sid, first-seen raw subject), see [[Steam.subjectData]];
+    * null only on a null sid. */
+  case class SubjectDataExpr(left: Expression, right: Expression) extends BinaryExpression {
+    override def dataType: DataType = subjectDataSchema
+    override def nullable: Boolean = left.nullable
+    override def eval(input: InternalRow): Any = {
+      val sid = left.eval(input)
+      if (sid == null) return null
+      Kernels.subjectData(
+        sid.asInstanceOf[Long],
+        right.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+      )
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val le = left.genCode(ctx)
+      val re = right.genCode(ctx)
+      val code = code"""
+        ${le.code}
+        ${re.code}
+        boolean ${ev.isNull} = ${le.isNull};
+        InternalRow ${ev.value} = null;
+        if (!${ev.isNull}) {
+          ${ev.value} = graft.expr.Kernels.subjectData(${le.value},
+            ${re.isNull} ? null : ${re.value});
+        }
+      """
+      ev.copy(code = code)
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(l, r)
   }
 
   /** All-tables random-hyperplane buckets in one codegen'd pass (see
@@ -506,8 +508,7 @@ object GraftExpressions {
   def subject_id(kind: Column, subject: Column): Column = col(SubjectIdExpr(ex(kind), ex(subject)))
   def against_subject_id(c: Column): Column = col(AgainstSubjectId(ex(c)))
   def player_subject_id(c: Column): Column = col(PlayerSubjectIdExpr(ex(c)))
-  def split_player_subject(c: Column): Column = col(SplitPlayerSubjectExpr(ex(c)))
-  def steam_text_account(c: Column): Column = col(SteamTextAccount(ex(c)))
+  def subject_data(sid: Column, raw: Column): Column = col(SubjectDataExpr(ex(sid), ex(raw)))
   def minhash_multi(c: Column, k: Int): Column = col(MinhashMulti(ex(c), k))
   def minhash_md5_multi(c: Column, k: Int): Column = col(MinhashMd5Multi(ex(c), k))
   def no_push_barrier(c: Column): Column = col(NoPushBarrier(ex(c)))

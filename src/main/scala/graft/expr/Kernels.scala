@@ -326,27 +326,13 @@ object Kernels {
   def playerSubjectId(raw: UTF8String): java.lang.Long =
     if (raw == null) null else java.lang.Long.valueOf(Steam.playerSubjectIdU(raw))
 
-  /** struct(name string, user_id string, steam string, team string); null on
-    * malformed split. */
-  def splitPlayerSubject(raw: UTF8String): InternalRow = {
-    if (raw == null) return null
-    val parts = Steam.splitPlayerSubject(raw.toString)
-    if (parts == null) return null
-    val out = new GenericInternalRow(4)
-    var i = 0
-    while (i < 4) { out.update(i, UTF8String.fromString(parts(i))); i += 1 }
-    out
-  }
-
-  /** from_steam3 orElse from_steam2 -> account id, null if neither parses
-    * (SubjectData path, common.rs:315-316). */
-  def steamTextAccount(raw: UTF8String): java.lang.Long = {
-    if (raw == null) return null
-    val s = raw.toString
-    val a3 = Steam.steam3Account(s)
-    if (a3 >= 0) return java.lang.Long.valueOf(a3)
-    val a2 = Steam.steam2Account(s)
-    if (a2 >= 0) java.lang.Long.valueOf(a2) else null
+  /** struct(data_kind int, name string, steam64_text long, death_key long):
+    * [[Steam.subjectData]] of subject `sid` first seen as `raw`. */
+  def subjectData(sid: Long, raw: UTF8String): InternalRow = {
+    val sd = Steam.subjectData(sid, if (raw == null) null else raw.toString)
+    new GenericInternalRow(Array[Any](
+      sd.dataKind, UTF8String.fromString(sd.name), sd.steam64Text.map(Long.box).orNull,
+      sd.deathKey.map(Long.box).orNull))
   }
 
   // ---- shingles ----------------------------------------------------------

@@ -82,10 +82,8 @@ object Steam {
     val name = raw.substring(0, i1)
     // emptiness is checked before stripping the trailing '>'
     if (steam.isEmpty || user.isEmpty || team.isEmpty) return null
-    if (!user.endsWith(">") || !steam.endsWith(">") || !team.endsWith(">")) {
-      // the reference strips the last char unconditionally (it is '>' for
-      // well-formed input); mirror that: strip whatever the last char is
-    }
+    // the reference strips the last char unconditionally (it is '>' for
+    // well-formed input); mirror that: strip whatever the last char is
     Array(
       name,
       user.substring(0, user.length - 1),
@@ -147,6 +145,36 @@ object Steam {
     val uid = parseU16(parts(1))
     if (uid >= 0) (K_BOT << 32) | uid
     else (K_MALFORMED << 32) | fnv1a32(raw)
+  }
+
+  /** SubjectData (common.rs:308-342) of a subject: `dataKind` 1 player /
+    * 2 bot / 3 malformed, else the packed kind; the display `name`;
+    * `steam64Text`, the text-parsed steam64 of a player-interned player;
+    * and `deathKey`, the packed `SubjectData::id()` of a player-interned
+    * subject (common.rs:285-295), None where it can never match a bucket. */
+  final case class SubjectData(dataKind: Int, name: String, steam64Text: Option[Long], deathKey: Option[Long])
+
+  /** The one SubjectData derivation: subject `sid` whose first-seen raw is
+    * `raw`. Kinds 1 (player) and 2 (bot) both come from player-quoted raws,
+    * and both keep the SPLIT name (common.rs:313-329). The user id is a
+    * plain u16 parse of 1..18 ASCII digits; the steam field parses as
+    * steam3, else steam2 (common.rs:315-316). A MalformedPlayer's id hashes
+    * the raw, and a raw interned as Player never interns as MalformedPlayer,
+    * so its death key is None (a deterministic miss). */
+  def subjectData(sid: Long, raw: String): SubjectData = {
+    val kind = packedKind(sid)
+    val playerQuoted = kind == 1 || kind == 2
+    val parts = if (playerQuoted) splitPlayerSubject(raw) else null
+    if (parts == null) return SubjectData(if (playerQuoted) 3 else kind, raw, None, None)
+    val uidText = parts(1)
+    val uid =
+      if (uidText.isEmpty || uidText.length > 18 || !uidText.forall(c => c >= '0' && c <= '9')) -1L
+      else java.lang.Long.parseLong(uidText)
+    if (uid < 0 || uid > 65535L) return SubjectData(3, raw, None, None)
+    val acct = { val a3 = steam3Account(parts(2)); if (a3 >= 0) a3 else steam2Account(parts(2)) }
+    val player = kind == 1
+    if (acct < 0) SubjectData(2, parts(0), None, Option.when(player)((K_BOT << 32) + uid))
+    else SubjectData(1, parts(0), Option.when(player)(steam64(acct)), Option.when(player)((K_PLAYER << 32) + acct))
   }
 
   def teamCode(team: String): Long = team match {

@@ -2,14 +2,15 @@ package graft.pipeline
 
 import graft.expr.{LineParser, Steam}
 
-/** The medic, classStats and healSpread modules as the reference runs them:
-  * one state per doc and one step per surviving handled line, in line order,
-  * with the line's doc-relative u32 time (lib.rs:58-104). This is the only
-  * implementation of the three modules. The batch pipeline folds them over
-  * the doc-clustered, line-sorted routed frame ([[TfPipeline.perPlayerAssembled]]
-  * and its module projections); the stream folds them on its per-doc driver
-  * ([[graft.streaming.StreamingPipeline]]). The states are immutable case
-  * classes, so the stream can keep them as keyed state. */
+/** The per-player modules -- medic, classStats, healSpread and chat -- as
+  * the reference runs them: one state per doc and one step per surviving
+  * handled line, in line order, with the line's doc-relative u32 time
+  * (lib.rs:58-104). This is the only implementation of the four modules.
+  * The batch pipeline folds them over the doc-clustered, line-sorted routed
+  * frame ([[TfPipeline.perPlayerAssembled]], its module projections and
+  * [[TfPipeline.chatPass]]); the stream folds them on its per-doc driver
+  * ([[graft.streaming.StreamingPipeline]]). The states are immutable, so
+  * the stream can keep them as keyed state. */
 object PlayerModules {
 
   /** The fields of a surviving line that the module steps read. */
@@ -255,6 +256,51 @@ object PlayerModules {
     }
 
   // ---------------------------------------------------------------------
+  // Chat (A6 + J2, chat.rs:57-77)
+  // ---------------------------------------------------------------------
+
+  /** The fields of a surviving line that the chat step reads. */
+  trait ChatLine {
+    def line_no: Long
+    def sid: Long
+    def event_type: String
+    def subject: String
+    def text: String
+  }
+
+  /** State: player sid -> its first-seen SubjectData. */
+  type Subjects = Map[Long, Steam.SubjectData]
+
+  /** One chat message; `line_no` orders the messages of a doc. */
+  final case class ChatMessage(
+      line_no: Long,
+      time: Long,
+      name: String,
+      steam_id: Long,
+      message: String,
+      chat_type: String
+  )
+
+  /** Interns each player subject's SubjectData at its first line
+    * (first-seen wins), then emits a say/say_team line of a player subject
+    * whose SubjectData is a player, with that identity. Only player subjects
+    * can emit (F2), so only they are interned. */
+  def chatStep(subjects: Subjects, l: ChatLine, time: Long, emit: ChatMessage => Unit): Subjects =
+    if (Steam.packedKind(l.sid) != 1) subjects
+    else {
+      val next =
+        if (subjects.contains(l.sid)) subjects
+        else subjects.updated(l.sid, Steam.subjectData(l.sid, l.subject))
+      if (l.event_type == "say" || l.event_type == "say_team") {
+        val sd = next(l.sid)
+        if (sd.dataKind == 1)
+          emit(ChatMessage(l.line_no, time, sd.name, sd.steam64Text.get, Option(l.text).getOrElse(""),
+            if (l.event_type == "say") "All" else "Team"))
+      }
+      next
+    }
+
+  // ---------------------------------------------------------------------
   // The batch fold
   // ---------------------------------------------------------------------
 
@@ -273,10 +319,28 @@ object PlayerModules {
       healingOpt: Option[Long]
   ) extends ModuleLine
 
-  /** The three module states of one doc after its last line. */
+  /** A surviving routed line: [[TfPipeline.routed]]'s chat columns. */
+  final case class ChatRoutedLine(line_no: Long, time: Long, sid: Long, event_type: String, subject: String,
+      text: String) extends ChatLine
+
+  /** One doc's chat, the messages in line order. */
+  final case class DocChat(doc_id: String, chat: Seq[ChatMessage])
+
+  /** Fold the chat step over one doc's lines, given in line order; a doc
+    * without messages emits no row. */
+  def chatDoc(doc: String, lines: Iterator[ChatRoutedLine]): Iterator[DocChat] = {
+    var subjects: Subjects = Map.empty
+    val msgs = Vector.newBuilder[ChatMessage]
+    lines.foreach(l => subjects = chatStep(subjects, l, l.time, msgs += _))
+    val chat = msgs.result()
+    if (chat.isEmpty) Iterator.empty else Iterator.single(DocChat(doc, chat))
+  }
+
+  /** The medic, classStats and healSpread states of one doc after its last
+    * line. */
   final case class DocModules(medics: Map[Long, MedicAcc], cls: ClassDocState, heals: Heals)
 
-  /** Fold the three modules over one doc's lines, given in line order. */
+  /** Fold those three modules over one doc's lines, given in line order. */
   def foldDoc(lines: Iterator[RoutedLine]): DocModules = {
     var medics = Map.empty[Long, MedicAcc]
     var cls = ClassDocState()

@@ -4,6 +4,7 @@ import graft.expr.GraftExpressions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset}
+import scala.annotation.unused
 
 /** The parse -> enrich -> route -> aggregate pipeline over the tokenized
   * sequence table `(doc_id, line_no, source, tokens, n_tok)`.
@@ -11,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset}
   * Spark-first design (SURVEY.md §3.1): every stage is a declarative
   * DataFrame transform built from native expressions, so Catalyst keeps
   * column pruning / filter pushdown. The heavy operators are the per-doc
-  * classification windows, one per-doc sorted pass that folds the
-  * per-player modules ([[PlayerModules]]), and aggregates and joins keyed
-  * by `(doc_id, subject)` -- no cross-document shuffle anywhere except the
-  * final sink.
+  * classification windows, the per-doc sorted passes that fold the
+  * per-player and chat modules ([[PlayerModules]]), and the subject
+  * dimension's aggregate keyed by `(doc_id, subject)` -- no cross-document
+  * shuffle anywhere except the final sink.
   *
   * Quirk fidelity notes are in SURVEY.md §7 risk 3 and graft.expr.LineParser.
   */
@@ -277,9 +278,11 @@ object TfPipeline {
   // Stage 4: enrichment (subject dimension, J1)
   // -------------------------------------------------------------------------
 
-  /** First-seen-wins subject dimension per (doc, sid): data kind
-    * (1 player / 2 bot / 3 malformed / packed kind otherwise), display name
-    * and text-parsed steam64 (SubjectData semantics, common.rs:308-342).
+  /** First-seen-wins subject dimension per (doc, sid): the SubjectData
+    * ([[graft.expr.Steam.subjectData]], common.rs:308-342) of each
+    * subject's first surviving raw -- data kind (1 player / 2 bot /
+    * 3 malformed / packed kind otherwise), display name, text-parsed
+    * steam64 -- and its first line.
     *
     * `death_key` is the packed `SubjectData::id()` of a player-INTERNED
     * subject (common.rs:285-295) -- the key the reference's classstats
@@ -287,55 +290,17 @@ object TfPipeline {
     * .id())`, classstats.rs:113-120), which diverges from the interned sid
     * for pathological subjects (the interning fast path reads the digits
     * between the last ':' and ']' of the raw, while SubjectData re-parses
-    * the split steam field and user id). Null = a deterministic miss: a
-    * MalformedPlayer data id hashes the raw string, and a raw whose
-    * interning produced Player can never also intern as MalformedPlayer,
-    * so the lookup can never hit (seed-random ahash notwithstanding). */
-  def subjectDim(routedDf: DataFrame): DataFrame = {
-    val sp = split_player_subject(col("first_subject"))
-    val acct = steam_text_account(sp.getField("steam"))
-    val uidOk = sp.getField("user_id").rlike("^[0-9]{1,18}$") &&
-      sp.getField("user_id").cast("long") <= 65535L
+    * the split steam field and user id). Null = a deterministic miss. */
+  def subjectDim(routedDf: DataFrame): DataFrame =
     routedDf
       .groupBy(col("doc_id"), col("sid"))
       .agg(
         min_by(col("subject"), col("line_no")).as("first_subject"),
         min(col("line_no")).as("first_line")
       )
-      .withColumn("kind", shiftrightunsigned(col("sid"), 32).cast("int"))
-      // sid kinds 1 (player) AND 2 (bot) both come from player-quoted raw
-      // subjects; SubjectData splits the name for both (common.rs:313-329:
-      // Bot { name, user_id, team } keeps the SPLIT name, not the raw)
-      .withColumn(
-        "data_kind",
-        when(
-          col("kind").isin(1, 2),
-          when(sp.isNull, 3)
-            .when(!uidOk, 3)
-            .when(acct.isNull, 2)
-            .otherwise(1)
-        ).otherwise(col("kind"))
-      )
-      .withColumn(
-        "name",
-        when(col("kind").isin(1, 2) && col("data_kind").isin(1, 2), sp.getField("name"))
-          .otherwise(col("first_subject"))
-      )
-      .withColumn(
-        "steam64_text",
-        when(col("kind") === 1 && col("data_kind") === 1, acct + lit(graft.expr.Steam.STEAM64_BASE))
-      )
-      .withColumn(
-        "death_key",
-        when(
-          col("kind") === 1,
-          when(col("data_kind") === 1, lit(graft.expr.Steam.K_PLAYER << 32) + acct)
-            .when(col("data_kind") === 2,
-              lit(graft.expr.Steam.K_BOT << 32) + sp.getField("user_id").cast("long"))
-        )
-      )
-      .select("doc_id", "sid", "data_kind", "name", "steam64_text", "first_line", "death_key")
-  }
+      .withColumn("sd", subject_data(col("sid"), col("first_subject")))
+      .select(col("doc_id"), col("sid"), col("sd.data_kind"), col("sd.name"), col("sd.steam64_text"),
+        col("first_line"), col("sd.death_key"))
 
   /** (doc_id, bkey, claimant): which player-interned subject claims each
     * deaths bucket -- the first-seen subject per (doc, death_key), as a
@@ -384,34 +349,6 @@ object TfPipeline {
   // Stage 5: modules
   // -------------------------------------------------------------------------
 
-  /** Chat (A6 + J2): ordered player messages with first-seen identity. */
-  def chatMessages(routedDf: DataFrame, dim: DataFrame): DataFrame = {
-    val says = routedDf
-      .filter(col("event_type").isin("say", "say_team"))
-      .filter(shiftrightunsigned(col("sid"), 32) === 1) // SubjectId::Player only
-      .select(
-        col("doc_id"),
-        col("sid"),
-        col("line_no"),
-        col("time"),
-        col("text").as("message"),
-        when(col("event_type") === "say", "All").otherwise("Team").as("chat_type")
-      )
-    says
-      .join(dim.filter(col("data_kind") === 1), Seq("doc_id", "sid"))
-      .select(
-        col("doc_id"),
-        col("line_no"),
-        struct(
-          col("time"),
-          col("name"),
-          col("steam64_text").as("steam_id"),
-          col("message"),
-          col("chat_type")
-        ).as("msg")
-      )
-  }
-
   /** The routed frame as the module fold's input: grouped by doc, each doc's
     * lines in line order. `routed` is already classified and carries the u32
     * `time`, so the fold only steps. The routed frame is clustered by doc and
@@ -456,6 +393,23 @@ object TfPipeline {
   def classStats(routedDf: DataFrame): DataFrame =
     modulePass(routedDf).filter(col("kills").isNotNull)
       .select("doc_id", "sid", "kills", "deaths", "assists", "damage")
+
+  /** The chat module's per-doc pass: each doc's surviving lines, in line
+    * order, folded through [[PlayerModules.chatStep]] (the step the stream
+    * runs), which resolves each player's first-seen SubjectData itself. One
+    * row per doc with at least one message: `chat`, the messages in line
+    * order, each with its `line_no`. It reads only the columns the step
+    * reads, and plans no exchange over the doc-clustered routed frame. */
+  def chatPass(routedDf: DataFrame): DataFrame = {
+    import routedDf.sparkSession.implicits._
+    routedDf
+      .select(col("doc_id"), col("line_no"), col("time"), col("sid"), col("event_type"),
+        col("subject"), col("text"))
+      .groupBy(col("doc_id"))
+      .as[String, PlayerModules.ChatRoutedLine]
+      .flatMapSortedGroups(col("line_no"))(PlayerModules.chatDoc)
+      .toDF()
+  }
 
   // -------------------------------------------------------------------------
   // Stage 6: output assembly (J5)
@@ -515,14 +469,9 @@ object TfPipeline {
       )
   }
 
-  /** Global chat output: one row per doc with the ordered message array. */
-  def chat(routedDf: DataFrame, dim: DataFrame): DataFrame =
-    chatMessages(routedDf, dim)
-      .groupBy("doc_id")
-      .agg(
-        transform(
-          sort_array(collect_list(struct(col("line_no"), col("msg")))),
-          e => e.getField("msg")
-        ).as("chat")
-      )
+  /** Global chat output: one row per doc with the ordered message array, a
+    * projection of [[chatPass]]. `dim` is not read (the pass derives
+    * identity itself); the parameter stays for existing callers. */
+  def chat(routedDf: DataFrame, @unused dim: DataFrame): DataFrame =
+    chatPass(routedDf).select(col("doc_id"), transform(col("chat"), _.dropFields("line_no")).as("chat"))
 }

@@ -197,16 +197,18 @@ object ReferenceSim {
               if (raw.kind == LineParser.KIND_PLAYER) {
                 val parts = Steam.splitPlayerSubject(raw.subject)
                 if (parts != null) {
+                  // from_steam3 orElse from_steam2 (common.rs:315-316)
                   val acct = {
-                    val u = org.apache.spark.unsafe.types.UTF8String.fromString(parts(2))
-                    graft.expr.Kernels.steamTextAccount(u)
+                    val a3 = Steam.steam3Account(parts(2))
+                    if (a3 >= 0) a3 else Steam.steam2Account(parts(2))
                   }
-                  // plain u16 parse (no clamp): error -> MalformedPlayer
+                  // plain u16 parse (no clamp): error -> MalformedPlayer.
+                  // ASCII digits only: Rust's parse::<u16> rejects the other
+                  // Unicode decimal digits that isDigit/parseLong accept
                   val uidOk = parts(1).nonEmpty && parts(1).length <= 18 &&
-                    parts(1).forall(_.isDigit) && java.lang.Long.parseLong(parts(1)) <= 65535L
-                  if (acct != null && uidOk)
-                    new SubjData(1, parts(0), Steam.steam64(acct.longValue()), lineNo,
-                      (Steam.K_PLAYER << 32) | acct.longValue())
+                    parts(1).forall(c => c >= '0' && c <= '9') && java.lang.Long.parseLong(parts(1)) <= 65535L
+                  if (acct >= 0 && uidOk)
+                    new SubjData(1, parts(0), Steam.steam64(acct), lineNo, (Steam.K_PLAYER << 32) | acct)
                   else if (uidOk) // Bot
                     new SubjData(2, parts(0), -1L, lineNo,
                       (Steam.K_BOT << 32) | java.lang.Long.parseLong(parts(1)))

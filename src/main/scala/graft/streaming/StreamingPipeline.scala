@@ -19,10 +19,10 @@ import scala.reflect.runtime.universe.TypeTag
   *    lookahead, doc abort, doc-relative time) over micro-batches: one
   *    driver, [[perDoc]], owns that pass, and the medic, classStats,
   *    healSpread and chat modules each supply only their own state, their
-  *    step for a surviving line, and their output rows. The first three
-  *    run the steps of [[graft.pipeline.PlayerModules]], which the batch
-  *    module pass folds too; the stream adds the multi-batch split, replay
-  *    and tombstone behaviour, differential-tested against batch.
+  *    step for a surviving line, and their output rows. All four run the
+  *    steps of [[graft.pipeline.PlayerModules]], which the batch per-doc
+  *    passes fold too; the stream adds the multi-batch split, replay and
+  *    tombstone behaviour, differential-tested against batch.
   */
 object StreamingPipeline {
 
@@ -148,7 +148,7 @@ object StreamingPipeline {
       target_raw: String,
       dmgOpt: Option[Long],
       healingOpt: Option[Long]
-  ) extends PlayerModules.ModuleLine
+  ) extends PlayerModules.ModuleLine with PlayerModules.ChatLine
 
   /** The sequential recovery machine's control state (lib.rs:58-104).
     * `pendingConsumeTs` is Some(errTs) when the NEXT line is consumed by a
@@ -288,7 +288,7 @@ object StreamingPipeline {
 
   // ---------------------------------------------------------------------
   // The per-player modules: the steps of graft.pipeline.PlayerModules, the
-  // same ones the batch module pass folds
+  // same ones the batch per-doc passes fold
   // ---------------------------------------------------------------------
 
   final case class MedicRow(
@@ -373,70 +373,23 @@ object StreamingPipeline {
     )
   }
 
-  // ---------------------------------------------------------------------
-  // Streaming chat module (player-only ordered messages, J2 identity)
-  // ---------------------------------------------------------------------
+  /** A chat message of a doc, as the stream emits it. */
+  final case class ChatRow(doc_id: String, msg: PlayerModules.ChatMessage)
 
-  final case class SubjEntry(dataKind: Int, name: String, steam64: Long)
-  final case class ChatMsg(
-      doc_id: String,
-      line_no: Long,
-      time: Long,
-      name: String,
-      steam_id: Long,
-      message: String,
-      chat_type: String
-  )
-
-  /** Streaming chat: say/say_team messages resolved against the FIRST-SEEN
-    * subject identity (SubjectData semantics, common.rs:308-342; state: sid
-    * -> [[SubjEntry]]), player subjects only (F2), emitted at their line with
-    * doc-relative time. Each message is emitted exactly once (the resume
-    * guard makes re-emission impossible); a doc that aborts mid-batch emits
-    * nothing for that batch and nothing after -- messages emitted in EARLIER
-    * batches stand (the Update-mode sink cannot retract; batch consumers
-    * drop aborted docs via the medic tombstones or the batch universe). */
+  /** Streaming chat on the per-doc machine (state: player sid -> its
+    * first-seen SubjectData, [[PlayerModules.chatStep]]): say/say_team
+    * messages of player subjects with a player identity, emitted at their
+    * line with doc-relative time, flattened to (doc_id, line_no, time, name,
+    * steam_id, message, chat_type). Each message is emitted exactly once
+    * (the resume guard makes re-emission impossible); a doc that aborts
+    * mid-batch emits nothing for that batch and nothing after -- messages
+    * emitted in EARLIER batches stand (the Update-mode sink cannot retract;
+    * batch consumers drop aborted docs via the medic tombstones or the batch
+    * universe). */
   def chatStream(seq: DataFrame): DataFrame =
-    perDoc[Map[Long, SubjEntry], ChatMsg](seq, Map.empty)(
-      step = (doc, prior, l, time, emit) => {
-        // first-seen-wins intern, mirroring TfPipeline.subjectDim
-        val subjects =
-          if (prior.contains(l.sid)) prior
-          else {
-            val k = graft.expr.Steam.packedKind(l.sid)
-            val e =
-              if (k == 1 || k == 2) {
-                val parts = graft.expr.Steam.splitPlayerSubject(l.subject)
-                if (parts == null) SubjEntry(3, l.subject, -1L)
-                else {
-                  // ASCII digits ONLY, matching the batch twin's
-                  // rlike("^[0-9]{1,18}$") -- Character.isDigit also
-                  // accepts non-ASCII Unicode decimal digits, which the
-                  // batch path classifies as data_kind=3
-                  val uidOk = parts(1).nonEmpty && parts(1).length <= 18 &&
-                    parts(1).forall(c => c >= '0' && c <= '9') &&
-                    java.lang.Long.parseLong(parts(1)) <= 65535L
-                  val acct = graft.expr.Kernels.steamTextAccount(
-                    org.apache.spark.unsafe.types.UTF8String.fromString(parts(2)))
-                  if (acct != null && uidOk)
-                    SubjEntry(1, parts(0), graft.expr.Steam.steam64(acct.longValue()))
-                  else if (uidOk) SubjEntry(2, parts(0), -1L)
-                  else SubjEntry(3, l.subject, -1L)
-                }
-              } else SubjEntry(k, l.subject, -1L)
-            prior.updated(l.sid, e)
-          }
-        if ((l.event_type == "say" || l.event_type == "say_team") &&
-          graft.expr.Steam.packedKind(l.sid) == 1) {
-          val e = subjects(l.sid)
-          if (e.dataKind == 1)
-            emit(ChatMsg(doc, l.line_no, time, e.name, e.steam64,
-              Option(l.text).getOrElse(""),
-              if (l.event_type == "say") "All" else "Team"))
-        }
-        subjects
-      },
+    perDoc[PlayerModules.Subjects, ChatRow](seq, Map.empty)(
+      step = (doc, subjects, l, time, emit) => PlayerModules.chatStep(subjects, l, time, m => emit(ChatRow(doc, m))),
       rows = (_, _, _) => Iterator.empty,
       tombstone = (_, _) => Iterator.empty
-    )
+    ).select(col("doc_id"), col("msg.*"))
 }

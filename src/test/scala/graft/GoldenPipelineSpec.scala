@@ -244,9 +244,38 @@ class GoldenPipelineSpec extends AnyFunSuite {
       .perPlayerAssembled(routed, TfPipeline.subjectDim(routed))
       .queryExecution
       .optimizedPlan
-    import org.apache.spark.sql.catalyst.plans.logical.{CoGroup, MapGroups}
+    import org.apache.spark.sql.catalyst.plans.logical.{CoGroup, Join, MapGroups}
     val passes = plan.collect { case g @ (_: CoGroup | _: MapGroups) => g.nodeName }
     assert(passes == Seq("CoGroup"), s"expected exactly one per-doc module pass, found $passes")
+    // chat: one per-doc pass (MapGroups) and no join with the dim
+    val chatPlan = TfPipeline.chat(routed, TfPipeline.subjectDim(routed)).queryExecution.optimizedPlan
+    val chatPasses = chatPlan.collect { case g @ (_: CoGroup | _: MapGroups | _: Join) => g.nodeName }
+    assert(chatPasses == Seq("MapGroups"), s"expected exactly one chat pass and no join, found $chatPasses")
+  }
+
+  test("a uid of non-ASCII decimal digits is a MalformedPlayer in the simulator and in batch") {
+    // Rust's parse::<u16> takes ASCII digits only; '١٢' (Arabic-Indic 12)
+    // fails it, so SubjectData is MalformedPlayer: no chat message, and the
+    // player's name is the raw subject
+    import spark.implicits._
+    val raw = "A<\u0661\u0662><[U:1:5]><Red>"
+    val lines = Vector(s"""04/11/2021 - 13:53:20: "$raw" say "hello"""")
+    val sim = ReferenceSim.run(lines)
+    assert(!sim.hardError)
+    val sid = (graft.expr.Steam.K_PLAYER << 32) | 5L
+    assert(sim.subjects.map(s => (s.sid, s.dataKind, s.name)) == Seq((sid, 3, raw)), s"sim: ${sim.subjects}")
+    assert(sim.chat.isEmpty, s"sim chat: ${sim.chat}")
+    assert(sim.perPlayer.map(_.steam3) == Seq("[U:1:5]"))
+    val input = lines.zipWithIndex.map { case (l, i) =>
+      val toks = LogGen.tokenize(l)
+      graft.loggen.SeqRow("uid-doc", i.toLong, "src-0", toks, toks.length)
+    }.toDF()
+    val routed = TfPipeline.routed(TfPipeline.envelope(input))
+    val dim = TfPipeline.subjectDim(routed)
+    assert(dim.select("sid", "data_kind", "name").as[(Long, Int, String)].collect().toSeq == Seq((sid, 3, raw)))
+    assert(TfPipeline.chat(routed, dim).isEmpty, "batch chat")
+    val pp = TfPipeline.perPlayer(routed, dim).select("steam3", "name").as[(String, String)].collect().toSeq
+    assert(pp == Seq("[U:1:5]" -> raw), s"batch per-player: $pp")
   }
 
   test("routed rows preserve the token array exactly (per-row invariant)") {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
@@ -258,17 +258,20 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assembled.check(assembled.windows.isEmpty, "hub assembly: no Window")
       assembled.check(assembled.count[SortAggregateExec] == 2,
         s"hub assembly: 2 SortAggregate, got ${assembled.count[SortAggregateExec]}")
+      // chat is one per-doc pass over the hub: no exchange, join or aggregate
       val chat = run(TfPipeline.chat(routed, dim))
-      chat.check(chat.shuffles.isEmpty && chat.broadcasts.size == 1, "hub chat: 0 shuffles, 1 broadcast")
+      chat.check(chat.shuffles.isEmpty && chat.broadcasts.isEmpty, "hub chat: 0 shuffles, 0 broadcasts")
+      chat.check(chat.count[BaseJoinExec] == 0 && chat.count[BaseAggregateExec] == 0, "hub chat: no join, no aggregate")
     } finally { dim.unpersist(blocking = true); routed.unpersist(blocking = true) }
 
     // As planned, the store scan carries the `__error` anti-join (one hash
     // exchange and one broadcast). On a store without a hard-error doc AQE
     // drops it at run time; one hard-error doc keeps it. The other exchanges
     // of the assembly are the classify window's doc_id exchange and two of
-    // the small dim (re-keyed for the death claims and for the cogroup).
-    storeCounts(input, assembly = ((4, 1), (3, 0)), chat = ((2, 2), (1, 1)))
-    storeCounts(input.unionByName(hardErrorDoc), assembly = ((4, 1), (4, 1)), chat = ((2, 2), (2, 2)))
+    // the small dim (re-keyed for the death claims and for the cogroup);
+    // chat's one other exchange is the classify window's.
+    storeCounts(input, assembly = ((4, 1), (3, 0)), chat = ((2, 1), (1, 0)))
+    storeCounts(input.unionByName(hardErrorDoc), assembly = ((4, 1), (4, 1)), chat = ((2, 1), (2, 1)))
   }
 
   /** One doc whose truncated kill line is followed within 60 s by another

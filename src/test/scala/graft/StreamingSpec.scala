@@ -285,7 +285,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == batch, s"multi-batch streaming diverged: $got vs $batch")
 
       // chat module over the SAME multi-batch delivery: exact message-level
-      // equality with the batch windows+join formulation
+      // equality with the batch chat pass
       val seq2 = StreamingPipeline.sequencedStream(spark, s"$base/part-*.parquet", maxFilesPerTrigger = Some(1))
       val qc = StreamingPipeline
         .memorySink(StreamingPipeline.chatStream(seq2), "chat_mb", OutputMode.Update)
@@ -296,10 +296,7 @@ class StreamingSpec extends AnyFunSuite {
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
             r.getLong(4), r.getString(5), r.getString(6)))
           .toSet
-        val dim = TfPipeline.subjectDim(routed)
-        val batchChat = TfPipeline.chatMessages(routed, dim)
-          .select(col("doc_id"), col("line_no"), col("msg.time"), col("msg.name"),
-            col("msg.steam_id").cast("long"), col("msg.message"), col("msg.chat_type"))
+        val batchChat = TfPipeline.chatPass(routed).select(col("doc_id"), inline(col("chat")))
           .collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
             r.getLong(4), r.getString(5), r.getString(6)))
