@@ -450,7 +450,6 @@ object LineParser {
     * error by the classifier). */
   def dateEpoch(date: String): Long = {
     if (date == null || date.length < 21) return Long.MinValue
-    var i = 0
     // digit positions: 0,1 / 3,4 / 6..9 / 13,14 / 16,17 / 19,20
     def d2(a: Int): Int = {
       val c1 = date.charAt(a); val c2 = date.charAt(a + 1)

@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Fan-out routing sinks (SURVEY.md S6) and the route store's one commit
@@ -15,7 +20,11 @@ import scala.jdk.CollectionConverters._
   *     partition pruning on read = the reference's does_handle masks), then
   *     one aggregate over what landed gives the audit rows (route, rows, docs,
   *     min_line, max_line, content_hash) that it writes to `<audit>/` and
-  *     returns as per-route counts;
+  *     returns as per-route counts. The aggregate reads back exactly the
+  *     files the write landed ([[landed]]): one recursive `FileSystem`
+  *     listing on the driver, O(route dirs + files of one snapshot) calls
+  *     and no Spark job, and the written schema, so nothing is inferred and
+  *     an empty write commits an empty snapshot;
   *  2. [[commit]] appends a [[Snapshot]] to the log, a JSON array of
   *     `{"batch", "fingerprint"?, "counts": {route: rows}, "committed_at_ms"}`
   *     entries, by writing `<log>.tmp` and atomically renaming it over the
@@ -92,7 +101,15 @@ object Route {
     * with the per-route lineage of what landed; returns rows per route. */
   def writeData(spark: SparkSession, routable: DataFrame, dataDir: String, auditDir: String): Map[String, Long] = {
     routable.write.mode("overwrite").partitionBy("route").parquet(dataDir)
-    val audit = spark.read.parquet(dataDir)
+    val audit = auditOf(landed(spark, dataDir, routable.schema))
+    val rows = audit.collect()
+    spark.createDataFrame(rows.toSeq.asJava, audit.schema).coalesce(1).write.mode("overwrite").parquet(auditDir)
+    rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** The audit rows of route-partitioned data, one per route. */
+  private[graft] def auditOf(data: DataFrame): DataFrame =
+    data
       .groupBy(col("route"))
       .agg(
         count(lit(1)).as("rows"),
@@ -101,9 +118,42 @@ object Route {
         max(col("line_no")).as("max_line"),
         expr("bit_xor(xxhash64(doc_id, line_no, tokens))").as("content_hash")
       )
-    val rows = audit.collect()
-    spark.createDataFrame(rows.toSeq.asJava, audit.schema).coalesce(1).write.mode("overwrite").parquet(auditDir)
-    rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private val routeSchema = StructType(Seq(StructField("route", StringType)))
+
+  /** The parquet files under `dataDir`, read as `written` partitioned by
+    * `route`, without Spark's listing job or schema-inference job: one
+    * recursive `FileSystem.listFiles` on the driver, keeping each file none
+    * of whose names below `dataDir` Spark's own listing would skip
+    * (`_SUCCESS`, `.crc`, `_temporary/...`). The data schema is `written`
+    * without `route`, nullable, as parquet stores it. */
+  private[graft] def landed(spark: SparkSession, dataDir: String, written: StructType): DataFrame = {
+    val dir = new HPath(dataDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(dir)
+    val files = mutable.ArrayBuffer.empty[FileStatus]
+    val it = fs.listFiles(root, true)
+    while (it.hasNext) {
+      val f = it.next()
+      val below = Iterator.iterate(f.getPath)(_.getParent).take(f.getPath.depth - root.depth)
+      if (!below.exists(p => GraftBridge.hiddenName(p.getName))) files += f
+    }
+    val data = StructType(written.filterNot(_.name == "route")).toNullable
+    val index = new KnownFiles(spark, root, files.toSeq)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, routeSchema, data, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** A file index over a known file list under `root`, partition values
+    * parsed from the directory names (the pattern of Spark's log-backed
+    * `MetadataLogFileIndex`): it never lists. */
+  private final class KnownFiles(spark: SparkSession, root: HPath, files: Seq[FileStatus])
+      extends PartitioningAwareFileIndex(spark, Map.empty, Some(routeSchema)) {
+    override val rootPaths: Seq[HPath] = Seq(root)
+    override val leafFiles: mutable.LinkedHashMap[HPath, FileStatus] = mutable.LinkedHashMap.from(files.map(f => f.getPath -> f))
+    override val leafDirToChildrenFiles: Map[HPath, Array[FileStatus]] = files.toArray.groupBy(_.getPath.getParent)
+    private lazy val spec = inferPartitioning()
+    override def partitionSpec(): PartitionSpec = spec
+    override def refresh(): Unit = ()
   }
 
   private val json = new ObjectMapper()

@@ -22,7 +22,9 @@ import java.nio.file.Paths
   *    after a crash before its log entry re-writes rather than duplicates;
   *  - a batch id already in the log is a no-op, and [[readCommitted]] reads
   *    only logged batches: exactly-once into the store. The log holds one
-  *    entry per committed batch and is rewritten whole on each commit.
+  *    entry per committed batch and is rewritten whole on each commit. An
+  *    empty micro-batch commits an empty snapshot (`counts` = `{}`) and adds
+  *    no rows to the read.
   */
 object StreamIngest {
 
@@ -62,7 +64,8 @@ object StreamIngest {
       .start()
 
   /** Read back ONLY committed batches (`batch` and `route` come back as
-    * partition columns). */
+    * partition columns). This read spans batches x routes directories, so it
+    * keeps Spark's own (parallel past 32 directories) listing. */
   def readCommitted(spark: SparkSession, dir: String): DataFrame = {
     val batches = committedBatches(dir).toSeq.sorted
     require(batches.nonEmpty, s"no committed batches under $dir")
