@@ -269,47 +269,6 @@ object GraftExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
 
-  val subjectDataSchema: StructType = StructType(
-    Seq(
-      StructField("data_kind", IntegerType, nullable = false),
-      StructField("name", StringType),
-      StructField("steam64_text", LongType),
-      StructField("death_key", LongType)
-    )
-  )
-
-  /** SubjectData of (sid, first-seen raw subject), see [[Steam.subjectData]];
-    * null only on a null sid. */
-  case class SubjectDataExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = subjectDataSchema
-    override def nullable: Boolean = left.nullable
-    override def eval(input: InternalRow): Any = {
-      val sid = left.eval(input)
-      if (sid == null) return null
-      Kernels.subjectData(
-        sid.asInstanceOf[Long],
-        right.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      )
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val le = left.genCode(ctx)
-      val re = right.genCode(ctx)
-      val code = code"""
-        ${le.code}
-        ${re.code}
-        boolean ${ev.isNull} = ${le.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.expr.Kernels.subjectData(${le.value},
-            ${re.isNull} ? null : ${re.value});
-        }
-      """
-      ev.copy(code = code)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(l, r)
-  }
-
   /** All-tables random-hyperplane buckets in one codegen'd pass (see
     * Kernels.rhpBuckets); the flattened plane matrix ships as a codegen
     * reference object. */
@@ -508,7 +467,6 @@ object GraftExpressions {
   def subject_id(kind: Column, subject: Column): Column = col(SubjectIdExpr(ex(kind), ex(subject)))
   def against_subject_id(c: Column): Column = col(AgainstSubjectId(ex(c)))
   def player_subject_id(c: Column): Column = col(PlayerSubjectIdExpr(ex(c)))
-  def subject_data(sid: Column, raw: Column): Column = col(SubjectDataExpr(ex(sid), ex(raw)))
   def minhash_multi(c: Column, k: Int): Column = col(MinhashMulti(ex(c), k))
   def minhash_md5_multi(c: Column, k: Int): Column = col(MinhashMd5Multi(ex(c), k))
   def no_push_barrier(c: Column): Column = col(NoPushBarrier(ex(c)))

@@ -326,15 +326,6 @@ object Kernels {
   def playerSubjectId(raw: UTF8String): java.lang.Long =
     if (raw == null) null else java.lang.Long.valueOf(Steam.playerSubjectIdU(raw))
 
-  /** struct(data_kind int, name string, steam64_text long, death_key long):
-    * [[Steam.subjectData]] of subject `sid` first seen as `raw`. */
-  def subjectData(sid: Long, raw: UTF8String): InternalRow = {
-    val sd = Steam.subjectData(sid, if (raw == null) null else raw.toString)
-    new GenericInternalRow(Array[Any](
-      sd.dataKind, UTF8String.fromString(sd.name), sd.steam64Text.map(Long.box).orNull,
-      sd.deathKey.map(Long.box).orNull))
-  }
-
   // ---- shingles ----------------------------------------------------------
 
   private val SPACE = UTF8String.fromString(" ")

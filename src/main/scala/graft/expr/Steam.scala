@@ -61,9 +61,12 @@ object Steam {
     v
   }
 
+  /** Rust's `u16::from_str`: an optional leading '+', then one or more
+    * ASCII digits (leading zeros allowed), at most 65535; else -1. */
   private def parseU16(s: String): Long = {
-    val v = parseU32(s)
-    if (v < 0 || v > 0xffffL) -1L else v
+    val d = if (s != null && s.startsWith("+")) s.substring(1) else s
+    if (d == null || d.isEmpty || !d.forall(c => c >= '0' && c <= '9')) -1L
+    else { val v = BigInt(d); if (v > 0xffff) -1L else v.toLong }
   }
 
   /** rsplitn(4, '<') player-subject split: (name, user_id, steam_id, team)
@@ -157,8 +160,8 @@ object Steam {
   /** The one SubjectData derivation: subject `sid` whose first-seen raw is
     * `raw`. Kinds 1 (player) and 2 (bot) both come from player-quoted raws,
     * and both keep the SPLIT name (common.rs:313-329). The user id is a
-    * plain u16 parse of 1..18 ASCII digits; the steam field parses as
-    * steam3, else steam2 (common.rs:315-316). A MalformedPlayer's id hashes
+    * plain u16 parse ([[parseU16]]); the steam field parses as steam3, else
+    * steam2 (common.rs:315-316). A MalformedPlayer's id hashes
     * the raw, and a raw interned as Player never interns as MalformedPlayer,
     * so its death key is None (a deterministic miss). */
   def subjectData(sid: Long, raw: String): SubjectData = {
@@ -166,11 +169,8 @@ object Steam {
     val playerQuoted = kind == 1 || kind == 2
     val parts = if (playerQuoted) splitPlayerSubject(raw) else null
     if (parts == null) return SubjectData(if (playerQuoted) 3 else kind, raw, None, None)
-    val uidText = parts(1)
-    val uid =
-      if (uidText.isEmpty || uidText.length > 18 || !uidText.forall(c => c >= '0' && c <= '9')) -1L
-      else java.lang.Long.parseLong(uidText)
-    if (uid < 0 || uid > 65535L) return SubjectData(3, raw, None, None)
+    val uid = parseU16(parts(1))
+    if (uid < 0) return SubjectData(3, raw, None, None)
     val acct = { val a3 = steam3Account(parts(2)); if (a3 >= 0) a3 else steam2Account(parts(2)) }
     val player = kind == 1
     if (acct < 0) SubjectData(2, parts(0), None, Option.when(player)((K_BOT << 32) + uid))

@@ -9,20 +9,14 @@ import org.apache.spark.sql.DataFrame
   * A per-player module is a `DataFrame -> DataFrame` stage over the routed
   * frame keyed on `(doc_id, sid)`, assembled with left joins onto the
   * player subjects (the reference iterates one SubjectMap, so every subject
-  * appears in every module's output slot). Users add custom modules by
-  * extending the map -- the analogue of implementing `EventHandler`
-  * (examples/custom_handler.rs).
+  * appears in every module's output slot). Users add a custom module by
+  * passing it to [[composePerPlayer]] -- the analogue of implementing
+  * `EventHandler` (examples/custom_handler.rs).
   */
 object Handlers {
 
   /** (routed, dim) -> frame keyed (doc_id, sid). */
   type PerPlayerModule = (DataFrame, DataFrame) => DataFrame
-
-  val perPlayerModules: Map[String, PerPlayerModule] = Map(
-    "class_stats" -> ((r, _) => TfPipeline.classStats(r)),
-    "heal_spread" -> ((r, _) => TfPipeline.healSpread(r)),
-    "medic_stats" -> ((r, _) => TfPipeline.medicStats(r))
-  )
 
   /** Example custom module (HighestDamage, examples/custom_handler.rs:29-56):
     * per player, the single highest damage event (A14 top-1 exemplar). */
@@ -40,9 +34,9 @@ object Handlers {
     *
     * NOTE: this generic composition left-joins each module's arbitrary
     * schema; the BUILT-IN assembly (TfPipeline.perPlayerAssembled) instead
-    * folds the built-in modules in one per-doc pass cogrouped with the
-    * player rows, with no join at all (left-outer SMJ of even tiny sides
-    * costs ~3s each at 4M rows). */
+    * folds the built-in modules and the player intern in one per-doc pass,
+    * with no join at all (left-outer SMJ of even tiny sides costs ~3s each
+    * at 4M rows). */
   def composePerPlayer(
       routed: DataFrame,
       dim: DataFrame,

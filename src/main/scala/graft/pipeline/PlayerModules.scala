@@ -2,15 +2,16 @@ package graft.pipeline
 
 import graft.expr.{LineParser, Steam}
 
-/** The per-player modules -- medic, classStats, healSpread and chat -- as
-  * the reference runs them: one state per doc and one step per surviving
-  * handled line, in line order, with the line's doc-relative u32 time
-  * (lib.rs:58-104). This is the only implementation of the four modules.
-  * The batch pipeline folds them over the doc-clustered, line-sorted routed
-  * frame ([[TfPipeline.perPlayerAssembled]], its module projections and
-  * [[TfPipeline.chatPass]]); the stream folds them on its per-doc driver
-  * ([[graft.streaming.StreamingPipeline]]). The states are immutable, so
-  * the stream can keep them as keyed state. */
+/** The per-player modules -- medic, classStats, healSpread and chat -- and
+  * the subject intern, as the reference runs them: one state per doc and
+  * one step per surviving handled line, in line order, with the line's
+  * doc-relative u32 time (lib.rs:58-104). This is the only implementation
+  * of the four modules, of the intern and of the deaths claim rule. The
+  * batch pipeline folds them over the doc-clustered, line-sorted routed
+  * frame ([[TfPipeline.perPlayerAssembled]], its module projections,
+  * [[TfPipeline.subjectDim]] and [[TfPipeline.chatPass]]); the stream folds
+  * them on its per-doc driver ([[graft.streaming.StreamingPipeline]]). The
+  * states are immutable, so the stream can keep them as keyed state. */
 object PlayerModules {
 
   /** The fields of a surviving line that the module steps read. */
@@ -169,7 +170,7 @@ object PlayerModules {
     * class reads; deaths, assists and damage count only when the read
     * subject has an entry; consumers accumulate under the beneficiary.
     * Deaths are keyed by the kill target's interned id (the bucket; see
-    * [[TfPipeline.claimDeaths]] for the re-keying). */
+    * [[claims]] for the re-keying). */
   def classStep(prior: ClassDocState, l: ModuleLine): ClassDocState = {
     var st = prior
     def bump(sid: Long, pick: ClassAcc => ClassAcc): Unit = {
@@ -256,20 +257,66 @@ object PlayerModules {
     }
 
   // ---------------------------------------------------------------------
+  // Subject intern (subjectmap.rs:37-46) and the deaths claim rule
+  // ---------------------------------------------------------------------
+
+  /** The fields of a surviving line that the intern reads. */
+  trait SubjectLine {
+    def line_no: Long
+    def sid: Long
+    def subject: String
+  }
+
+  /** A subject's first-seen line and the SubjectData of that line's raw. */
+  final case class Interned(firstLine: Long, data: Steam.SubjectData)
+
+  /** State: sid -> its first-seen line and SubjectData. Bounded by the
+    * distinct sids the caller interns in one doc. */
+  type Subjects = Map[Long, Interned]
+
+  /** The intern step (subjectmap.rs:37-46): the first line of a sid
+    * records its line and resolves its raw with [[Steam.subjectData]];
+    * later lines of that sid change nothing (first-seen wins). The state
+    * grows by one entry per distinct sid interned in the doc. */
+  def intern(subjects: Subjects, l: SubjectLine): Subjects =
+    if (subjects.contains(l.sid)) subjects
+    else subjects.updated(l.sid, Interned(l.line_no, Steam.subjectData(l.sid, l.subject)))
+
+  /** [[intern]] of player sids only (SubjectId::steam_id() is Some): the
+    * subjects that reach the per-player output and chat. */
+  def internPlayer(subjects: Subjects, l: SubjectLine): Subjects =
+    if (Steam.packedKind(l.sid) != Steam.K_PLAYER.toInt) subjects else intern(subjects, l)
+
+  /** The claim rule of the reference's classstats finalize
+    * (classstats.rs:113-120 + lib.rs:106-115): deaths accumulate under the
+    * kill target's interned id (the bucket), and each player retrieves one
+    * with `self.data.remove(&subject.id())`, a remove-once lookup by its
+    * SubjectData id (`deathKey`). When two players contend for a bucket the
+    * reference's winner follows its seed-random AHashMap; here the least
+    * (first line, sid) wins -- the deterministic choice, the residual class
+    * of the MalformedPlayer hash. `players`: (sid, first line, death key);
+    * other kinds and a None key claim nothing. Returns bucket -> claimant. */
+  def claims(players: Iterator[(Long, Long, Option[Long])]): Map[Long, Long] =
+    players
+      .collect { case (sid, first, Some(bkey)) if Steam.packedKind(sid) == Steam.K_PLAYER.toInt => bkey -> (first, sid) }
+      .toSeq
+      .groupMapReduce(_._1)(_._2)((a, b) => Ordering[(Long, Long)].min(a, b))
+      .map { case (bkey, (_, sid)) => bkey -> sid }
+
+  /** The two sides of [[TfPipeline.claimDeaths]]: a dim row as [[claims]]
+    * reads it, and a deaths bucket (`sid` = the bucket key). */
+  final case class Claimant(sid: Long, first_line: Long, death_key: Option[Long])
+  final case class Bucket(sid: Long, deaths: Seq[Long])
+
+  // ---------------------------------------------------------------------
   // Chat (A6 + J2, chat.rs:57-77)
   // ---------------------------------------------------------------------
 
   /** The fields of a surviving line that the chat step reads. */
-  trait ChatLine {
-    def line_no: Long
-    def sid: Long
+  trait ChatLine extends SubjectLine {
     def event_type: String
-    def subject: String
     def text: String
   }
-
-  /** State: player sid -> its first-seen SubjectData. */
-  type Subjects = Map[Long, Steam.SubjectData]
 
   /** One chat message; `line_no` orders the messages of a doc. */
   final case class ChatMessage(
@@ -281,33 +328,31 @@ object PlayerModules {
       chat_type: String
   )
 
-  /** Interns each player subject's SubjectData at its first line
-    * (first-seen wins), then emits a say/say_team line of a player subject
-    * whose SubjectData is a player, with that identity. Only player subjects
-    * can emit (F2), so only they are interned. */
-  def chatStep(subjects: Subjects, l: ChatLine, time: Long, emit: ChatMessage => Unit): Subjects =
-    if (Steam.packedKind(l.sid) != 1) subjects
-    else {
-      val next =
-        if (subjects.contains(l.sid)) subjects
-        else subjects.updated(l.sid, Steam.subjectData(l.sid, l.subject))
-      if (l.event_type == "say" || l.event_type == "say_team") {
-        val sd = next(l.sid)
-        if (sd.dataKind == 1)
-          emit(ChatMessage(l.line_no, time, sd.name, sd.steam64Text.get, Option(l.text).getOrElse(""),
-            if (l.event_type == "say") "All" else "Team"))
+  /** Interns each player subject ([[internPlayer]]), then emits a
+    * say/say_team line of a player subject whose SubjectData is a player,
+    * with that identity. Only player subjects can emit (F2), so the state
+    * holds the distinct player sids of one doc. */
+  def chatStep(subjects: Subjects, l: ChatLine, time: Long, emit: ChatMessage => Unit): Subjects = {
+    val next = internPlayer(subjects, l)
+    if (l.event_type == "say" || l.event_type == "say_team")
+      next.get(l.sid).map(_.data).filter(_.dataKind == 1).foreach { sd =>
+        emit(ChatMessage(l.line_no, time, sd.name, sd.steam64Text.get, Option(l.text).getOrElse(""),
+          if (l.event_type == "say") "All" else "Team"))
       }
-      next
-    }
+    next
+  }
 
   // ---------------------------------------------------------------------
-  // The batch fold
+  // The batch folds
   // ---------------------------------------------------------------------
 
-  /** A surviving routed line: [[TfPipeline.routed]]'s module columns. */
+  /** A surviving routed line: [[TfPipeline.routed]]'s module and intern
+    * columns. */
   final case class RoutedLine(
+      line_no: Long,
       time: Long,
       sid: Long,
+      subject: String,
       event_type: String,
       charge: Long,
       duration: Float,
@@ -317,11 +362,14 @@ object PlayerModules {
       target_raw: String,
       dmgOpt: Option[Long],
       healingOpt: Option[Long]
-  ) extends ModuleLine
+  ) extends ModuleLine with SubjectLine
 
   /** A surviving routed line: [[TfPipeline.routed]]'s chat columns. */
   final case class ChatRoutedLine(line_no: Long, time: Long, sid: Long, event_type: String, subject: String,
       text: String) extends ChatLine
+
+  /** A surviving routed line: [[TfPipeline.routed]]'s intern columns. */
+  final case class SubjectRoutedLine(line_no: Long, sid: Long, subject: String) extends SubjectLine
 
   /** One doc's chat, the messages in line order. */
   final case class DocChat(doc_id: String, chat: Seq[ChatMessage])
@@ -336,21 +384,37 @@ object PlayerModules {
     if (chat.isEmpty) Iterator.empty else Iterator.single(DocChat(doc, chat))
   }
 
-  /** The medic, classStats and healSpread states of one doc after its last
-    * line. */
-  final case class DocModules(medics: Map[Long, MedicAcc], cls: ClassDocState, heals: Heals)
+  /** One row of the subject dimension: a subject of a doc, its first-seen
+    * line and that line's SubjectData (`death_key` None = a deterministic
+    * miss). */
+  final case class SubjectRow(doc_id: String, sid: Long, data_kind: Int, name: String, steam64_text: Option[Long],
+      first_line: Long, death_key: Option[Long])
 
-  /** Fold those three modules over one doc's lines, given in line order. */
+  /** Fold only the intern over one doc's lines, given in line order: one
+    * row per distinct sid of the doc. */
+  def subjectRows(doc: String, lines: Iterator[SubjectRoutedLine]): Iterator[SubjectRow] =
+    lines.foldLeft(Map.empty: Subjects)(intern).iterator.map { case (sid, Interned(first, sd)) =>
+      SubjectRow(doc, sid, sd.dataKind, sd.name, sd.steam64Text, first, sd.deathKey)
+    }
+
+  /** The medic, classStats, healSpread and player-intern states of one doc
+    * after its last line. */
+  final case class DocModules(medics: Map[Long, MedicAcc], cls: ClassDocState, heals: Heals, players: Subjects)
+
+  /** Fold those three modules and [[internPlayer]] over one doc's lines,
+    * given in line order. */
   def foldDoc(lines: Iterator[RoutedLine]): DocModules = {
     var medics = Map.empty[Long, MedicAcc]
     var cls = ClassDocState()
     var heals: Heals = Map.empty
+    var players: Subjects = Map.empty
     lines.foreach { l =>
       medics = medicStep(medics, l, l.time)
       cls = classStep(cls, l)
       heals = healStep(heals, l)
+      players = internPlayer(players, l)
     }
-    DocModules(medics, cls, heals)
+    DocModules(medics, cls, heals, players)
   }
 
   private def healMap(m: Map[Long, Long]): Map[Long, Long] =
@@ -382,11 +446,6 @@ object PlayerModules {
       )
     }
 
-  /** A doc's row of the subject dimension for the assembly: a player subject
-    * with its name (`bkey` None), or the deaths bucket `bkey` that subject
-    * `sid` claims ([[TfPipeline.claimDeaths]]' keying). */
-  final case class DimRow(sid: Long, name: String, bkey: Option[Long])
-
   final case class PlayerRow(
       doc_id: String,
       sid: Long,
@@ -399,22 +458,23 @@ object PlayerModules {
       medic: MedicStats
   )
 
-  /** One row per player subject of the doc, zeros where a module has none.
-    * A player's deaths are those of the bucket it claims, so an unclaimed
-    * bucket's deaths are dropped (classstats.rs:113-120). */
-  def playerRows(doc: String, m: DocModules, dim: Iterator[DimRow]): Iterator[PlayerRow] = {
-    val (claims, players) = dim.toSeq.partition(_.bkey.isDefined)
-    val claimed = claims.map(c => c.sid -> c.bkey.get).toMap
+  /** One row per interned player of the doc, named by its SubjectData,
+    * zeros where a module has none. A player's deaths are those of the
+    * bucket it claims ([[claims]]), so an unclaimed bucket's deaths are
+    * dropped (classstats.rs:113-120). */
+  def playerRows(doc: String, m: DocModules): Iterator[PlayerRow] = {
+    val claimed = claims(m.players.iterator.map { case (sid, p) => (sid, p.firstLine, p.data.deathKey) })
+      .map(_.swap) // claimant -> bucket
     val none = ClassAcc()
     def cells(sid: Long): ClassAcc = m.cls.stats.getOrElse(sid, none)
-    players.iterator.map { p =>
-      val c = cells(p.sid)
+    m.players.iterator.map { case (sid, p) =>
+      val c = cells(sid)
       PlayerRow(
-        doc, p.sid, p.name,
-        saturate(c.kills), saturate(claimed.get(p.sid).fold(none)(cells).deaths),
+        doc, sid, p.data.name,
+        saturate(c.kills), saturate(claimed.get(sid).fold(none)(cells).deaths),
         saturate(c.assists), saturate(c.damage),
-        m.heals.get(p.sid).fold(Map.empty[Long, Long])(healMap),
-        m.medics.get(p.sid).fold(medicDefault)(medicStats)
+        m.heals.get(sid).fold(Map.empty[Long, Long])(healMap),
+        m.medics.get(sid).fold(medicDefault)(medicStats)
       )
     }
   }

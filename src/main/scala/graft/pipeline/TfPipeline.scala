@@ -12,10 +12,9 @@ import scala.annotation.unused
   * Spark-first design (SURVEY.md §3.1): every stage is a declarative
   * DataFrame transform built from native expressions, so Catalyst keeps
   * column pruning / filter pushdown. The heavy operators are the per-doc
-  * classification windows, the per-doc sorted passes that fold the
-  * per-player and chat modules ([[PlayerModules]]), and the subject
-  * dimension's aggregate keyed by `(doc_id, subject)` -- no cross-document
-  * shuffle anywhere except the final sink.
+  * classification windows and the per-doc sorted passes that fold the
+  * per-player modules, the subject intern and chat ([[PlayerModules]]) --
+  * no cross-document shuffle anywhere except the final sink.
   *
   * Quirk fidelity notes are in SURVEY.md §7 risk 3 and graft.expr.LineParser.
   */
@@ -204,25 +203,29 @@ object TfPipeline {
     * (Route.writeRouted partitions): the 100 TB shape, where the parse/route
     * leg runs once and every aggregate job reads pruned parquet partitions
     * instead of an in-memory cache. Rows in HandledTypes partitions are by
-    * construction the surviving handled rows; docs that aborted on a hard
-    * error are removed with a broadcast anti-join against the (tiny)
-    * `__error` dead-letter partition, mirroring [[routed]]'s doc abort.
-    * `ts` is re-derived with the parse kernel's fixed-UTC epoch -- NOT
-    * to_timestamp, which silently shifts with spark.sql.session.timeZone. */
+    * construction the surviving handled rows of their doc. One scan, pruned
+    * to those partitions plus the `__error` dead-letter partition, reads
+    * both; after the pointwise projection, a window over the doc flags a doc
+    * holding any `__error` line and drops it whole, mirroring [[routed]]'s
+    * doc abort. That window shares the `start_ts` window's doc_id exchange
+    * and (doc_id, line_no) sort, so the read plans one exchange, whatever
+    * the store holds. `ts` is re-derived with the parse kernel's fixed-UTC
+    * epoch -- NOT to_timestamp, which silently shifts with
+    * spark.sql.session.timeZone. State: the window buffers one doc's lines
+    * at a time. */
   def routedFromStore(stored: DataFrame): DataFrame = {
-    val errorDocs = stored
-      .filter(col("route") === "__error") // partition pruning: tiny
-      .select("doc_id")
-      .distinct()
-    deriveRouted(
-      flattenTyped(
-        stored
-          .filter(col("route").isInCollection(HandledTypes)) // partition pruning
-          .join(broadcast(errorDocs), Seq("doc_id"), "left_anti")
-          .withColumn("ts", graft.expr.GraftExpressions.date_epoch(col("date")))
-          .withColumn("tp", typed_params(col("event_type"), col("params")))
-      )
-    )
+    val err = col("route") === "__error"
+    val lines = flattenTyped(
+      stored
+        .filter(col("route").isInCollection(HandledTypes :+ "__error")) // partition pruning
+        .withColumn("err", err)
+        .withColumn("ts", date_epoch(col("date")))
+        .withColumn("tp", when(!err, typed_params(col("event_type"), col("params"))))
+    ).drop("tp", "params", "date", "route")
+    // the whole doc as the frame, ordered like the `start_ts` window so both
+    // sit on one sort
+    val wholeDoc = wDoc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    deriveRouted(lines.withColumn("aborted", max(col("err")).over(wholeDoc)).filter(!col("aborted")))
   }
 
   /** Flatten the typed fields the modules need into primitive columns
@@ -286,63 +289,43 @@ object TfPipeline {
     *
     * `death_key` is the packed `SubjectData::id()` of a player-INTERNED
     * subject (common.rs:285-295) -- the key the reference's classstats
-    * finalize uses to pull the deaths bucket (`self.data.remove(&subject
-    * .id())`, classstats.rs:113-120), which diverges from the interned sid
-    * for pathological subjects (the interning fast path reads the digits
-    * between the last ':' and ']' of the raw, while SubjectData re-parses
-    * the split steam field and user id). Null = a deterministic miss. */
-  def subjectDim(routedDf: DataFrame): DataFrame =
-    routedDf
-      .groupBy(col("doc_id"), col("sid"))
-      .agg(
-        min_by(col("subject"), col("line_no")).as("first_subject"),
-        min(col("line_no")).as("first_line")
-      )
-      .withColumn("sd", subject_data(col("sid"), col("first_subject")))
-      .select(col("doc_id"), col("sid"), col("sd.data_kind"), col("sd.name"), col("sd.steam64_text"),
-        col("first_line"), col("sd.death_key"))
-
-  /** (doc_id, bkey, claimant): which player-interned subject claims each
-    * deaths bucket -- the first-seen subject per (doc, death_key), as a
-    * single min_by aggregate (no window; first_line is unique per
-    * subject within a doc, sid is a formal tiebreak). */
-  private def deathClaims(dim: DataFrame): DataFrame =
-    dim
-      .filter(shiftrightunsigned(col("sid"), 32) === 1 && col("death_key").isNotNull)
-      .groupBy(col("doc_id"), col("death_key").as("bkey"))
-      .agg(min_by(col("sid"), struct(col("first_line"), col("sid"))).as("claimant"))
-
-  /** Re-key per-bucket deaths arrays by the subject that CLAIMS them, the
-    * distributed twin of the reference's finalize (classstats.rs:113-120 +
-    * lib.rs:106-115): deaths accumulate under the raw kill-target's interned
-    * id, but each player-interned output subject retrieves its array with
-    * `self.data.remove(&subject.id())` -- a remove-once lookup by the
-    * SubjectData-derived id (dim's `death_key`). One subject per bucket: the
-    * reference's iteration order is its seed-random AHashMap, so when two
-    * output subjects contend for one bucket the reference's own winner is
-    * nondeterministic; we take the first-seen subject (first_line, sid) --
-    * the deterministic choice, documented as the residual (same class as the
-    * MalformedPlayer ahash substitution).
+    * finalize uses to pull the deaths bucket ([[PlayerModules.claims]]),
+    * which diverges from the interned sid for pathological subjects (the
+    * interning fast path reads the digits between the last ':' and ']' of
+    * the raw, while SubjectData re-parses the split steam field and user
+    * id). Null = a deterministic miss.
     *
-    * `buckets`: (doc_id, sid, deaths) with sid = bucket key; `dim`:
-    * [[subjectDim]] output. Returns (doc_id, sid, deaths) keyed by the
-    * claiming subject; unclaimed buckets and claimants whose key misses are
-    * dropped (callers default deaths to zeros). Shape: one tiny aggregate +
-    * one union-merge exchange, both keyed (doc_id, x) -- no join, skew-free. */
+    * A projection of one per-doc fold that runs only the intern
+    * ([[PlayerModules.intern]]): no aggregate, and no exchange over the
+    * doc-clustered routed frame. State: one entry per distinct sid of the
+    * doc being folded. */
+  def subjectDim(routedDf: DataFrame): DataFrame = {
+    import routedDf.sparkSession.implicits._
+    routedDf
+      .select(col("doc_id"), col("line_no"), col("sid"), col("subject"))
+      .groupBy(col("doc_id"))
+      .as[String, PlayerModules.SubjectRoutedLine]
+      .flatMapSortedGroups(col("line_no"))(PlayerModules.subjectRows)
+      .toDF()
+  }
+
+  /** Re-key bucket-keyed deaths by the subject that claims them, with the
+    * assembly's claim rule ([[PlayerModules.claims]]) over the players of
+    * `dim` ([[subjectDim]] output). `buckets`: (doc_id, sid, deaths) with
+    * sid = bucket key. Returns (doc_id, sid, deaths) keyed by the claiming
+    * subject; unclaimed buckets are dropped (callers default deaths to
+    * zeros). One cogroup of the two sides by doc. */
   def claimDeaths(buckets: DataFrame, dim: DataFrame): DataFrame = {
-    val claims = deathClaims(dim)
-    buckets
-      .select(col("doc_id"), col("sid").as("bkey"), col("deaths"),
-        lit(null).cast("bigint").as("claimant"))
-      .unionByName(claims.select(col("doc_id"), col("bkey"),
-        lit(null).cast("array<bigint>").as("deaths"), col("claimant")))
-      .groupBy(col("doc_id"), col("bkey"))
-      .agg(
-        first(col("deaths"), ignoreNulls = true).as("deaths"),
-        first(col("claimant"), ignoreNulls = true).as("sid")
-      )
-      .filter(col("sid").isNotNull && col("deaths").isNotNull)
-      .select("doc_id", "sid", "deaths")
+    import buckets.sparkSession.implicits._
+    val bucketsOfDoc = buckets.select(col("doc_id"), col("sid"), col("deaths"))
+      .groupBy(col("doc_id")).as[String, PlayerModules.Bucket]
+    dim.select(col("doc_id"), col("sid"), col("first_line"), col("death_key"))
+      .groupBy(col("doc_id")).as[String, PlayerModules.Claimant]
+      .cogroup(bucketsOfDoc) { (doc, players, bs) =>
+        val claimed = PlayerModules.claims(players.map(p => (p.sid, p.first_line, p.death_key)))
+        bs.flatMap(b => claimed.get(b.sid).map(sid => (doc, sid, b.deaths)))
+      }
+      .toDF("doc_id", "sid", "deaths")
   }
 
   // -------------------------------------------------------------------------
@@ -353,11 +336,11 @@ object TfPipeline {
     * lines in line order. `routed` is already classified and carries the u32
     * `time`, so the fold only steps. The routed frame is clustered by doc and
     * sorted by line (the `start_ts` window), so the grouping plans no
-    * exchange and no sort. */
+    * exchange. */
   private def docLines(routedDf: DataFrame): KeyValueGroupedDataset[String, PlayerModules.RoutedLine] = {
     import routedDf.sparkSession.implicits._
     routedDf
-      .select(col("doc_id"), col("line_no"), col("time"), col("sid"), col("event_type"),
+      .select(col("doc_id"), col("line_no"), col("time"), col("sid"), col("subject"), col("event_type"),
         col("charge"), col("duration"), col("f_time"), col("class_str"), col("target_kind"),
         col("target_raw"), col("dmg").as("dmgOpt"), col("healing").as("healingOpt"))
       .groupBy(col("doc_id"))
@@ -432,29 +415,20 @@ object TfPipeline {
     * separately timeable, and the right shape for sinks that do their own
     * partitioning.
     *
-    * ONE per-doc pass: each doc's routed lines, in line order, cogrouped
-    * with the doc's dim rows -- every player subject with its name, and
-    * every death claim of [[claimDeaths]]' keying. The pass folds the
-    * [[PlayerModules]] steps and emits one row per player: its kills,
-    * assists, damage, heals and medic, and the deaths of the bucket it
-    * claims (zeros where a module has none). Both sides are keyed by doc
-    * alone, so over the doc-clustered routed frame and a dim derived from it
-    * the pass plans no exchange; the key space is (doc, player), so the
-    * shape is skew-free at 100 TB. */
-  def perPlayerAssembled(routedDf: DataFrame, dim: DataFrame): DataFrame = {
+    * ONE per-doc fold over the routed lines, in line order: the
+    * [[PlayerModules]] steps and the player intern, then, at the doc's end,
+    * the claim rule ([[PlayerModules.claims]]). One row per interned player:
+    * its SubjectData name, kills, assists, damage, heals and medic, and the
+    * deaths of the bucket it claims (zeros where a module has none). `dim`
+    * is not read (the fold interns the players itself); the parameter stays
+    * for existing callers. Over the doc-clustered routed frame the fold
+    * plans no exchange and no aggregate; the key space is (doc, player), so
+    * the shape is skew-free at 100 TB. State: one doc's module maps and its
+    * distinct player sids. */
+  def perPlayerAssembled(routedDf: DataFrame, @unused dim: DataFrame): DataFrame = {
     import routedDf.sparkSession.implicits._
-    // the dim side: each player's name, and the bucket each claimant claims
-    val dimRows = dim
-      .filter(shiftrightunsigned(col("sid"), 32) === 1) // SubjectId::steam_id() is Some
-      .select(col("doc_id"), col("sid"), col("name"), lit(null).cast("bigint").as("bkey"))
-      .unionByName(deathClaims(dim).select(col("doc_id"), col("claimant").as("sid"),
-        lit(null).cast("string").as("name"), col("bkey")))
-      .groupBy(col("doc_id"))
-      .as[String, PlayerModules.DimRow]
-
     docLines(routedDf)
-      .cogroupSorted(dimRows)(col("line_no"))()((doc, lines, dimOfDoc) =>
-        PlayerModules.playerRows(doc, PlayerModules.foldDoc(lines), dimOfDoc))
+      .flatMapSortedGroups(col("line_no"))((doc, lines) => PlayerModules.playerRows(doc, PlayerModules.foldDoc(lines)))
       .select(
         col("doc_id"),
         concat(lit("[U:1:"), col("sid").bitwiseAND(lit(0xffffffffL)), lit("]")).as("steam3"),

@@ -203,15 +203,16 @@ object ReferenceSim {
                     if (a3 >= 0) a3 else Steam.steam2Account(parts(2))
                   }
                   // plain u16 parse (no clamp): error -> MalformedPlayer.
-                  // ASCII digits only: Rust's parse::<u16> rejects the other
-                  // Unicode decimal digits that isDigit/parseLong accept
-                  val uidOk = parts(1).nonEmpty && parts(1).length <= 18 &&
-                    parts(1).forall(c => c >= '0' && c <= '9') && java.lang.Long.parseLong(parts(1)) <= 65535L
-                  if (acct >= 0 && uidOk)
+                  // Rust's u16::from_str: an optional '+', then ASCII digits
+                  // only (not the other Unicode decimal digits that
+                  // isDigit/parseLong accept), leading zeros allowed
+                  val uid =
+                    if (!parts(1).matches("\\+?[0-9]+")) None
+                    else Some(BigInt(parts(1).stripPrefix("+"))).filter(_ <= 65535).map(_.toLong)
+                  if (acct >= 0 && uid.isDefined)
                     new SubjData(1, parts(0), Steam.steam64(acct), lineNo, (Steam.K_PLAYER << 32) | acct)
-                  else if (uidOk) // Bot
-                    new SubjData(2, parts(0), -1L, lineNo,
-                      (Steam.K_BOT << 32) | java.lang.Long.parseLong(parts(1)))
+                  else if (uid.isDefined) // Bot
+                    new SubjData(2, parts(0), -1L, lineNo, (Steam.K_BOT << 32) | uid.get)
                   else new SubjData(3, raw.subject, -1L, lineNo, -1L) // MalformedPlayer
                 } else new SubjData(3, raw.subject, -1L, lineNo, -1L)
               } else new SubjData(Steam.packedKind(sid), raw.subject, -1L, lineNo, sid)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.pipeline.{Route, TfPipeline}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import java.nio.file.Paths
 
@@ -65,11 +66,19 @@ object StreamIngest {
 
   /** Read back ONLY committed batches (`batch` and `route` come back as
     * partition columns). This read spans batches x routes directories, so it
-    * keeps Spark's own (parallel past 32 directories) listing. */
+    * keeps Spark's own (parallel past 32 directories) listing; the schema is
+    * the written one, so nothing is inferred, and batches that all landed
+    * empty read as zero rows. */
   def readCommitted(spark: SparkSession, dir: String): DataFrame = {
     val batches = committedBatches(dir).toSeq.sorted
     require(batches.nonEmpty, s"no committed batches under $dir")
     val paths = batches.map(b => s"$dir/batches/batch=$b")
-    spark.read.option("basePath", s"$dir/batches").parquet(paths: _*)
+    // the routing plan's schema over an empty input (no job), nullable as
+    // parquet stores it, then the partition columns
+    val empty = spark.createDataFrame(java.util.List.of[Row](), StreamingPipeline.inputSchema)
+    val written = TfPipeline.routable(TfPipeline.envelope(empty)).schema
+    val schema = StructType(written.filterNot(_.name == "route")).toNullable
+      .add("batch", LongType).add("route", StringType)
+    spark.read.schema(schema).option("basePath", s"$dir/batches").parquet(paths: _*)
   }
 }

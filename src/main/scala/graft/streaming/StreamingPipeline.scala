@@ -376,8 +376,9 @@ object StreamingPipeline {
   /** A chat message of a doc, as the stream emits it. */
   final case class ChatRow(doc_id: String, msg: PlayerModules.ChatMessage)
 
-  /** Streaming chat on the per-doc machine (state: player sid -> its
-    * first-seen SubjectData, [[PlayerModules.chatStep]]): say/say_team
+  /** Streaming chat on the per-doc machine (state: the player intern of
+    * [[PlayerModules.chatStep]], one entry per distinct player sid of the
+    * doc -- its first-seen line and SubjectData): say/say_team
     * messages of player subjects with a player identity, emitted at their
     * line with doc-relative time, flattened to (doc_id, line_no, time, name,
     * steam_id, message, chat_type). Each message is emitted exactly once

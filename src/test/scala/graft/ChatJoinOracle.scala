@@ -27,8 +27,10 @@ object ChatJoinOracle {
   def subjectDim(routedDf: DataFrame): DataFrame = {
     val sp = split_player_subject(col("first_subject"))
     val acct = steam_text_account(sp.getField("steam"))
-    val uidOk = sp.getField("user_id").rlike("^[0-9]{1,18}$") &&
-      sp.getField("user_id").cast("long") <= 65535L
+    // u16::from_str: an optional '+', ASCII digits, leading zeros allowed
+    val digits = regexp_replace(sp.getField("user_id"), "^\\+?0*", "")
+    val uidOk = sp.getField("user_id").rlike("^\\+?[0-9]+$") && length(digits) <= 5 &&
+      lpad(digits, 5, "0") <= lit("65535")
     routedDf
       .groupBy(col("doc_id"), col("sid"))
       .agg(
@@ -64,7 +66,7 @@ object ChatJoinOracle {
           col("kind") === 1,
           when(col("data_kind") === 1, lit(Steam.K_PLAYER << 32) + acct)
             .when(col("data_kind") === 2,
-              lit(Steam.K_BOT << 32) + sp.getField("user_id").cast("long"))
+              lit(Steam.K_BOT << 32) + lpad(digits, 5, "0").cast("long"))
         )
       )
       .select("doc_id", "sid", "data_kind", "name", "steam64_text", "first_line", "death_key")

@@ -82,8 +82,16 @@ class ChatPassSpec extends AnyFunSuite {
       "U1<65535><[U:1:11]><Red>", // largest u16 uid: a player
       "U2<65536><[U:1:12]><Red>", // u16 overflow: malformed
       "U3<000000000000000007><[U:1:13]><Red>", // 18 digits: a player
-      "U4<0000000000000000007><[U:1:14]><Red>", // 19 digits: malformed
+      "U4<0000000000000000007><[U:1:14]><Red>", // 19 digits, leading zeros: a player
       "U5<><[U:1:15]><Red>", // empty uid: malformed
+      // Rust's u16::from_str: an optional '+', then ASCII digits with any
+      // number of leading zeros
+      "U6<+5><[U:1:16]><Red>", // leading '+': a player
+      "U7<0005><[U:1:17]><Red>", // leading zeros: a player
+      "U8<00000000000000000007><[U:1:18]><Red>", // 20 digits, zero-padded: a player
+      "U9<+><[U:1:19]><Red>", // a lone '+': malformed
+      "U10<-1><[U:1:20]><Red>", // a sign u16 rejects: malformed
+      "B2<+6><BOT><Red>", // interned Bot(6) through the same uid parse
       "S2<8><STEAM_0:1:4444><Blue>", // steam2 text: player 8889
       "J<7><[U:1:6006]x><Blue>", // steam3 with trailing junk: a bot with uid 7
       "NoSplit<[U:1:77]>", // no 4-way split: malformed
@@ -103,7 +111,7 @@ class ChatPassSpec extends AnyFunSuite {
     try {
       assert(routed.count() == lines.size, "every line survives")
       val (dims, chats, msgs) = assertEqualToOracle(routed, "edges")
-      assert((dims, chats, msgs) == (11, 1, 6), s"rows: ${(dims, chats, msgs)}")
+      assert((dims, chats, msgs) == (17, 1, 10), s"rows: ${(dims, chats, msgs)}")
       // the edges are really resolved as described, not vacuously equal
       val dim = TfPipeline.subjectDim(routed)
         .select("sid", "data_kind", "name", "steam64_text", "death_key").as[(Long, Int, String, Option[Long], Option[Long])]
@@ -111,7 +119,10 @@ class ChatPassSpec extends AnyFunSuite {
       def p(acct: Long) = (Steam.K_PLAYER << 32) | acct
       def kinds(ids: Long*) = ids.map(id => dim(id)._2)
       assert(kinds(p(11), p(12), p(13), p(14), p(15), p(8889), p(6006), p(77), (Steam.K_BOT << 32) | 5, p(1001)) ==
-        Seq(1, 3, 1, 3, 3, 1, 2, 3, 1, 1), s"data kinds: $dim")
+        Seq(1, 3, 1, 1, 3, 1, 2, 3, 1, 1), s"data kinds: $dim")
+      assert(kinds(p(16), p(17), p(18), p(19), p(20), (Steam.K_BOT << 32) | 6) == Seq(1, 1, 1, 3, 3, 2),
+        s"uid grammar: $dim")
+      assert(dim(p(16)) == ((p(16), 1, "U6", Some(Steam.steam64(16)), Some(p(16)))), "'+5' player")
       assert(dim(p(8889)) == ((p(8889), 1, "S2", Some(Steam.steam64(8889)), Some(p(8889)))), "steam2 player")
       assert(dim(p(6006)) == ((p(6006), 2, "J", None, Some((Steam.K_BOT << 32) | 7))), "junk-steam bot id")
       assert(dim((Steam.K_BOT << 32) | 5) == (((Steam.K_BOT << 32) | 5, 1, "B", None, None)), "kind-2 bot")
@@ -120,7 +131,7 @@ class ChatPassSpec extends AnyFunSuite {
       assert(dim(Steam.K_CONSOLE << 32)._3 == null, "console has no raw subject")
       val names = TfPipeline.chatPass(routed).select(inline(col("chat"))).select("name", "chat_type")
         .as[(String, String)].collect().toSeq
-      assert(names == Seq("U1" -> "All", "U3" -> "All", "S2" -> "All", "A" -> "All", "A" -> "All", "A" -> "Team"),
+      assert(names == Seq("U1", "U3", "U4", "U6", "U7", "U8", "S2", "A", "A").map(_ -> "All") :+ ("A" -> "Team"),
         s"messages: $names")
     } finally { routed.unpersist(); () }
   }

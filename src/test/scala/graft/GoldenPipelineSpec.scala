@@ -176,7 +176,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
   }
 
   test("classstats deaths are claimed by SubjectData id, not the interned sid (classstats.rs:119)") {
-    // Four shapes in one doc (see TfPipeline.claimDeaths):
+    // Four shapes in one doc (see PlayerModules.claims):
     //  A  normal player: claims its own bucket;
     //  B  "O<70000><[U:1:5005]><Red>": interned Player(5005) via the ':5005]'
     //     fast scan, SubjectData = MalformedPlayer (u16 overflow) -> the
@@ -235,9 +235,9 @@ class GoldenPipelineSpec extends AnyFunSuite {
   test("perPlayer assembly plan contains exactly ONE per-doc module pass (no double execution)") {
     // Regression guard for the double-reference trap: a DataFrame referenced
     // from two union branches is EXECUTED twice -- Spark does no cross-branch
-    // subtree CSE. The assembly folds the modules and re-keys the deaths in
-    // ONE per-doc pass: the plan's one CoGroup node (routed lines cogrouped
-    // with the dim rows), and no MapGroups (the projections' pass).
+    // subtree CSE. The assembly folds the modules and the player intern and
+    // re-keys the deaths in ONE per-doc pass: the plan's one MapGroups node,
+    // and no CoGroup (the dim is not read).
     val input = LogGen.generate(spark, 2, 200, Seed).toDF()
     val routed = TfPipeline.routed(TfPipeline.envelope(input))
     val plan = TfPipeline
@@ -246,7 +246,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
       .optimizedPlan
     import org.apache.spark.sql.catalyst.plans.logical.{CoGroup, Join, MapGroups}
     val passes = plan.collect { case g @ (_: CoGroup | _: MapGroups) => g.nodeName }
-    assert(passes == Seq("CoGroup"), s"expected exactly one per-doc module pass, found $passes")
+    assert(passes == Seq("MapGroups"), s"expected exactly one per-doc module pass, found $passes")
     // chat: one per-doc pass (MapGroups) and no join with the dim
     val chatPlan = TfPipeline.chat(routed, TfPipeline.subjectDim(routed)).queryExecution.optimizedPlan
     val chatPasses = chatPlan.collect { case g @ (_: CoGroup | _: MapGroups | _: Join) => g.nodeName }
@@ -276,6 +276,42 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(TfPipeline.chat(routed, dim).isEmpty, "batch chat")
     val pp = TfPipeline.perPlayer(routed, dim).select("steam3", "name").as[(String, String)].collect().toSeq
     assert(pp == Seq("[U:1:5]" -> raw), s"batch per-player: $pp")
+  }
+
+  test("uid grammar: Rust's u16::from_str takes a leading '+' and leading zeros, in the simulator and in batch") {
+    // Hand-derived from the documented FromStr grammar: an optional '+',
+    // then one or more ASCII digits (leading zeros allowed), value <= 65535.
+    // Empty, a lone '+', a '-' and an overflow are parse errors, so the
+    // subject's SubjectData is MalformedPlayer (name = the raw subject).
+    import spark.implicits._
+    val cases = Seq(
+      "+5" -> 1, "0005" -> 1, "00000000000000000007" -> 1,
+      "65536" -> 3, "+" -> 3, "-1" -> 3, "" -> 3
+    )
+    val raws = cases.zipWithIndex.map { case ((uid, _), i) => s"P$i<$uid><[U:1:${100 + i}]><Red>" }
+    // the interning fallback parses the uid the same way: Bot(6)
+    val bot = "B<+6><BOT><Blue>"
+    val lines = (raws :+ bot).zipWithIndex.map { case (raw, i) => f"""04/11/2021 - 13:53:$i%02d: "$raw" say "hi"""" }.toVector
+    val sim = ReferenceSim.run(lines)
+    assert(!sim.hardError)
+    def p(acct: Long) = (graft.expr.Steam.K_PLAYER << 32) | acct
+    val expected = cases.zipWithIndex.map { case ((_, kind), i) =>
+      (p(100L + i), kind, if (kind == 1) s"P$i" else raws(i))
+    } :+ (((graft.expr.Steam.K_BOT << 32) | 6L, 2, "B"))
+    assert(sim.subjects.map(s => (s.sid, s.dataKind, s.name)) == expected, s"sim: ${sim.subjects}")
+    assert(sim.chat.size == 3, s"sim chat: ${sim.chat}")
+    val input = lines.zipWithIndex.map { case (l, i) =>
+      val toks = LogGen.tokenize(l)
+      graft.loggen.SeqRow("uid-doc", i.toLong, "src-0", toks, toks.length)
+    }.toDF()
+    val routed = TfPipeline.routed(TfPipeline.envelope(input))
+    val dim = TfPipeline.subjectDim(routed)
+    assert(dim.select("sid", "data_kind", "name").as[(Long, Int, String)].collect().toSeq.sortBy(_._1) ==
+      expected.sortBy(_._1), "batch dim")
+    val chat = TfPipeline.chatPass(routed).select(inline(col("chat"))).select("name").as[String].collect().toSeq
+    assert(chat == Seq("P0", "P1", "P2"), s"batch chat: $chat")
+    val pp = TfPipeline.perPlayer(routed, dim).select("name").as[String].collect().toSeq
+    assert(pp == expected.take(cases.size).map(_._3), s"batch per-player: $pp")
   }
 
   test("routed rows preserve the token array exactly (per-row invariant)") {

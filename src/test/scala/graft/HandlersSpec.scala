@@ -22,10 +22,11 @@ class HandlersSpec extends AnyFunSuite {
   test("custom HighestDamage module composes with built-ins and matches max") {
     val routed = TfPipeline.routed(TfPipeline.envelope(LogGen.generate(spark, 2, 400, 7L).toDF())).cache()
     val dim = TfPipeline.subjectDim(routed)
+    val healSpread: Handlers.PerPlayerModule = (r, _) => TfPipeline.healSpread(r)
     val out = Handlers.composePerPlayer(
       routed,
       dim,
-      Seq("heal_spread" -> Handlers.perPlayerModules("heal_spread"), "hd" -> Handlers.highestDamage)
+      Seq("heal_spread" -> healSpread, "hd" -> Handlers.highestDamage)
     )
     val got = out
       .filter(col("highest_damage").isNotNull)

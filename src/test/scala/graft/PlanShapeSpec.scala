@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -250,28 +250,28 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     dim.count()
     try {
       // the cached hub keeps the classify window's doc_id partitioning and
-      // line order: the module pass cogroups it with the dim rows without an
-      // exchange or a window; the only aggregate is the death claims'
-      // (partial and final)
+      // line order: the assembly is one per-doc fold over it, with no
+      // exchange, window or aggregate (the dim is not read); the dim is a
+      // fold of the intern alone, with no exchange or aggregate either
       val assembled = run(TfPipeline.perPlayerAssembled(routed, dim))
       assembled.check(assembled.shuffles.isEmpty && assembled.broadcasts.isEmpty, "hub assembly: 0 shuffles, 0 broadcasts")
       assembled.check(assembled.windows.isEmpty, "hub assembly: no Window")
-      assembled.check(assembled.count[SortAggregateExec] == 2,
-        s"hub assembly: 2 SortAggregate, got ${assembled.count[SortAggregateExec]}")
+      assembled.check(assembled.count[BaseAggregateExec] == 0,
+        s"hub assembly: no aggregate, got ${assembled.count[BaseAggregateExec]}")
+      val dimPlan = run(TfPipeline.subjectDim(routed))
+      dimPlan.check(dimPlan.shuffles.isEmpty && dimPlan.count[BaseAggregateExec] == 0, "hub dim: no exchange, no aggregate")
       // chat is one per-doc pass over the hub: no exchange, join or aggregate
       val chat = run(TfPipeline.chat(routed, dim))
       chat.check(chat.shuffles.isEmpty && chat.broadcasts.isEmpty, "hub chat: 0 shuffles, 0 broadcasts")
       chat.check(chat.count[BaseJoinExec] == 0 && chat.count[BaseAggregateExec] == 0, "hub chat: no join, no aggregate")
     } finally { dim.unpersist(blocking = true); routed.unpersist(blocking = true) }
 
-    // As planned, the store scan carries the `__error` anti-join (one hash
-    // exchange and one broadcast). On a store without a hard-error doc AQE
-    // drops it at run time; one hard-error doc keeps it. The other exchanges
-    // of the assembly are the classify window's doc_id exchange and two of
-    // the small dim (re-keyed for the death claims and for the cogroup);
-    // chat's one other exchange is the classify window's.
-    storeCounts(input, assembly = ((4, 1), (3, 0)), chat = ((2, 1), (1, 0)))
-    storeCounts(input.unionByName(hardErrorDoc), assembly = ((4, 1), (4, 1)), chat = ((2, 1), (2, 1)))
+    // The store scan reads the `__error` partition with the handled ones,
+    // and the aborted-doc window shares the `start_ts` window's doc_id
+    // exchange: the assembly and chat each plan that one exchange and no
+    // broadcast, with or without a hard-error doc in the store.
+    storeCounts(input, assembly = ((1, 0), (1, 0)), chat = ((1, 0), (1, 0)))
+    storeCounts(input.unionByName(hardErrorDoc), assembly = ((1, 0), (1, 0)), chat = ((1, 0), (1, 0)))
   }
 
   /** One doc whose truncated kill line is followed within 60 s by another
@@ -307,6 +307,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           val e = run(df)
           e.check((e.shuffles.size, e.broadcasts.size) == finalShape,
             s"store $name: $finalShape (shuffles, broadcasts), got ${(e.shuffles.size, e.broadcasts.size)}")
+          e.check(e.count[SortExec] == 1, s"store $name: both store windows and the fold share one sort")
           e.check(
             e.scans.nonEmpty && e.scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "route"))),
             "every store scan is pruned by a route partition filter")

@@ -150,7 +150,7 @@ class ReadBackSpec extends AnyFunSuite {
     val expected = routable(full)
     assert(stored.count() == expected.count())
     assert(rows(stored.drop("batch")) == rows(expected.select(stored.drop("batch").columns.map(col): _*)))
-    assert(stored.select("batch").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(stored.select("batch").distinct().collect().map(_.getLong(0)).toSeq == Seq(1L))
     full.unpersist()
   }
 }

@@ -79,4 +79,16 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(audit.select("batch").distinct().count() == committed1.size.toLong)
     full.unpersist()
   }
+
+  test("a store whose committed batches all landed empty reads back as zero rows") {
+    spark.sparkContext.setLogLevel("WARN")
+    val storeDir = Files.createTempDirectory("graft-stream-empty").toString
+    val empty = LogGen.generate(spark, 1, 10, 42L).toDF().limit(0)
+    StreamIngest.commitBatch(spark, empty, storeDir, 0)
+    assert(StreamIngest.committedBatches(storeDir) == Set(0L))
+    val stored = StreamIngest.readCommitted(spark, storeDir)
+    assert(stored.count() == 0)
+    assert(stored.columns.toSeq.takeRight(2) == Seq("batch", "route"))
+    assert(TfPipeline.routedFromStore(stored).count() == 0, "the store read runs over it")
+  }
 }
