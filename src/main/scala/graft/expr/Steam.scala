@@ -46,7 +46,10 @@ object Steam {
     raw.substring(s + 1, e)
   }
 
-  /** Strict u32 parse (no clamp -- SubjectId uses plain `parse()`). */
+  /** Strict u32 parse of the steam2/steam3 text fields: 1..10 ASCII digits,
+    * no sign, no clamp. Narrower than Rust's `u32::from_str`
+    * ([[fromStrUnsigned]]); kept as is, since the reference source of these
+    * text parsers is not at hand to derive their grammar from. */
   private def parseU32(s: String): Long = {
     if (s == null || s.isEmpty || s.length > 10) return -1L
     var i = 0
@@ -61,13 +64,31 @@ object Steam {
     v
   }
 
-  /** Rust's `u16::from_str`: an optional leading '+', then one or more
-    * ASCII digits (leading zeros allowed), at most 65535; else -1. */
-  private def parseU16(s: String): Long = {
-    val d = if (s != null && s.startsWith("+")) s.substring(1) else s
-    if (d == null || d.isEmpty || !d.forall(c => c >= '0' && c <= '9')) -1L
-    else { val v = BigInt(d); if (v > 0xffff) -1L else v.toLong }
+  /** Rust's `FromStr` for an unsigned integer at most `max`: an optional
+    * leading '+', then one or more ASCII digits (leading zeros allowed);
+    * else -1. */
+  private def fromStrUnsigned(s: String, max: Long): Long =
+    if (s == null) -1L
+    else { val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8); fromStrUnsigned(b, 0, b.length, max) }
+
+  /** The same grammar over the UTF-8 bytes `b[from, until)`: a non-ASCII
+    * char is never a digit. */
+  private def fromStrUnsigned(b: Array[Byte], from: Int, until: Int, max: Long): Long = {
+    var i = if (from < until && b(from) == '+') from + 1 else from
+    if (i >= until) return -1L
+    var v = 0L
+    while (i < until) {
+      val c = b(i)
+      if (c < '0' || c > '9') return -1L
+      v = v * 10 + (c - '0')
+      if (v > max) return -1L
+      i += 1
+    }
+    v
   }
+
+  /** Rust's `u16::from_str`: at most 65535. */
+  private def parseU16(s: String): Long = fromStrUnsigned(s, 0xffffL)
 
   /** rsplitn(4, '<') player-subject split: (name, user_id, steam_id, team)
     * with trailing '>' stripped from the last three; null on malformed
@@ -135,10 +156,10 @@ object Steam {
 
   /** SubjectId::try_from for a raw PLAYER subject string (common.rs:236-255). */
   def playerSubjectId(raw: String): Long = {
-    // fast path: find_between_end(raw, ':', ']') -> u32
+    // fast path: find_between_end(raw, ':', ']') -> u32::from_str
     val fast = findBetweenEnd(raw, ':', ']')
     if (fast != null) {
-      val acct = parseU32(fast)
+      val acct = fromStrUnsigned(fast, 0xffffffffL)
       if (acct >= 0) return (K_PLAYER << 32) | acct
     }
     val parts = splitPlayerSubject(raw)
@@ -211,21 +232,6 @@ object Steam {
   // succeeds the result is IDENTICAL by construction. Any other shape falls
   // back to the String functions (rare: malformed subjects, steam2 text).
 
-  private def parseU32Bytes(b: Array[Byte], from: Int, until: Int): Long = {
-    val len = until - from
-    if (len <= 0 || len > 10) return -1L
-    var i = from
-    var v = 0L
-    while (i < until) {
-      val c = b(i)
-      if (c < '0' || c > '9') return -1L
-      v = v * 10 + (c - '0')
-      if (v > 0xffffffffL) return -1L
-      i += 1
-    }
-    v
-  }
-
   /** Byte twin of [[playerSubjectId]]'s fast path; falls back for the rest. */
   def playerSubjectIdU(raw: org.apache.spark.unsafe.types.UTF8String): Long = {
     val b = raw.getBytes
@@ -235,7 +241,7 @@ object Steam {
       var s = e - 1
       while (s >= 0 && b(s) != ':') s -= 1
       if (s >= 0) {
-        val acct = parseU32Bytes(b, s + 1, e)
+        val acct = fromStrUnsigned(b, s + 1, e, 0xffffffffL)
         if (acct >= 0) return (K_PLAYER << 32) | acct
       }
     }

@@ -12,9 +12,11 @@ import scala.annotation.unused
   * Spark-first design (SURVEY.md §3.1): every stage is a declarative
   * DataFrame transform built from native expressions, so Catalyst keeps
   * column pruning / filter pushdown. The heavy operators are the per-doc
-  * classification windows and the per-doc sorted passes that fold the
-  * per-player modules, the subject intern and chat ([[PlayerModules]]) --
-  * no cross-document shuffle anywhere except the final sink.
+  * recovery window, which runs the reference's sequential recovery step
+  * ([[Recovery.step]], the one the stream runs) as a running aggregate in
+  * line order, and the per-doc sorted passes that fold the per-player
+  * modules, the subject intern and chat ([[PlayerModules]]) -- no
+  * cross-document shuffle anywhere except the final sink.
   *
   * Quirk fidelity notes are in SURVEY.md §7 risk 3 and graft.expr.LineParser.
   */
@@ -41,6 +43,7 @@ object TfPipeline {
   )
 
   private val wDoc = Window.partitionBy("doc_id").orderBy("line_no")
+  private val wholeDoc = wDoc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
   // -------------------------------------------------------------------------
   // Stage 1+2: decode + envelope
@@ -76,105 +79,43 @@ object TfPipeline {
   // Stage 3: classification + routing
   // -------------------------------------------------------------------------
 
-  /** Adds `pm` (typed params map), `typed_err`, `drop` and `hard_error`
-    * columns implementing the truncated-line recovery (lib.rs:68-99):
-    *  (a) error + params embed a same-date `L MM/DD/YYYY` -> silently dropped;
-    *  (b) otherwise the NEXT physical line is consumed (never evaluated
-    *      itself) and both are dropped when the consumed line's raw
-    *      timestamp jumps >60s; anything else is a hard error.
-    *
-    * Consumption is SEQUENTIAL in the reference: within a run of consecutive
-    * candidate-error lines only the 1st/3rd/5th... actually error-and-consume;
-    * the even-offset lines are consumed and their own errors never evaluated,
-    * and a non-error line right after an odd-length run is consumed too.
-    * That recurrence (consumed(i) = E(i-1); E(i) = cand(i) && !consumed(i))
-    * resolves to alternating parity within each maximal `cand` run, which is
-    * what the windowed formulation below computes -- exactly, for chains of
-    * any length, with no driver-side iteration.
-    *
-    * Invalid dates mirror the reference's `unwrap_or(timestamp(0))` in the
-    * recovery comparison (null ts -> 0) and its process-path `unwrap()` panic
-    * (handled, unconsumed, error-free line with null ts -> hard error).
-    */
-  def classified(env: DataFrame): DataFrame = classifyFlags(classifyPointwise(env))
-
-  /** Pointwise half of [[classified]]: one-pass typed params struct `tp`,
-    * handled/typed_err flags and the consume-candidate flag -- no window, so
-    * callers can prune heavyweight payload columns (params, tp, date) BEFORE
-    * the per-doc window exchange that [[classifyFlags]] introduces. */
+  /** Pointwise classification: the one-pass typed params struct `tp` and
+    * the `handled`, `typed_err` and `rescue_a` flags [[Recovery.step]]
+    * reads -- no window, so callers can prune heavyweight payload columns
+    * (params, tp, date) BEFORE the per-doc exchange. */
   def classifyPointwise(env: DataFrame): DataFrame = {
     val handled = col("status") === 0 && col("event_type").isInCollection(HandledTypes)
-    val withPm = env
+    env
       .withColumn("handled", handled)
-      .withColumn(
-        "tp",
-        when(handled, typed_params(col("event_type"), col("params")))
-      )
-      .withColumn(
-        "typed_err",
-        coalesce(when(handled, col("tp").getField("err")), lit(false))
-      )
-    val rescueA =
-      col("typed_err") && col("params").contains(concat(lit("L "), substring(col("date"), 1, 10)))
-    withPm
-      .withColumn("rescue_a", rescueA)
-      // cand: an error line that, IF evaluated, consumes its successor
-      .withColumn("cand", col("typed_err") && !col("rescue_a"))
+      .withColumn("tp", when(handled, typed_params(col("event_type"), col("params"))))
+      .withColumn("typed_err", coalesce(when(handled, col("tp").getField("err")), lit(false)))
+      .withColumn("rescue_a",
+        col("typed_err") && col("params").contains(concat(lit("L "), substring(col("date"), 1, 10))))
   }
 
-  /** Window half of [[classified]]: sequential-consumption recovery flags
-    * over the doc order. Only reads small fixed-width columns (status, ts,
-    * handled, typed_err, cand); everything else is passthrough payload. */
-  def classifyFlags(pw: DataFrame): DataFrame = {
-    val wRun = wDoc.rowsBetween(Window.unboundedPreceding, 0)
-    val consumesNext = col("consume") && col("has_next")
-    pw
-      // window pass 1: everything that reads only base columns, adjacent so
-      // CollapseWindow fuses them into ONE WindowExec over the shared
-      // (doc_id, line_no) sort
-      .withColumn("idx", row_number().over(wDoc))
-      .withColumn("next_ts", lead(col("ts"), 1).over(wDoc))
-      .withColumn("next_status", lead(col("status"), 1).over(wDoc))
-      // status is a non-null envelope byte, so next_status is null exactly
-      // past the partition end
-      .withColumn("has_next", col("next_status").isNotNull)
-      // window pass 2 (depends on idx): idx of the last non-cand line
-      // at-or-before this row = run anchor
-      .withColumn("run_anchor", max(when(!col("cand"), col("idx"))).over(wRun))
-      // E: evaluated-and-consuming error = cand at an even 0-based offset
-      // within its maximal cand run (odd offsets are consumed, inert)
-      .withColumn(
-        "consume",
-        col("cand") && pmod(col("idx") - coalesce(col("run_anchor"), lit(0L)) - 1, lit(2)) === 0
-      )
-      // window pass 3 (depends on consume)
-      .withColumn("consumed", coalesce(lag(col("consume"), 1).over(wDoc), lit(false)))
-      .withColumn("consumes_next", consumesNext)
-      .withColumn(
-        "hard_error",
-        (col("status") === 2) || // envelope Malformed
-        (col("handled") && !col("typed_err") && !col("consumed") && col("ts").isNull) || // date panic
-        (consumesNext && !(col("next_status") === 0 &&
-          coalesce(col("next_ts"), lit(0L)) - coalesce(col("ts"), lit(0L)) > 60))
-      )
-      .withColumn("drop", col("typed_err") || col("consumed"))
-      .drop("rescue_a", "cand", "idx", "run_anchor", "consume", "consumed",
-        "has_next", "next_ts", "next_status")
-  }
+  /** Runs [[Recovery.step]] down each doc in line order, as a running window
+    * aggregate: adds the step's per-line `consumed`, `pair_abort`, `aborted`
+    * (at or before the line) and `time` (Some on a surviving handled line).
+    * One WindowExec over the doc_id exchange and (doc_id, line_no) sort. */
+  private def recovered(pw: DataFrame): DataFrame =
+    pw.withColumn("rec", Recovery.running.over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select(col("*"), col("rec.*"))
+      .drop("rec")
 
   /** Surviving handled rows with event time: the aggregate layer's input.
     * `time` = u32 seconds since the first surviving handled line per doc
-    * (module/mod.rs:37-44). Narrow: heavyweight payload columns (tokens,
-    * raw params) are pruned BEFORE the per-doc window exchange -- they are
-    * only needed on the route-write path ([[routable]]).
+    * (module/mod.rs:37-44), as [[Recovery.step]] gives it. Narrow:
+    * heavyweight payload columns (tokens, raw params) are pruned BEFORE the
+    * per-doc window exchange -- they are only needed on the route-write path
+    * ([[routable]]).
     *
     * DOC-LEVEL ABORT: the reference's parse() returns Err on the first hard
     * error, so a log with ANY hard-error line produces NO output at all
-    * (main.rs propagates the error). Docs containing a hard_error line are
-    * therefore excluded wholesale -- computed with an unordered max window
-    * on the doc_id partitioning the per-doc windows already require (no
-    * extra exchange), not a driver-side pass. The aborted lines remain
-    * visible on the dead-letter path ([[routable]] `__error` routes). */
+    * (main.rs propagates the error). A doc whose step aborts anywhere is
+    * excluded whole -- `max(aborted)` over the whole doc, a second window on
+    * the same doc_id partitioning and line sort (no extra exchange), not a
+    * driver-side pass. The aborted lines remain visible on the dead-letter
+    * path ([[routable]] `__error` routes). */
   def routed(env: DataFrame): DataFrame = routedWithUniverse(env)._2
 
   /** (ingested-doc universe excluding aborted docs, routed frame). The
@@ -184,35 +125,33 @@ object TfPipeline {
   def routedWithUniverse(env: DataFrame): (DataFrame, DataFrame) = {
     // flatten the typed fields POINTWISE and drop the heavyweight payload
     // (tp struct, raw params, date) before the per-doc window exchange: the
-    // classification flags only read small fixed-width columns, so the
-    // shuffle + sort carry primitives instead of a struct payload per row
+    // step only reads small fixed-width columns, so the shuffle + sort carry
+    // primitives instead of a struct payload per row
     val pruned = flattenTyped(classifyPointwise(env.drop("tokens")))
       .drop("tp", "params", "date")
-    val cls = classifyFlags(pruned)
-    val flagged = cls.withColumn(
-      "doc_error",
-      max(when(col("hard_error"), 1).otherwise(0)).over(Window.partitionBy("doc_id"))
-    )
-    val okRows = flagged.filter(col("doc_error") === 0)
-    val universe = okRows.select("doc_id").distinct()
-    val routed = deriveRouted(okRows.filter(col("handled") && !col("drop") && !col("hard_error")))
-    (universe, routed)
+    val okRows = recovered(pruned)
+      .withColumn("doc_aborted", max(col("aborted")).over(wholeDoc))
+      .filter(!col("doc_aborted"))
+    (okRows.select("doc_id").distinct(), okRows.filter(col("time").isNotNull).select(RoutedColumns.map(col): _*))
   }
+
+  /** The routed frame's columns, in order. */
+  private val RoutedColumns = Seq("doc_id", "line_no", "source", "kind", "subject", "event_type", "ts",
+    "sid", "time", "text", "target_raw", "target_kind", "healing", "dmg", "charge", "duration", "f_time", "class_str")
 
   /** The aggregate layer's input recomputed FROM THE COMMITTED ROUTE STORE
     * (Route.writeRouted partitions): the 100 TB shape, where the parse/route
     * leg runs once and every aggregate job reads pruned parquet partitions
-    * instead of an in-memory cache. Rows in HandledTypes partitions are by
-    * construction the surviving handled rows of their doc. One scan, pruned
-    * to those partitions plus the `__error` dead-letter partition, reads
-    * both; after the pointwise projection, a window over the doc flags a doc
-    * holding any `__error` line and drops it whole, mirroring [[routed]]'s
-    * doc abort. That window shares the `start_ts` window's doc_id exchange
-    * and (doc_id, line_no) sort, so the read plans one exchange, whatever
-    * the store holds. `ts` is re-derived with the parse kernel's fixed-UTC
-    * epoch -- NOT to_timestamp, which silently shifts with
-    * spark.sql.session.timeZone. State: the window buffers one doc's lines
-    * at a time. */
+    * instead of an in-memory cache. Store rows have already been through
+    * recovery: HandledTypes partitions hold the surviving handled rows. One
+    * scan, pruned to those partitions plus the `__error` dead-letter
+    * partition, reads both; two native windows then drop a doc holding any
+    * `__error` line whole (`max(err)` over the doc, [[routed]]'s doc abort)
+    * and give `time` from the doc's first `ts`. Both sit on one doc_id
+    * exchange and (doc_id, line_no) sort, whatever the store holds. `ts` is
+    * re-derived with the parse kernel's fixed-UTC epoch -- NOT to_timestamp,
+    * which silently shifts with spark.sql.session.timeZone. State: the
+    * window buffers one doc's lines at a time. */
   def routedFromStore(stored: DataFrame): DataFrame = {
     val err = col("route") === "__error"
     val lines = flattenTyped(
@@ -222,10 +161,12 @@ object TfPipeline {
         .withColumn("ts", date_epoch(col("date")))
         .withColumn("tp", when(!err, typed_params(col("event_type"), col("params"))))
     ).drop("tp", "params", "date", "route")
-    // the whole doc as the frame, ordered like the `start_ts` window so both
-    // sit on one sort
-    val wholeDoc = wDoc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    deriveRouted(lines.withColumn("aborted", max(col("err")).over(wholeDoc)).filter(!col("aborted")))
+    lines
+      .withColumn("aborted", max(col("err")).over(wholeDoc))
+      .withColumn("start_ts", first(col("ts")).over(wDoc))
+      .filter(!col("aborted"))
+      .withColumn("time", pmod(col("ts") - col("start_ts"), lit(4294967296L)))
+      .select(RoutedColumns.map(col): _*)
   }
 
   /** Flatten the typed fields the modules need into primitive columns
@@ -234,7 +175,7 @@ object TfPipeline {
     * charge/duration/f_time defaults fire only when `tp` itself is null
     * (unhandled rows -- filtered before any consumer); on handled rows the
     * kernel already applied them. */
-  private def flattenTyped(df: DataFrame): DataFrame = {
+  private[graft] def flattenTyped(df: DataFrame): DataFrame = {
     df
       .withColumn("sid", subject_id(col("kind"), col("subject")))
       .withColumn("text", col("tp").getField("text"))
@@ -248,29 +189,22 @@ object TfPipeline {
       .withColumn("class_str", col("tp").getField("class_str"))
   }
 
-  /** Shared derivation: surviving handled rows (flattened, with ts) -> the
-    * routed frame consumed by every module. The one ordered window shares the
-    * classification pass's (doc_id) partitioning + line_no sort, and leaves
-    * the frame clustered by doc and sorted by line for the module pass. */
-  private def deriveRouted(filtered: DataFrame): DataFrame = {
-    filtered
-      .withColumn("start_ts", first(col("ts")).over(wDoc))
-      .withColumn("time", pmod(col("ts") - col("start_ts"), lit(4294967296L)))
-      .select("doc_id", "line_no", "source", "kind", "subject", "event_type", "ts",
-        "sid", "time", "text", "target_raw", "target_kind", "healing",
-        "dmg", "charge", "duration", "f_time", "class_str")
-  }
-
-  /** All valid-envelope rows (any event type) with sid -- the full routing
-    * frame for fan-out sinks; unknown/invalid stay as dead-letter partitions. */
+  /** All valid-envelope rows (any event type) with their route -- the full
+    * routing frame for fan-out sinks; unknown/invalid stay as dead-letter
+    * partitions. `__error` marks a hard error: a Malformed envelope, the
+    * date panic, or a consuming line whose consumed successor fails the
+    * >60 s test (`lead(pair_abort)` on the same doc order settles it one
+    * line late). */
   def routable(env: DataFrame): DataFrame = {
-    val cls = classified(env)
-    cls
+    val hardError = col("status") === 2 ||
+      (col("handled") && !col("typed_err") && !col("consumed") && col("ts").isNull) ||
+      coalesce(lead(col("pair_abort"), 1).over(wDoc), lit(false))
+    recovered(classifyPointwise(env))
       .withColumn(
         "route",
-        when(col("hard_error"), lit("__error"))
+        when(hardError, lit("__error"))
           .when(col("status") =!= 0, lit("__skip"))
-          .when(col("drop"), lit("__dropped"))
+          .when(col("typed_err") || col("consumed"), lit("__dropped"))
           .otherwise(col("event_type"))
       )
       .select("doc_id", "line_no", "source", "tokens", "date", "kind", "subject",
@@ -335,7 +269,7 @@ object TfPipeline {
   /** The routed frame as the module fold's input: grouped by doc, each doc's
     * lines in line order. `routed` is already classified and carries the u32
     * `time`, so the fold only steps. The routed frame is clustered by doc and
-    * sorted by line (the `start_ts` window), so the grouping plans no
+    * sorted by line (its per-doc windows), so the grouping plans no
     * exchange. */
   private def docLines(routedDf: DataFrame): KeyValueGroupedDataset[String, PlayerModules.RoutedLine] = {
     import routedDf.sparkSession.implicits._

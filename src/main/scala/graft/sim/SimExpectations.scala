@@ -14,9 +14,10 @@ import scala.collection.mutable
   * the reference itself, not to the Spark code under test.
   *
   * The route/drop classification here replicates the reference's SEQUENTIAL
-  * consumption loop (lib.rs:58-104) directly; TfPipeline.classified computes
-  * the same recurrence with run-parity windows, and ClassificationSpec
-  * asserts the two agree (including adjacent-error chains).
+  * consumption loop (lib.rs:58-104) directly, with its own code;
+  * TfPipeline.routable runs graft.pipeline.Recovery.step, the pipeline's one
+  * implementation of that loop, and ClassificationSpec asserts the two
+  * agree (including adjacent-error chains).
   */
 object SimExpectations {
 
@@ -50,7 +51,7 @@ object SimExpectations {
   }
 
   // -------------------------------------------------------------------------
-  // Route classification (TfPipeline.classified twin, sequential)
+  // Route classification (TfPipeline.routable twin, sequential)
   // -------------------------------------------------------------------------
 
   final case class LineClass(
@@ -64,8 +65,8 @@ object SimExpectations {
 
   /** Sequential replica of lib.rs:58-104's consumption loop: a consumed
     * line is never evaluated (its own error, if any, is inert) and cannot
-    * consume its successor -- the recurrence TfPipeline.classified resolves
-    * with run-parity windows. Invalid dates use the reference's
+    * consume its successor -- the recurrence Recovery.step runs for
+    * TfPipeline.routable. Invalid dates use the reference's
     * `unwrap_or(timestamp(0))` in the >60s comparison. */
   def classify(lines: IndexedSeq[String]): Vector[LineClass] = {
     val n = lines.length

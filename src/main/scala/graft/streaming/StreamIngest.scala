@@ -12,9 +12,10 @@ import java.nio.file.Paths
   * shape, as Structured Streaming + foreachBatch.
   *
   *  - Each micro-batch runs the FULL batch parse->classify->route plan
-  *    (window-based recovery logic is legal inside foreachBatch; the
-  *    file-per-document source delivers whole documents per batch, which the
-  *    per-doc recovery lookahead requires -- documented assumption);
+  *    ([[TfPipeline.routable]]: the recovery step as a running window
+  *    aggregate per doc, legal inside foreachBatch; the file-per-document
+  *    source delivers whole documents per batch, which that per-doc window
+  *    requires -- documented assumption);
   *  - a batch commits through [[Route]]'s protocol: its rows land under
   *    `batches/batch=<id>/route=<type>/`, its lineage under
   *    `audit/batch=<id>/` (`batch` comes back as a partition column on read),

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.expr.GraftExpressions._
-import graft.pipeline.{PlayerModules, TfPipeline}
+import graft.pipeline.{PlayerModules, Recovery, TfPipeline}
 import graft.pipeline.PlayerModules.{ClassDocState, MedicAcc, MedicStats}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
@@ -15,14 +15,15 @@ import scala.reflect.runtime.universe.TypeTag
   *  - key-only state: first-arrival-wins exact dedup whose state the
   *    watermark evicts ([[dedupExactStream]]); MinHash-LSH candidate pairs
   *    at arrival from a capped per-bucket machine ([[lshCandidatesStream]]);
-  *  - the reference's sequential per-doc pass (lib.rs:58-104: recovery
-  *    lookahead, doc abort, doc-relative time) over micro-batches: one
-  *    driver, [[perDoc]], owns that pass, and the medic, classStats,
-  *    healSpread and chat modules each supply only their own state, their
-  *    step for a surviving line, and their output rows. All four run the
-  *    steps of [[graft.pipeline.PlayerModules]], which the batch per-doc
-  *    passes fold too; the stream adds the multi-batch split, replay and
-  *    tombstone behaviour, differential-tested against batch.
+  *  - the reference's sequential per-doc pass (lib.rs:58-104) over
+  *    micro-batches: one driver, [[perDoc]], steps each line through
+  *    [[graft.pipeline.Recovery.step]] (which batch runs as a window
+  *    aggregate), and the medic, classStats, healSpread and chat modules
+  *    each supply only their own state, their step for a surviving line,
+  *    and their output rows -- the steps of [[graft.pipeline.PlayerModules]],
+  *    which batch folds too. The stream adds the multi-batch split, the
+  *    resume guard, the stop at the abort and the tombstones,
+  *    differential-tested against batch.
   */
 object StreamingPipeline {
 
@@ -121,7 +122,8 @@ object StreamingPipeline {
     df.writeStream.format("memory").queryName(name).outputMode(mode)
 
   // ---------------------------------------------------------------------
-  // The per-doc sequential machine (lib.rs:58-104) shared by every module
+  // The per-doc driver of the recovery step (lib.rs:58-104) shared by
+  // every module
   // ---------------------------------------------------------------------
 
   /** One classified line for the per-doc state machine: pointwise columns
@@ -148,63 +150,23 @@ object StreamingPipeline {
       target_raw: String,
       dmgOpt: Option[Long],
       healingOpt: Option[Long]
-  ) extends PlayerModules.ModuleLine with PlayerModules.ChatLine
-
-  /** The sequential recovery machine's control state (lib.rs:58-104).
-    * `pendingConsumeTs` is Some(errTs) when the NEXT line is consumed by a
-    * just-evaluated error; `nextLine` is the cross-batch resume guard. */
-  final case class SeqCtl(
-      startTs: Option[Long] = None,
-      pendingConsumeTs: Option[Long] = None,
-      aborted: Boolean = false,
-      nextLine: Long = 0L
-  )
-
-  /** Advance the recovery machine by one line. Returns the new control
-    * state and Some(docRelativeTime) exactly when the line is a surviving
-    * handled line the module should process. */
-  private def advance(c: SeqCtl, l: SeqLine): (SeqCtl, Option[Long]) = {
-    val st = c.copy(nextLine = l.line_no + 1)
-    st.pendingConsumeTs match {
-      case Some(errTs) =>
-        // consumed line: its own content is never evaluated; both lines
-        // drop iff it parses OK with a >60s forward jump
-        if (!(l.status == 0 && l.tsOpt.getOrElse(0L) - errTs > 60))
-          (st.copy(aborted = true, pendingConsumeTs = None), None)
-        else (st.copy(pendingConsumeTs = None), None)
-      case None =>
-        if (l.status == 2) (st.copy(aborted = true), None) // Malformed envelope
-        else if (l.status == 0 && l.handled) {
-          if (l.typed_err) {
-            // consume the next physical line (stream end first = reference
-            // break -- same as never seeing it); rescue_a drops silently
-            if (!l.rescue_a) (st.copy(pendingConsumeTs = Some(l.tsOpt.getOrElse(0L))), None)
-            else (st, None)
-          } else if (l.tsOpt.isEmpty) (st.copy(aborted = true), None) // date panic
-          else {
-            val ts = l.tsOpt.get
-            st.startTs match {
-              case Some(s) => (st, Some(u32(ts - s)))
-              case None    => (st.copy(startTs = Some(ts)), Some(0L))
-            }
-          }
-        } else (st, None) // non-OK / unhandled: skipped, like does_handle
-    }
-  }
+  ) extends Recovery.Line with PlayerModules.ModuleLine with PlayerModules.ChatLine
 
   /** A doc's keyed state: the recovery control plus the module's own state. */
-  final case class DocRun[S](ctl: SeqCtl, state: S)
+  final case class DocRun[S](ctl: Recovery.Ctl, state: S)
 
   /** The per-doc driver every sequential module runs on. Lines are keyed by
     * doc with flatMapGroupsWithState(Update, NoTimeout); within a micro-batch
     * they are sorted by line_no, and lines below the `nextLine` resume guard
     * (replays) are skipped. Cross-batch order is the source's file order, the
-    * streaming contract for sequence logs. Each line advances the recovery
-    * machine; a surviving handled line goes to `step` with its doc-relative
-    * time, and `step` may emit rows at that line. After the batch, a live doc
-    * emits those rows then `rows(doc, state, upTo)`; a doc that aborted in
-    * this batch emits only `tombstone(doc, upTo)` -- rows stepped earlier in
-    * the batch are dropped -- and an already-aborted doc emits nothing.
+    * streaming contract for sequence logs. Each line goes through
+    * [[Recovery.step]], whose control state the doc keeps, and stepping
+    * stops at the doc's abort; a surviving handled line goes to `step` with
+    * its doc-relative time, and `step` may emit rows at that line. After
+    * the batch, a live doc emits those rows then `rows(doc, state, upTo)`;
+    * a doc that aborted in this batch emits only `tombstone(doc, upTo)` --
+    * rows stepped earlier in the batch are dropped -- and an already-aborted
+    * doc emits nothing.
     * `upTo` is the lines-consumed watermark, monotone per doc.
     *
     * State bound: one state row per doc ever seen, never evicted (NoTimeout,
@@ -222,7 +184,7 @@ object StreamingPipeline {
       .groupByKey(_.doc_id)
       .flatMapGroupsWithState[DocRun[S], O](OutputMode.Update, GroupStateTimeout.NoTimeout) {
         case (doc, lines, state) =>
-          val prior = state.getOption.getOrElse(DocRun(SeqCtl(), init))
+          val prior = state.getOption.getOrElse(DocRun(Recovery.Ctl(), init))
           if (prior.ctl.aborted) Iterator.empty
           else {
             val atLine = scala.collection.mutable.ArrayBuffer.empty[O]
@@ -233,9 +195,9 @@ object StreamingPipeline {
             while (i < ordered.length && !ctl.aborted) {
               val l = ordered(i)
               i += 1
-              val (next, timeOpt) = advance(ctl, l)
+              val (next, lineStep) = Recovery.step(ctl, l)
               ctl = next
-              timeOpt.foreach(time => st = step(doc, st, l, time, atLine += _))
+              lineStep.time.foreach(time => st = step(doc, st, l, time, atLine += _))
             }
             state.update(DocRun(ctl, st))
             if (ctl.aborted) tombstone(doc, ctl.nextLine)
@@ -245,36 +207,24 @@ object StreamingPipeline {
       .toDF()
   }
 
-  /** Classified streaming lines: the batch envelope and pointwise classifier
-    * over a streaming reader (stateless -> identical semantics), flattened
-    * to the [[SeqLine]] primitives. */
+  /** Classified streaming lines: the batch envelope, pointwise classifier
+    * and typed-field flattening over a streaming reader (stateless ->
+    * identical semantics), as the [[SeqLine]] primitives. */
   def sequencedStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(inputSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
     TfPipeline
-      .classifyPointwise(TfPipeline.envelope(reader.parquet(dir)))
-      // sid is only read on handled medic rows; sentinel for non-OK lines
-      .withColumn("sid", coalesce(subject_id(col("kind"), col("subject")), lit(-2L)))
-      // typed fields come pre-extracted from the one-pass `tp` struct; the
-      // coalesce defaults fire only for unhandled rows (tp null), exactly
-      // like the old element_at-over-null-map chain
+      .flattenTyped(TfPipeline.classifyPointwise(TfPipeline.envelope(reader.parquet(dir))))
       .select(
         col("doc_id"), col("line_no"), col("status"), col("handled"),
-        col("typed_err"), col("rescue_a"), col("ts").as("tsOpt"), col("sid"),
+        col("typed_err"), col("rescue_a"), col("ts").as("tsOpt"),
+        // sid is only read on handled rows; sentinel for non-OK lines
+        coalesce(col("sid"), lit(-2L)).as("sid"),
         coalesce(col("event_type"), lit("")).as("event_type"),
-        coalesce(col("tp").getField("charge"), lit(0L)).as("charge"),
-        coalesce(col("tp").getField("duration"), lit(0f)).as("duration"),
-        coalesce(col("tp").getField("f_time"), lit(0f)).as("f_time"),
-        col("subject"), col("tp").getField("text").as("text"),
-        col("tp").getField("class_str").as("class_str"),
-        col("tp").getField("target_kind").as("target_kind"),
-        col("tp").getField("target_raw").as("target_raw"),
-        col("tp").getField("dmg").as("dmgOpt"),
-        col("tp").getField("healing").as("healingOpt")
+        col("charge"), col("duration"), col("f_time"), col("subject"), col("text"), col("class_str"),
+        col("target_kind"), col("target_raw"), col("dmg").as("dmgOpt"), col("healing").as("healingOpt")
       )
   }
-
-  private def u32(v: Long): Long = v & 0xffffffffL
 
   /** Latest emission per (doc, sid) from an accumulating (Update-mode) sink
     * table of any per-subject module, picked order-independently via the

@@ -2,7 +2,7 @@ package graft
 
 import graft.loggen.LogGen
 import graft.pipeline.TfPipeline
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sim.ReferenceSim
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,6 +28,10 @@ class ClassificationSpec extends AnyFunSuite {
     }.toDF()
   }
 
+  /** Lines of `env` routed to `route`. */
+  private def routedTo(env: DataFrame, route: String): Long =
+    TfPipeline.routable(env).filter(col("route") === route).count()
+
   private val P = """"A<2><[U:1:100]><Red>""""
   private def ln(hms: String, rest: String) = s"04/11/2021 - $hms: $rest"
 
@@ -38,8 +42,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:00:05", s"""$P killed ${'"'}B<3><[U:1:200]><Blue"""), // required-field error
       ln("10:00:10", s"""$P spawned as "Medic"""") // within 60s -> hard error
     )
-    val cls = TfPipeline.classified(TfPipeline.envelope(toDf(lines)))
-    assert(cls.filter(col("hard_error")).count() == 1)
+    assert(routedTo(TfPipeline.envelope(toDf(lines)), "__error") == 1)
     val sim = ReferenceSim.run(lines.toIndexedSeq)
     assert(sim.hardError)
   }
@@ -52,9 +55,8 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:02:05", s"""$P triggered "healed" against $P (healing "7")""")
     )
     val env = TfPipeline.envelope(toDf(lines))
-    val cls = TfPipeline.classified(env)
-    assert(cls.filter(col("hard_error")).count() == 0)
-    assert(cls.filter(col("drop")).count() == 2)
+    assert(routedTo(env, "__error") == 0)
+    assert(routedTo(env, "__dropped") == 2)
     val routed = TfPipeline.routed(env)
     // survivors: the first spawn and the heal
     assert(routed.select("event_type").collect().map(_.getString(0)).sorted.toSeq ==
@@ -70,7 +72,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:00:06", s"""$P spawned as "Medic"""") // NOT consumed
     )
     val env = TfPipeline.envelope(toDf(lines))
-    assert(TfPipeline.classified(env).filter(col("hard_error")).count() == 0)
+    assert(routedTo(env, "__error") == 0)
     assert(TfPipeline.routed(env).count() == 2)
     val sim = ReferenceSim.run(lines.toIndexedSeq)
     assert(!sim.hardError && sim.handledCount == 2)
@@ -82,7 +84,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:00:05", s"""$P killed ${'"'}B<3><[U:1:200]><Blue""")
     )
     val env = TfPipeline.envelope(toDf(lines))
-    assert(TfPipeline.classified(env).filter(col("hard_error")).count() == 0)
+    assert(routedTo(env, "__error") == 0)
     assert(TfPipeline.routed(env).count() == 1)
     assert(!ReferenceSim.run(lines.toIndexedSeq).hardError)
   }
@@ -99,8 +101,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:01:15", s"""$P spawned as "Medic"""") // processed normally
     )
     val env = TfPipeline.envelope(toDf(lines))
-    val cls = TfPipeline.classified(env)
-    assert(cls.filter(col("hard_error")).count() == 0)
+    assert(routedTo(env, "__error") == 0)
     val routed = TfPipeline.routed(env)
     assert(routed.count() == 2, "first spawn + last spawn survive")
     val sim = ReferenceSim.run(lines.toIndexedSeq)
@@ -116,7 +117,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:02:20", s"""$P spawned as "Medic"""") // consumed by C (gap 65s > 60)
     )
     val env = TfPipeline.envelope(toDf(lines))
-    assert(TfPipeline.classified(env).filter(col("hard_error")).count() == 0)
+    assert(routedTo(env, "__error") == 0)
     assert(TfPipeline.routed(env).count() == 1, "only the first spawn survives")
     val sim = ReferenceSim.run(lines.toIndexedSeq)
     assert(!sim.hardError && sim.handledCount == 1)
@@ -130,7 +131,7 @@ class ClassificationSpec extends AnyFunSuite {
       ln("10:00:15", s"""$P spawned as "Medic"""") // consumed, gap 5s <= 60 -> hard error
     )
     val env = TfPipeline.envelope(toDf(lines))
-    assert(TfPipeline.classified(env).filter(col("hard_error")).count() == 1)
+    assert(routedTo(env, "__error") == 1)
     // doc-level abort: even the lines processed before the error emit nothing
     assert(TfPipeline.routed(env).count() == 0)
     val (docs, _) = TfPipeline.routedWithUniverse(env)
@@ -197,7 +198,7 @@ class ClassificationSpec extends AnyFunSuite {
       val sim = ReferenceSim.run(lines)
       val env = TfPipeline.envelope(toDf(lines))
       if (sim.hardError) {
-        assert(TfPipeline.classified(env).filter(col("hard_error")).count() > 0, s"doc $docId")
+        assert(routedTo(env, "__error") > 0, s"doc $docId")
       } else {
         val routed = TfPipeline.routed(env)
         assert(routed.count() == sim.handledCount, s"doc $docId handled count")

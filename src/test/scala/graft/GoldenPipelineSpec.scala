@@ -314,6 +314,25 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(pp == expected.take(cases.size).map(_._3), s"batch per-player: $pp")
   }
 
+  test("account grammar: the interning fast path takes Rust's u32::from_str, on the string and the byte path") {
+    // Hand-derived from the documented FromStr grammar: an optional '+',
+    // then one or more ASCII digits (leading zeros allowed), value <=
+    // 4294967295. A parse error falls back to the split, where uid 2 makes
+    // the subject Bot(2).
+    import graft.expr.Steam
+    def player(acct: Long) = (Steam.K_PLAYER << 32) | acct
+    val bot2 = (Steam.K_BOT << 32) | 2L
+    val cases = Seq(
+      "+7" -> player(7), "00000000007" -> player(7), "4294967295" -> player(4294967295L),
+      "4294967296" -> bot2, "+" -> bot2, "-7" -> bot2, "" -> bot2
+    )
+    for ((acct, want) <- cases) {
+      val raw = s"A<2><[U:1:$acct]><Red>"
+      assert(Steam.playerSubjectId(raw) == want, s"string path: $raw")
+      assert(Steam.playerSubjectIdU(org.apache.spark.unsafe.types.UTF8String.fromString(raw)) == want, s"byte path: $raw")
+    }
+  }
+
   test("routed rows preserve the token array exactly (per-row invariant)") {
     val input = LogGen.generate(spark, 2, 200, Seed).toDF()
     val env = TfPipeline.envelope(input)

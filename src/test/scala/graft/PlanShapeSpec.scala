@@ -242,6 +242,19 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(names == Seq.fill(4)(Seq("localCheckpoint", "isEmpty")).flatten :+ "collect", s"actions run: $names")
   }
 
+  test("recovery: routed and routable each plan one exchange, two windows and one sort") {
+    // the recovery step's running window and, on the same doc order, the
+    // whole-doc abort window (routed) or the one-line-late hard-error lead
+    // (routable)
+    val env = TfPipeline.envelope(LogGen.generate(spark, 40, 300, 42L).toDF())
+    for ((name, df) <- Seq("routed" -> TfPipeline.routed(env), "routable" -> TfPipeline.routable(env))) {
+      val e = run(df)
+      e.check(e.shuffles.size == 1, s"$name: one exchange, got ${e.shuffles.size}")
+      e.check(e.windows.size == 2, s"$name: two WindowExec, got ${e.windows.size}")
+      e.check(e.count[SortExec] == 1, s"$name: both windows share one sort, got ${e.count[SortExec]}")
+    }
+  }
+
   test("pipeline assembly: no shuffle over the persisted hub; pinned exchange counts over the store") {
     val input = LogGen.generate(spark, 40, 300, 42L).toDF()
 
